@@ -11,9 +11,11 @@ per-row catalog introspection (the reference re-reads
 Scale notes: ingest is a schema-explicit ``spark.read.json`` (inference
 would both mis-type the dirty columns and cost an extra pass); the split
 writes are independent column-pruned projections of a single cached scan,
-so each warehouse table write reads only its columns. At 100 TB the
-writes partition by a stable key (e.g. ``file_ext`` for metadata) —
-exposed via ``partition_by``.
+submitted concurrently, so each warehouse table write reads only its
+columns. At 100 TB the writes partition by a stable key (e.g. ``file_ext``
+for metadata) — exposed via ``partition_by``. Offline IDs are filled by a
+literal-map lookup: one projection, no join and no job. It is sized for
+the fixed 9-, 9- and 12-entry dicts; large ID tables belong in a real join.
 """
 
 from __future__ import annotations
@@ -96,22 +98,24 @@ def vertical_split(conformed: DataFrame) -> dict[str, DataFrame]:
 
 
 def enrich_offline_ids(spark: SparkSession, conformed: DataFrame) -> DataFrame:
-    """Fill artist_id/album_id/track_id via broadcast lookup joins (J4).
+    """Fill artist_id/album_id/track_id in place via literal-map lookups
+    (J4), all in one projection.
 
     Deterministic stand-in for the fuzzy API enrichment
-    (postgres_media.py:242-255); unmatched names → 'not_found'.
+    (postgres_media.py:242-255); unmatched or null names → 'not_found'.
+    ``spark`` is unused; it keeps the ``(spark, frame)`` shape of the
+    other pipeline steps.
     """
     from spotify_tags_etl_spark.operators.fuzzy import offline_lookup
-    from spotify_tags_etl_spark.sources.offline_ids import ALBUM_IDS, ARTIST_IDS, TRACK_IDS, lookup_frame
+    from spotify_tags_etl_spark.sources.offline_ids import ALBUM_IDS, ARTIST_IDS, TRACK_IDS
 
-    df = conformed
-    for col, name_col, mapping in (
-        ("artist_id", "artist_name", ARTIST_IDS),
-        ("album_id", "album_title", ALBUM_IDS),
-        ("track_id", "track_title", TRACK_IDS),
-    ):
-        df = offline_lookup(df, lookup_frame(spark, mapping), name_col, out_col=col)
-    return df
+    return conformed.withColumns(
+        {
+            "artist_id": offline_lookup(ARTIST_IDS, "artist_name"),
+            "album_id": offline_lookup(ALBUM_IDS, "album_title"),
+            "track_id": offline_lookup(TRACK_IDS, "track_title"),
+        }
+    )
 
 
 def media_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -137,21 +141,28 @@ def write_warehouse(
     mode: str = "overwrite",
     partition_by: dict[str, list[str]] | None = None,
 ) -> None:
-    """K6 analog: drop+recreate the 5 tables as parquet datasets.
+    """K6 analog: drop+recreate the 5 tables as parquet datasets, written
+    concurrently.
 
     ``partition_by`` maps table → partition columns for the 100 TB layout
     (e.g. ``{"metadata": ["file_ext"]}``).
     """
+    from spotify_tags_etl_spark.functions.concurrency import run_parallel
+
     partition_by = partition_by or {}
     # One materialization feeds all five projections — without the cache
     # each table write re-reads and re-conforms the NDJSON source.
     conformed = conformed.cache()
     try:
+        writers = []
         for table, df in vertical_split(conformed).items():
             writer = df.write.mode(mode)
             if table in partition_by:
                 writer = writer.partitionBy(*partition_by[table])
-            writer.parquet(f"{out_dir}/{table}")
+            writers.append(lambda w=writer, t=table: w.parquet(f"{out_dir}/{t}"))
+        # Independent sinks over one cache: overlapped, each job's tail
+        # is back-filled by another write's tasks.
+        run_parallel(*writers)
     finally:
         conformed.unpersist()
 

@@ -69,16 +69,19 @@ def pair_dot_int64(
                     f"pair_dot_int64: null {a_col}/{b_col} rows are not "
                     "part of the quantized-pair contract"
                 )
-            av = a.flatten().to_numpy(zero_copy_only=False)
-            bv = b.flatten().to_numpy(zero_copy_only=False)
-            if av.size != bv.size or av.size % n:
+            # Per-row widths, not flattened totals: rows of widths (3, 1)
+            # against (1, 3) have equal totals but would mis-reshape.
+            wa = np.diff(a.offsets.to_numpy())
+            wb = np.diff(b.offsets.to_numpy())
+            if not (np.array_equal(wa, wb) and (wa == wa[0]).all()):
                 raise ValueError(
                     f"pair_dot_int64: ragged {a_col}/{b_col} widths "
-                    f"({av.size}, {bv.size} values over {n} rows)"
+                    f"(per-row {wa.tolist()[:8]} vs {wb.tolist()[:8]})"
                 )
-            dp = np.einsum(
-                "ij,ij->i", av.reshape(n, -1), bv.reshape(n, -1)
-            )
+            w = int(wa[0])
+            av = a.flatten().to_numpy(zero_copy_only=False).reshape(n, w)
+            bv = b.flatten().to_numpy(zero_copy_only=False).reshape(n, w)
+            dp = np.einsum("ij,ij->i", av, bv)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(k) for k in keep] + [pa.array(dp, type=pa.int64())],
                 names=[*keep, out_col],

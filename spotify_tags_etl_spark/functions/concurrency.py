@@ -9,9 +9,10 @@ cluster by itself, so overlapping them buys wall clock without
 changing a single frame, plan, or value.
 
 Thread safety: job submission through py4j is thread-safe; job
-descriptions/groups are thread-local (guide §1.5), so each submitted
-job is labelled by its own thread. The pools here are tiny (one
-worker per independent action) and short-lived.
+descriptions/groups and other local properties are thread-local (guide
+§1.5), so every thunk is wrapped with ``inheritable_thread_target`` and
+its jobs land in the CALLER's job group, description and tags. The
+pools here are tiny (one worker per independent action) and short-lived.
 """
 
 from __future__ import annotations
@@ -22,7 +23,15 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _inheriting(thunk: Callable[[], object]) -> Callable[[], object]:
+    """``thunk`` bound to the calling thread's local properties and
+    session tags, captured now (on the caller's thread)."""
+    session = SparkSession.getActiveSession()
+    return thunk if session is None else inheritable_thread_target(session)(thunk)
 
 
 def checkpoint_parallel(frames: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -32,7 +41,10 @@ def checkpoint_parallel(frames: dict[str, DataFrame]) -> dict[str, DataFrame]:
     if len(frames) <= 1:
         return {k: df.localCheckpoint(eager=True) for k, df in frames.items()}
     with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-        futs = {k: pool.submit(df.localCheckpoint, True) for k, df in frames.items()}
+        futs = {
+            k: pool.submit(_inheriting(lambda df=df: df.localCheckpoint(eager=True)))
+            for k, df in frames.items()
+        }
         return {k: f.result() for k, f in futs.items()}
 
 
@@ -169,5 +181,5 @@ def run_parallel(*thunks: Callable[[], object]) -> list[object]:
     if len(thunks) <= 1:
         return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        futs = [pool.submit(_inheriting(t)) for t in thunks]
         return [f.result() for f in futs]

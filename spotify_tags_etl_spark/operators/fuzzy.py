@@ -17,7 +17,9 @@ the exact path remains available per key-group.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Mapping
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spotify_tags_etl_spark.functions.text import normalize_udf, ratio_udf
@@ -87,28 +89,18 @@ def fuzzy_top_match(
     return best.where(F.col("score") >= threshold), best.where(F.col("score") < threshold)
 
 
-def offline_lookup(
-    local: DataFrame,
-    ids: DataFrame,
-    key: str,
-    default: str = "not_found",
-    out_col: str = "matched_id",
-) -> DataFrame:
-    """J4 (sql/offline_ids.py:3-46): broadcast lookup join with default.
+def offline_lookup(ids: Mapping[str, str], key: str, default: str = "not_found") -> Column:
+    """J4 (sql/offline_ids.py:3-46): literal-map lookup with default.
 
-    ``ids`` must have columns (``name``, ``id``); unmatched keys get
-    ``default`` — the deterministic test seam replacing the live API.
-    The lookup columns are aliased to collision-proof private names so a
-    local frame that itself has ``name``/``id`` columns passes through
-    untouched (a bare drop("name", "id") would delete the caller's own
-    columns)."""
-    lk = F.broadcast(
-        ids.select(F.col("name").alias("_ol_name"), F.col("id").alias("_ol_id"))
-    )
-    joined = local.join(lk, local[key] == F.col("_ol_name"), "left")
-    return joined.withColumn(
-        out_col, F.coalesce(F.col("_ol_id"), F.lit(default))
-    ).drop("_ol_name", "_ol_id")
+    Returns ``coalesce(map_literal[key], default)`` as a Column — the
+    deterministic test seam replacing the live API. The map is built
+    only from literals, so Catalyst folds it to one constant: the lookup
+    is a projection with no join, exchange or job, and touches no
+    caller column. Map lookup is linear in map size; it is sized for
+    the fixed 9-12-entry offline dicts, and a large ID table belongs in
+    a real join."""
+    lit_map = F.create_map(*[F.lit(v) for kv in ids.items() for v in kv])
+    return F.coalesce(lit_map[F.col(key)], F.lit(default))
 
 
 # ---------------------------------------------------------------------------

@@ -5,13 +5,13 @@ Mirrors the role of the reference's hardcoded dicts
 fixture corpus to stable IDs without touching the live API. Unmatched
 names get ``"not_found"`` (reference ``spotify_client.py:267,294,324``).
 
-At scale this is a classic broadcast dimension: a few thousand names
-joined against billions of rows — always broadcast, never shuffled.
+The dicts are applied as literal-map lookups (``fuzzy.offline_lookup``):
+Catalyst folds each to one constant map, so enrichment is a projection
+with no join. That is sized for these fixed 9, 9 and 12 entries — map
+lookup is linear in map size, so a large ID table belongs in a real join.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 NOT_FOUND = "not_found"
 
@@ -54,6 +54,3 @@ TRACK_IDS: dict[str, str] = {
     "Mudlark": "trk0012mudlark00000000000",
 }
 
-
-def lookup_frame(spark: SparkSession, mapping: dict[str, str]) -> DataFrame:
-    return spark.createDataFrame(list(mapping.items()), schema="name string, id string")

@@ -55,8 +55,9 @@ def test_blocked_path_agrees_on_matches(spark, frames):
 
 def test_offline_lookup_default(spark):
     local = spark.createDataFrame([("Velvet Harbor",), ("Unknown Band",)], "artist_name string")
-    ids = spark.createDataFrame([("Velvet Harbor", "a1")], "name string, id string")
-    got = {r.artist_name: r.matched_id for r in offline_lookup(local, ids, "artist_name").collect()}
+    ids = {"Velvet Harbor": "a1"}
+    looked_up = local.withColumn("matched_id", offline_lookup(ids, "artist_name"))
+    got = {r.artist_name: r.matched_id for r in looked_up.collect()}
     assert got == {"Velvet Harbor": "a1", "Unknown Band": "not_found"}
 
 
@@ -102,6 +103,6 @@ def test_offline_lookup_survives_name_id_collision(spark):
     local = spark.createDataFrame(
         [("x9", "Velvet Harbor", "local-name")], "id string, artist string, name string"
     )
-    ids = spark.createDataFrame([("Velvet Harbor", "a1")], "name string, id string")
-    row = offline_lookup(local, ids, "artist").collect()[0]
+    ids = {"Velvet Harbor": "a1"}
+    row = local.withColumn("matched_id", offline_lookup(ids, "artist")).collect()[0]
     assert (row.id, row.name, row.matched_id) == ("x9", "local-name", "a1")

@@ -176,3 +176,88 @@ def test_observe_quality_single_pass(spark):
     assert metrics["n_rows"] == n_out
     assert metrics["n_invalid"] == quarantined.count()
     assert metrics["n_rows"] - metrics["n_invalid"] == valid.count()
+
+
+def test_enrich_offline_ids_matches_dict_lookups(spark):
+    """Literal-map enrichment equals plain dict lookups on the fixture;
+    null and unknown names give 'not_found'; columns keep their order."""
+    from pyspark.sql import functions as F
+
+    from spotify_tags_etl_spark.etl.media import enrich_offline_ids
+    from spotify_tags_etl_spark.sources.offline_ids import ALBUM_IDS, ARTIST_IDS, NOT_FOUND, TRACK_IDS
+
+    conformed = conform(read_media_json(spark, FIXTURE_PATH))
+    probes = conformed.where("index IN ('001', '002')").withColumns(
+        {
+            "artist_name": F.when(F.col("index") == "001", F.lit(None)).otherwise("No Such Artist"),
+            "album_title": F.when(F.col("index") == "001", "No Such Album").otherwise(F.lit(None)),
+            "track_title": F.lit(None).cast("string"),
+        }
+    )
+    enriched = enrich_offline_ids(spark, conformed.unionByName(probes))
+    assert enriched.columns == conformed.columns
+    rows = enriched.collect()
+    assert len(rows) == 14
+    for r in rows:
+        assert r.artist_id == ARTIST_IDS.get(r.artist_name, NOT_FOUND)
+        assert r.album_id == ALBUM_IDS.get(r.album_title, NOT_FOUND)
+        assert r.track_id == TRACK_IDS.get(r.track_title, NOT_FOUND)
+    assert sum(r.artist_id == NOT_FOUND for r in rows) == 2
+    assert sum(r.track_id != NOT_FOUND for r in rows) == 12
+
+
+def test_enrich_offline_ids_plan_has_no_join(spark):
+    """The lookup is a projection: no broadcast exchange and no Python-RDD
+    scan (a lookup table built with createDataFrame plans as one)."""
+    from spotify_tags_etl_spark.etl.media import enrich_offline_ids
+
+    enriched = enrich_offline_ids(spark, conform(read_media_json(spark, FIXTURE_PATH)))
+    plan = enriched._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert "Scan ExistingRDD" not in plan
+    assert "Join" not in plan
+
+
+def _warehouse_input(spark):
+    from spotify_tags_etl_spark.etl.media import enrich_offline_ids
+
+    valid, _ = split_valid(conform(read_media_json(spark, FIXTURE_PATH)))
+    return enrich_offline_ids(spark, valid), valid.count()
+
+
+def test_write_warehouse_tables_columns_counts_partitions(spark, tmp_path):
+    from spotify_tags_etl_spark.etl.media import write_warehouse
+    from spotify_tags_etl_spark.schemas import WAREHOUSE_TABLES
+
+    enriched, n_valid = _warehouse_input(spark)
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    write_warehouse(enriched, str(tmp_path), partition_by={"metadata": ["file_ext"]})
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(WAREHOUSE_TABLES)
+    for table, cols in WAREHOUSE_TABLES.items():
+        df = spark.read.parquet(str(tmp_path / table))
+        if table == "metadata":
+            # partition columns read back last
+            assert sorted(df.columns) == sorted(cols)
+        else:
+            assert df.columns == cols
+        assert df.count() == n_valid
+    assert {p.name for p in (tmp_path / "metadata").iterdir() if p.is_dir()} == {
+        "file_ext=.flac", "file_ext=.m4a", "file_ext=.mp3", "file_ext=.wma",
+    }
+
+
+def test_write_warehouse_unpersists_when_a_write_fails(spark, tmp_path):
+    """One table's write raising must still release the shared cache, and
+    must not stop the other, independent writes."""
+    from spotify_tags_etl_spark.etl.media import write_warehouse
+
+    enriched, _ = _warehouse_input(spark)
+    (tmp_path / "album").write_text("not a parquet dataset")
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    with pytest.raises(Exception, match="album"):
+        write_warehouse(enriched, str(tmp_path), mode="errorifexists")
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+    assert (tmp_path / "album").read_text() == "not a parquet dataset"
+    for table in ("artist", "track", "genre", "metadata"):
+        assert (tmp_path / table / "_SUCCESS").exists()

@@ -82,6 +82,14 @@ def test_pair_dot_rejects_nulls_and_ragged_loudly(spark):
     )
     with pytest.raises(Exception, match="pair_dot_int64"):
         pair_dot_int64(ragged, "a", "b", "dp").collect()
+    # equal flattened totals (4 and 4) but per-row widths (3, 1) vs (1, 3),
+    # in ONE Arrow batch so only a per-row check can tell them apart
+    same_total = spark.createDataFrame(
+        [(1, [1, 2, 3], [1]), (2, [4], [1, 2, 3])],
+        "id bigint, a array<bigint>, b array<bigint>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="pair_dot_int64"):
+        pair_dot_int64(same_total, "a", "b", "dp").collect()
 
 
 # ---------------------------------------------------------------------------
