@@ -529,19 +529,10 @@ def streaming_preference_pairs(spark: SparkSession, stream: DataFrame) -> DataFr
     (rating DESC, doc_id ASC) int64 key — is associative and
     commutative, so the converged table is micro-batch-layout invariant
     and final pairs equal batch yv05 exactly (pinned by
-    tests/test_round7_additions.py's layout-invariance test)."""
-    import os
-    import shutil
-    import tempfile
-
+    tests/test_round7_additions.py's layout-invariance test). The
+    versioning runs on the streaming/ops.py merged_stream skeleton."""
     from spotify_tags_etl_spark.operators.yrlhf import _KEY_SCALE, YV05_GROUP
-    from spotify_tags_etl_spark.streaming.ops import (
-        record_batch_plan,
-        record_state_ops,
-    )
-
-    root = tempfile.mkdtemp(prefix="za04_pairs_")
-    current: list[str] = []  # version POINTER, not state (st08 pattern)
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
 
     merge_aggs = [
         F.sum("n_cands").alias("n_cands"),
@@ -553,8 +544,7 @@ def streaming_preference_pairs(spark: SparkSession, stream: DataFrame) -> DataFr
         F.min("rkey").alias("rkey"),
     ]
 
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         keyed = batch.select(
             F.expr(f"doc_id DIV {YV05_GROUP}").alias("pid"),
             "doc_id",
@@ -569,59 +559,36 @@ def streaming_preference_pairs(spark: SparkSession, stream: DataFrame) -> DataFr
             F.expr("min_by(rating, key)").alias("rejected_rating"),
             F.min("key").alias("rkey"),
         )
-        if current:
-            merged = (
-                spark.read.parquet(current[0])
-                .unionByName(part)
-                .groupBy("pid")
-                .agg(*merge_aggs)
-            )
-        else:
-            merged = part
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "za04:pairs_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
+        if prev is None:
+            return part
+        return prev.unionByName(part).groupBy("pid").agg(*merge_aggs)
 
-    q = (
-        stream.select("doc_id")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
     out_schema = (
         "pid bigint, n_cands bigint, chosen_doc bigint, rejected_doc bigint,"
         " chosen_rating bigint, rejected_rating bigint, margin bigint"
     )
-    if not current:
-        return spark.createDataFrame([], out_schema)
-    final = (
-        spark.read.parquet(current[0])
-        .where(
-            (F.col("n_cands") >= 2)
-            & (F.col("chosen_rating") > F.col("rejected_rating"))
+    with merged_stream(stream.select("doc_id"), "za04:pairs_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame([], out_schema)
+        return (
+            state.where(
+                (F.col("n_cands") >= 2)
+                & (F.col("chosen_rating") > F.col("rejected_rating"))
+            )
+            .select(
+                F.col("pid").cast("bigint").alias("pid"),
+                F.col("n_cands").cast("bigint").alias("n_cands"),
+                F.col("chosen_doc").cast("bigint").alias("chosen_doc"),
+                F.col("rejected_doc").cast("bigint").alias("rejected_doc"),
+                F.col("chosen_rating").cast("bigint").alias("chosen_rating"),
+                F.col("rejected_rating").cast("bigint").alias("rejected_rating"),
+                (F.col("chosen_rating") - F.col("rejected_rating"))
+                .cast("bigint")
+                .alias("margin"),
+            )
+            .orderBy("pid")
+            .localCheckpoint(eager=True)  # detach from the temp files before cleanup
         )
-        .select(
-            F.col("pid").cast("bigint").alias("pid"),
-            F.col("n_cands").cast("bigint").alias("n_cands"),
-            F.col("chosen_doc").cast("bigint").alias("chosen_doc"),
-            F.col("rejected_doc").cast("bigint").alias("rejected_doc"),
-            F.col("chosen_rating").cast("bigint").alias("chosen_rating"),
-            F.col("rejected_rating").cast("bigint").alias("rejected_rating"),
-            (F.col("chosen_rating") - F.col("rejected_rating"))
-            .cast("bigint")
-            .alias("margin"),
-        )
-        .orderBy("pid")
-        .localCheckpoint(eager=True)  # detach from the temp files before cleanup
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return final
 
 
 def _za04_oracle_sql() -> str:
@@ -677,7 +644,7 @@ def _za04_oracle_sql() -> str:
         "key-argmax/argmin over yv05's injective int64 key) is "
         "associative+commutative => micro-batch-layout invariant; the "
         "oracle is literally yv05's batch SQL. State lives in versioned "
-        "parquet (st08's pattern) — the engine-state pin is EMPTY by "
+        "parquet (the merged_stream skeleton) — the engine-state pin is EMPTY by "
         "design, and the inner merge plan is fingerprint-pinned."
     ),
     tags=("streaming", "rlhf", "training", "llm-pipeline"),
@@ -801,22 +768,12 @@ def streaming_quantile_drift(spark: SparkSession, stream: DataFrame) -> DataFram
     per-shard (shard, cents, count) histogram partial — SUM-merged into
     the standing versioned-parquet summary (counts are the canonical
     associative+commutative merge, so the converged summary is
-    micro-batch-layout invariant). Quantile extraction reuses za03's
-    summary-side helper on the final state."""
-    import os
-    import shutil
-    import tempfile
+    micro-batch-layout invariant; versioning runs on the
+    streaming/ops.py merged_stream skeleton). Quantile extraction
+    reuses za03's summary-side helper on the final state."""
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
 
-    from spotify_tags_etl_spark.streaming.ops import (
-        record_batch_plan,
-        record_state_ops,
-    )
-
-    root = tempfile.mkdtemp(prefix="zb02_hist_")
-    current: list[str] = []
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch.select(
                 F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
@@ -825,39 +782,22 @@ def streaming_quantile_drift(spark: SparkSession, stream: DataFrame) -> DataFram
             .groupBy("shard", "cents")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if current:
-            merged = (
-                spark.read.parquet(current[0])
-                .unionByName(part)
-                .groupBy("shard", "cents")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = part
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "zb02:hist_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
-
-    q = (
-        stream.select("user_id", "value")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "q_permille bigint, global_cents bigint, min_shard_cents bigint,"
-            " max_shard_cents bigint, max_abs_drift_cents bigint",
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("shard", "cents")
+            .agg(F.sum("c").alias("c"))
         )
-    hs = spark.read.parquet(current[0]).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+
+    with merged_stream(stream.select("user_id", "value"), "zb02:hist_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "q_permille bigint, global_cents bigint, min_shard_cents bigint,"
+                " max_shard_cents bigint, max_abs_drift_cents bigint",
+            )
+        hs = state.localCheckpoint(eager=True)
     return quantile_drift_from_summaries(spark, hs)
 
 
@@ -875,8 +815,8 @@ def streaming_quantile_drift(spark: SparkSession, stream: DataFrame) -> DataFram
         "batch and stream literally execute the same extraction. "
         "Associative+commutative merge => micro-batch-layout invariant "
         "(pinned against batch za03 under a 3-file split); oracle = "
-        "za03's SQL. State-shape pin EMPTY (versioned parquet, st08 "
-        "pattern); the inner merge plan is fingerprint-pinned."
+        "za03's SQL. State-shape pin EMPTY (versioned parquet, the "
+        "merged_stream skeleton); the inner merge plan is fingerprint-pinned."
     ),
     tags=("streaming", "quantile", "ops", "llm-pipeline"),
 )

@@ -620,8 +620,6 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
     Per-trigger cost is O(batch + buckets); the raw stream is never
     re-scanned."""
     import os
-    import shutil
-    import tempfile
 
     from spotify_tags_etl_spark.operators.zaops import (
         ZB03_TARGET_LANG,
@@ -629,80 +627,72 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
         zb03_grams,
     )
     from spotify_tags_etl_spark.streaming.ops import (
+        VersionedMerge,
         record_batch_plan,
-        record_state_ops,
+        run_foreach_batch,
+        stream_scratch,
     )
 
-    root = tempfile.mkdtemp(prefix="zc04_dsir_")
-    docs_root = os.path.join(root, "docgrams")
-    doc_dirs: list[str] = []  # per-batch doc-histogram dirs (idempotent)
-    current: list[str] = []  # census version pointer
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        # r12 §14: fan the single-split batch out before the gram explode
-        batch = fan_out_scan(batch, "doc_id")
-        grams = zb03_grams(batch)
-        doc_part = grams.groupBy("doc_id", "lang", "bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        record_batch_plan(doc_part, "zc04:doc_partial", seen=plan_seen)
-        doc_dir = os.path.join(docs_root, f"b{batch_id}")
-        doc_part.write.mode("overwrite").parquet(doc_dir)
-        if doc_dir not in doc_dirs:
-            doc_dirs.append(doc_dir)
-        # r12: the census partial is a rollup OF the doc partial just
-        # written — re-reading those few parquet rows replaces a second
-        # full gram pass over the batch (explode + md5 per bigram, the
-        # trigger's dominant cost, previously paid twice). raw_n =
-        # SUM(n) per bucket and tgt_n = SUM(n) over target-lang rows,
-        # exactly the gram-occurrence counts the direct aggregate made
-        # (each (doc, bucket) group's n IS its occurrence count).
-        part = (
-            spark.read.parquet(doc_dir)
+    def merge_census(part: DataFrame, prev: DataFrame | None) -> DataFrame:
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
             .groupBy("bucket")
-            .agg(
-                F.sum("n").alias("raw_n"),
-                F.coalesce(
-                    F.sum(F.when(F.col("lang") == ZB03_TARGET_LANG, F.col("n"))),
-                    F.lit(0),
-                ).alias("tgt_n"),
-            )
+            .agg(F.sum("raw_n").alias("raw_n"), F.sum("tgt_n").alias("tgt_n"))
         )
-        if current:
-            merged = (
-                spark.read.parquet(current[0])
-                .unionByName(part)
-                .groupBy("bucket")
-                .agg(F.sum("raw_n").alias("raw_n"), F.sum("tgt_n").alias("tgt_n"))
-            )
-        else:
-            merged = part
-        target = os.path.join(root, f"census_v{batch_id}")
-        record_batch_plan(merged, "zc04:census_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
 
-    q = (
-        stream_docs.select("doc_id", "lang", "text")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [], "doc_id bigint, lang string, n_grams bigint, importance bigint"
+    with stream_scratch("zc04_dsir") as root:
+        docs_root = os.path.join(root, "docgrams")
+        doc_dirs: list[str] = []  # per-batch doc-histogram dirs (idempotent)
+        census_store = VersionedMerge(
+            spark, os.path.join(root, "census"), "zc04:census_merge", merge_census
         )
-    census = spark.read.parquet(current[0]).localCheckpoint(eager=True)
-    # checkpoint only because rmtree below deletes the backing files; a
-    # production run leaves the doc store as the parquet it already is
-    doc_store = spark.read.parquet(*doc_dirs).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+        plan_seen: set = set()  # r13: fingerprint each label once per run
+
+        def apply_batch(batch: DataFrame, batch_id: int) -> None:
+            # r12 §14: fan the single-split batch out before the gram explode
+            batch = fan_out_scan(batch, "doc_id")
+            grams = zb03_grams(batch)
+            doc_part = grams.groupBy("doc_id", "lang", "bucket").agg(
+                F.count(F.lit(1)).alias("n")
+            )
+            record_batch_plan(doc_part, "zc04:doc_partial", seen=plan_seen)
+            doc_dir = os.path.join(docs_root, f"b{batch_id}")
+            doc_part.write.mode("overwrite").parquet(doc_dir)
+            if doc_dir not in doc_dirs:
+                doc_dirs.append(doc_dir)
+            # r12: the census partial is a rollup OF the doc partial just
+            # written — re-reading those few parquet rows replaces a second
+            # full gram pass over the batch (explode + md5 per bigram, the
+            # trigger's dominant cost, previously paid twice). raw_n =
+            # SUM(n) per bucket and tgt_n = SUM(n) over target-lang rows,
+            # exactly the gram-occurrence counts the direct aggregate made
+            # (each (doc, bucket) group's n IS its occurrence count).
+            part = (
+                spark.read.parquet(doc_dir)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n").alias("raw_n"),
+                    F.coalesce(
+                        F.sum(F.when(F.col("lang") == ZB03_TARGET_LANG, F.col("n"))),
+                        F.lit(0),
+                    ).alias("tgt_n"),
+                )
+            )
+            census_store(part, batch_id)
+
+        run_foreach_batch(stream_docs.select("doc_id", "lang", "text"), apply_batch)
+        state = census_store.state()
+        if state is None:
+            return spark.createDataFrame(
+                [], "doc_id bigint, lang string, n_grams bigint, importance bigint"
+            )
+        # checkpoint only because the scratch root's removal deletes the
+        # backing files; a production run leaves the doc store as the
+        # parquet it already is
+        census = state.localCheckpoint(eager=True)
+        doc_store = spark.read.parquet(*doc_dirs).localCheckpoint(eager=True)
     tot = census.agg(F.sum("raw_n").alias("raw_t"), F.sum("tgt_n").alias("tgt_t"))
     wts = census.crossJoin(F.broadcast(tot)).select(
         "bucket",
@@ -1000,21 +990,11 @@ def streaming_pack_efficiency(spark: SparkSession, stream_docs: DataFrame) -> Da
     layout invariant), and the close-time report is pure arithmetic on
     the converged 13 rows. This is the padding monitor a training-data
     ingest runs WHILE filling the corpus — it knows the wasted-FLOPs
-    bill before any packing job runs."""
-    import os
-    import shutil
-    import tempfile
+    bill before any packing job runs. The versioning runs on the
+    streaming/ops.py merged_stream skeleton."""
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
 
-    from spotify_tags_etl_spark.streaming.ops import (
-        record_batch_plan,
-        record_state_ops,
-    )
-
-    root = tempfile.mkdtemp(prefix="zc07_pack_")
-    current: list[str] = []
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch.select(
                 F.expr(
@@ -1031,39 +1011,22 @@ def streaming_pack_efficiency(spark: SparkSession, stream_docs: DataFrame) -> Da
             .groupBy("band_exp")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("tok").alias("sum_tok"))
         )
-        if current:
-            merged = (
-                spark.read.parquet(current[0])
-                .unionByName(part)
-                .groupBy("band_exp")
-                .agg(F.sum("n").alias("n"), F.sum("sum_tok").alias("sum_tok"))
-            )
-        else:
-            merged = part
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "zc07:band_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
-
-    q = (
-        stream_docs.select("n_chars")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "band_exp bigint, slot_len bigint, n_windows bigint, n_docs bigint,"
-            " doc_tokens bigint, fill_ppm bigint, waste_ppm bigint",
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("band_exp")
+            .agg(F.sum("n").alias("n"), F.sum("sum_tok").alias("sum_tok"))
         )
-    bands = spark.read.parquet(current[0]).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+
+    with merged_stream(stream_docs.select("n_chars"), "zc07:band_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "band_exp bigint, slot_len bigint, n_windows bigint, n_docs bigint,"
+                " doc_tokens bigint, fill_ppm bigint, waste_ppm bigint",
+            )
+        bands = state.localCheckpoint(eager=True)
     # analytic report off the converged <= 13-row state: windows per
     # band = ceil(n / k) since slot assignment is rank DIV k
     return bands.selectExpr(

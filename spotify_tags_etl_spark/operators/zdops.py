@@ -918,9 +918,11 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
     production run executes zc03/zd03 over the accumulated corpus
     after ingest, exactly as zd01 composes it."""
     import os
-    import shutil
-    import tempfile
 
+    from spotify_tags_etl_spark.functions.concurrency import (
+        checkpoint_parallel,
+        run_parallel,
+    )
     from spotify_tags_etl_spark.operators.dedup import (
         jaccard_verify,
         lsh_candidate_pairs,
@@ -928,112 +930,89 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
         word_shingles,
     )
     from spotify_tags_etl_spark.streaming.ops import (
+        VersionedMerge,
         record_batch_plan,
-        record_state_ops,
+        run_foreach_batch,
+        stream_scratch,
     )
 
-    root = tempfile.mkdtemp(prefix="zd05_funnel_")
-    sig_root = os.path.join(root, "signatures")
-    sh_root = os.path.join(root, "shingles")
-    sig_dirs: list[str] = []
-    sh_dirs: list[str] = []
-    current: list[str] = []  # exact-census version pointer
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        from spotify_tags_etl_spark.functions.concurrency import (
-            fan_out_scan,
-            run_parallel,
+    def merge_census(part: DataFrame, prev: DataFrame | None) -> DataFrame:
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("text_hash", "source")
+            .agg(F.sum("n").alias("n"), F.min("min_doc").alias("min_doc"))
         )
 
-        # r12 §14: single-split fixture batches would run the per-doc
-        # shingle/MinHash map work as ONE task — fan out to the core
-        # count (scale-adaptive no-op once the batch has >= cores splits)
-        batch = fan_out_scan(batch, "doc_id")
-        # r13: checkpointing the shared shingle explode here was
-        # measured WORSE (alternating-process A/B: plain medians
-        # 2.8-3.8 s vs checkpointed 3.5-5.7) — the two consumers run in
-        # CONCURRENT jobs, so the duplicate explode was already free on
-        # idle cores while the checkpoint serializes a job ahead of
-        # them. Contrast st09, where the same subtree fed three
-        # branches of ONE job and the checkpoint won 0.79x.
-        sh = word_shingles(batch)
-        sig = minhash_signatures(sh)
-        record_batch_plan(sig, "zd05:sig_partial", seen=plan_seen)
-        sig_dir = os.path.join(sig_root, f"b{batch_id}")
-        sh_dir = os.path.join(sh_root, f"b{batch_id}")
-        part = batch.groupBy(
-            F.md5("text").alias("text_hash"), F.col("source")
-        ).agg(
-            F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("min_doc")
+    # r13: the scratch delete needs nothing below and nothing below
+    # needs it — off the critical path (zf02's close change)
+    with stream_scratch("zd05_funnel", background=True) as root:
+        sig_root = os.path.join(root, "signatures")
+        sh_root = os.path.join(root, "shingles")
+        sig_dirs: list[str] = []
+        sh_dirs: list[str] = []
+        census_store = VersionedMerge(
+            spark, os.path.join(root, "census"), "zd05:exact_census_merge", merge_census
         )
-        if current:
-            merged = (
-                spark.read.parquet(current[0])
-                .unionByName(part)
-                .groupBy("text_hash", "source")
-                .agg(F.sum("n").alias("n"), F.min("min_doc").alias("min_doc"))
+        plan_seen: set = set()  # r13: fingerprint each label once per run
+
+        def apply_batch(batch: DataFrame, batch_id: int) -> None:
+            # r12 §14: single-split fixture batches would run the per-doc
+            # shingle/MinHash map work as ONE task — fan out to the core
+            # count (scale-adaptive no-op once the batch has >= cores splits)
+            batch = fan_out_scan(batch, "doc_id")
+            # r13: checkpointing the shared shingle explode here was
+            # measured WORSE (alternating-process A/B: plain medians
+            # 2.8-3.8 s vs checkpointed 3.5-5.7) — the two consumers run in
+            # CONCURRENT jobs, so the duplicate explode was already free on
+            # idle cores while the checkpoint serializes a job ahead of
+            # them. Contrast st09, where the same subtree fed three
+            # branches of ONE job and the checkpoint won 0.79x.
+            sh = word_shingles(batch)
+            sig = minhash_signatures(sh)
+            record_batch_plan(sig, "zd05:sig_partial", seen=plan_seen)
+            sig_dir = os.path.join(sig_root, f"b{batch_id}")
+            sh_dir = os.path.join(sh_root, f"b{batch_id}")
+            part = batch.groupBy(
+                F.md5("text").alias("text_hash"), F.col("source")
+            ).agg(
+                F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("min_doc")
             )
-        else:
-            merged = part
-        record_batch_plan(merged, "zd05:exact_census_merge", seen=plan_seen)
-        target = os.path.join(root, f"census_v{batch_id}")
+            # r12 §2.6: the three per-trigger writes are independent sinks
+            # (per-batch overwrites / a fresh census version) — overlap
+            # them. The census version pointer advances only after ITS
+            # commit returns.
+            run_parallel(
+                lambda: sig.write.mode("overwrite").parquet(sig_dir),
+                lambda: sh.write.mode("overwrite").parquet(sh_dir),
+                lambda: census_store(part, batch_id),
+            )
+            if sig_dir not in sig_dirs:
+                sig_dirs.append(sig_dir)
+            if sh_dir not in sh_dirs:
+                sh_dirs.append(sh_dir)
 
-        # r12 §2.6: the three per-trigger writes are independent sinks
-        # (per-batch overwrites / a fresh census version) — overlap
-        # them. Frames, plans, and replay semantics are unchanged; the
-        # census version pointer advances only after ITS write returns.
-        def census_write() -> None:
-            merged.write.mode("overwrite").parquet(target)
-            current[:] = [target]
-
-        run_parallel(
-            lambda: sig.write.mode("overwrite").parquet(sig_dir),
-            lambda: sh.write.mode("overwrite").parquet(sh_dir),
-            census_write,
+        run_foreach_batch(stream_docs.select("doc_id", "source", "text"), apply_batch)
+        state = census_store.state()
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, n_exact_kept bigint, "
+                "n_near_kept bigint, exact_keep_ppm bigint, near_keep_ppm bigint",
+            )
+        # checkpoint only because the scratch root's removal deletes the
+        # backing files; a production run leaves census + stores as the
+        # parquet they are (r12 §2.6: three independent reads —
+        # materialize concurrently)
+        cps = checkpoint_parallel(
+            {
+                "census": state,
+                "sig_store": spark.read.parquet(*sig_dirs),
+                "sh_store": spark.read.parquet(*sh_dirs),
+            }
         )
-        if sig_dir not in sig_dirs:
-            sig_dirs.append(sig_dir)
-        if sh_dir not in sh_dirs:
-            sh_dirs.append(sh_dir)
-
-    q = (
-        stream_docs.select("doc_id", "source", "text")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, n_exact_kept bigint, "
-            "n_near_kept bigint, exact_keep_ppm bigint, near_keep_ppm bigint",
-        )
-    # checkpoint only because rmtree below deletes the backing files; a
-    # production run leaves census + stores as the parquet they are
-    # (r12 §2.6: three independent reads — materialize concurrently)
-    from spotify_tags_etl_spark.functions.concurrency import checkpoint_parallel
-
-    cps = checkpoint_parallel(
-        {
-            "census": spark.read.parquet(current[0]),
-            "sig_store": spark.read.parquet(*sig_dirs),
-            "sh_store": spark.read.parquet(*sh_dirs),
-        }
-    )
     census, sig_store, sh_store = cps["census"], cps["sig_store"], cps["sh_store"]
-    # r13: the delete needs nothing below and nothing below needs it —
-    # off the critical path (zf02's close change)
-    import threading
-
-    threading.Thread(
-        target=shutil.rmtree, args=(root,), kwargs={"ignore_errors": True}
-    ).start()
 
     # Exact keeps: per-hash global min over the per-(hash, source)
     # minima — each keep attributed to ITS OWN source via min(struct).
@@ -1288,23 +1267,14 @@ def streaming_rag_manifest(spark: SparkSession, sf_dir: str, stream_docs: DataFr
     of a doc are in its batch), so per-batch distinct-doc counts merge
     exactly; distinct sources per list fall out of the census KEY. At
     close the census rolls up to zd02's exact per-list manifest —
-    order-free merges => micro-batch-layout invariant."""
-    import os
-    import shutil
-    import tempfile
-
+    order-free merges => micro-batch-layout invariant. The versioning
+    runs on the streaming/ops.py merged_stream skeleton."""
     from spotify_tags_etl_spark.operators.textops import chunk_tokens
-    from spotify_tags_etl_spark.streaming.ops import (
-        record_batch_plan,
-        record_state_ops,
-    )
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
 
     assigned = zd02_assignment(spark, sf_dir).localCheckpoint(eager=True)
-    root = tempfile.mkdtemp(prefix="zd07_manifest_")
-    current: list[str] = []
 
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         chunks = chunk_tokens(batch).select("doc_id", "n_tokens")
         part = (
             chunks.join(
@@ -1319,43 +1289,27 @@ def streaming_rag_manifest(spark: SparkSession, sf_dir: str, stream_docs: DataFr
                 F.sum("n_tokens").alias("n_tokens"),
             )
         )
-        if current:
-            merged = (
-                spark.read.parquet(current[0])
-                .unionByName(part)
-                .groupBy("list_id", "source")
-                .agg(
-                    F.sum("n_chunks").alias("n_chunks"),
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_tokens").alias("n_tokens"),
-                )
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("list_id", "source")
+            .agg(
+                F.sum("n_chunks").alias("n_chunks"),
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("n_tokens").alias("n_tokens"),
             )
-        else:
-            merged = part
-        record_batch_plan(merged, "zd07:census_merge", seen=plan_seen)
-        target = os.path.join(root, f"census_v{batch_id}")
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
-
-    q = (
-        stream_docs.select("doc_id", "source", "text")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "list_id bigint, n_chunks bigint, n_docs bigint, n_tokens bigint,"
-            " n_sources bigint, chunk_share_ppm bigint, load_vs_uniform_ppm bigint",
         )
-    census = spark.read.parquet(current[0]).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+
+    docs = stream_docs.select("doc_id", "source", "text")
+    with merged_stream(docs, "zd07:census_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "list_id bigint, n_chunks bigint, n_docs bigint, n_tokens bigint,"
+                " n_sources bigint, chunk_share_ppm bigint, load_vs_uniform_ppm bigint",
+            )
+        census = state.localCheckpoint(eager=True)
     g = census.groupBy("list_id").agg(
         F.sum("n_chunks").cast("bigint").alias("n_chunks"),
         F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -928,26 +928,14 @@ def streaming_classifier_gate(
     counts merge associatively + commutatively, so the close-time
     report is micro-batch-layout invariant and equals batch ze02
     exactly. Per-trigger cost is O(batch + sources); the raw stream is
-    never re-scanned and the engine keeps no state store."""
-    import os
-    import shutil
-    import tempfile
-
-    from spotify_tags_etl_spark.streaming.ops import (
-        commit_versioned_state,
-        record_batch_plan,
-        record_state_ops,
-        versioned_state_source,
-    )
+    never re-scanned and the engine keeps no state store. The
+    versioning runs on the streaming/ops.py merged_stream skeleton."""
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
 
     _nd, _curve, w_hist = ze01_fit_artifact(spark, sf_dir)
     wavg = {b: sum(w[b] for w in w_hist) for b in w_hist[0]}
 
-    root = tempfile.mkdtemp(prefix="ze03_gate_")
-    current: list[str] = []  # census version pointer
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         # r12 §14: fan the single-split batch out before the per-batch
         # design-matrix bigram explode
         batch = fan_out_scan(batch, "doc_id")
@@ -974,43 +962,30 @@ def streaming_classifier_gate(
                 ).alias("n_correct"),
             )
         )
-        target = os.path.join(root, f"census_v{batch_id}")
-        src = versioned_state_source(current, target)  # replay-safe (r9 advice)
-        if src:
-            part = (
-                spark.read.parquet(src)
-                .unionByName(part)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_kept").alias("n_kept"),
-                    F.sum("n_correct").alias("n_correct"),
-                )
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("source")
+            .agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("n_kept").alias("n_kept"),
+                F.sum("n_correct").alias("n_correct"),
             )
-        record_batch_plan(part, "ze03:census_merge", seen=plan_seen)
-        commit_versioned_state(part, current, target, src)
-
-    q = (
-        stream_docs.select("doc_id", "lang", "text", "source")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, n_kept bigint, kept_ppm bigint,"
-            " n_correct bigint, acc_ppm bigint",
         )
-    census = spark.read.parquet(current[0]).localCheckpoint(eager=True)
-    # checkpoint only because rmtree deletes the backing files; a
-    # production run leaves the census as the parquet it already is
-    shutil.rmtree(root, ignore_errors=True)
+
+    docs = stream_docs.select("doc_id", "lang", "text", "source")
+    with merged_stream(docs, "ze03:census_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, n_kept bigint, kept_ppm bigint,"
+                " n_correct bigint, acc_ppm bigint",
+            )
+        # checkpoint only because the scratch root's removal deletes the
+        # backing files; a production run leaves the census as the
+        # parquet it already is
+        census = state.localCheckpoint(eager=True)
     report = census.select(
         "source",
         F.col("n_docs").cast("bigint").alias("n_docs"),

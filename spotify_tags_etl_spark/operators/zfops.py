@@ -1033,9 +1033,10 @@ def resolve_census_state(spark: SparkSession, state_parts: list[str]) -> DataFra
 def run_lineage_ingest(
     spark: SparkSession,
     stream_docs: DataFrame,
+    root: str,
     label: str,
     extra_doc_rows=None,
-) -> tuple[str, list[str], list[str]]:
+) -> tuple[list[str], list[str]]:
     """Drive the availableNow ingest: per trigger, write the per-batch
     doc store (plus ``extra_doc_rows(batch)`` unioned in, when given —
     zh04's per-doc verdict rows) and APPEND the batch-local census
@@ -1052,18 +1053,14 @@ def run_lineage_ingest(
     sees its own batch id <= the view's horizon, so the horizon check
     re-folds nothing — increments are never double-merged.
 
-    Returns (root, store_dirs, state_parts): state_parts is the
-    compacted view (if any) + the residual increments past its
-    horizon; resolve with :func:`resolve_census_state`."""
+    Writes under ``root`` (the caller's :func:`stream_scratch`).
+    Returns (store_dirs, state_parts): state_parts is the compacted
+    view (if any) + the residual increments past its horizon; resolve
+    with :func:`resolve_census_state`."""
     import os
-    import tempfile
 
-    from spotify_tags_etl_spark.streaming.ops import (
-        record_batch_plan,
-        record_state_ops,
-    )
+    from spotify_tags_etl_spark.streaming.ops import record_batch_plan, run_foreach_batch
 
-    root = tempfile.mkdtemp(prefix=f"{label}_lineage_")
     store_dirs: list[str] = []  # per-batch idempotent doc stores
     state_cur: list[str] = []   # compacted-census version pointer
     incr: list[tuple[int, str]] = []  # append-only census increments
@@ -1096,21 +1093,11 @@ def run_lineage_ingest(
         if d not in store_dirs:
             store_dirs.append(d)
 
-    q = (
-        stream_docs.select("doc_id", "lang", "text", "source")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
+    run_foreach_batch(stream_docs.select("doc_id", "lang", "text", "source"), apply_batch)
     state_parts = (list(state_cur[:1]) if state_cur else []) + [
         p for i, p in incr if i > _compacted_upto(state_cur)
     ]
-    return root, store_dirs, state_parts
+    return store_dirs, state_parts
 
 
 def lineage_close_frames(
@@ -1241,35 +1228,33 @@ def lineage_close_frames(
 def _run_lineage_stream(
     spark: SparkSession, sf_dir: str, stream_docs: DataFrame, label: str
 ) -> DataFrame:
-    import shutil
-    import threading
+    from spotify_tags_etl_spark.streaming.ops import stream_scratch
 
-    root, store_dirs, state_parts = run_lineage_ingest(
-        spark, stream_docs, label=label
-    )
-    if not state_parts:
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, drop_exact bigint, drop_near bigint,"
-            " drop_sem bigint, drop_contam bigint, drop_offtarget bigint,"
-            " n_kept bigint, kept_ppm bigint",
+    # r13: the scratch delete runs off the critical path (its backing
+    # files are no longer needed once both checkpoints return, and
+    # nothing after the block reads the root)
+    with stream_scratch(f"{label}_lineage", background=True) as root:
+        store_dirs, state_parts = run_lineage_ingest(
+            spark, stream_docs, root, label=label
         )
-    # checkpoints only because rmtree deletes the backing files; a
-    # production run leaves censuses + stores as the parquet they are.
-    # r13: the two resolves are independent jobs — overlap them
-    # (guide §2.6), and push the tmp-dir delete off the critical path
-    # (its backing files are no longer needed once both checkpoints
-    # return, and nothing below reads `root`).
-    pre = checkpoint_parallel(
-        {
-            "state": resolve_census_state(spark, state_parts),
-            "store": spark.read.parquet(*store_dirs),
-        }
-    )
+        if not state_parts:
+            return spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, drop_exact bigint, drop_near bigint,"
+                " drop_sem bigint, drop_contam bigint, drop_offtarget bigint,"
+                " n_kept bigint, kept_ppm bigint",
+            )
+        # checkpoints only because the scratch root's removal deletes
+        # the backing files; a production run leaves censuses + stores
+        # as the parquet they are. r13: the two resolves are
+        # independent jobs — overlap them (guide §2.6)
+        pre = checkpoint_parallel(
+            {
+                "state": resolve_census_state(spark, state_parts),
+                "store": spark.read.parquet(*store_dirs),
+            }
+        )
     state, store = pre["state"], pre["store"]
-    threading.Thread(
-        target=shutil.rmtree, args=(root,), kwargs={"ignore_errors": True}
-    ).start()
     fr = lineage_close_frames(spark, sf_dir, state, store)
     census, keeps = fr["census"], fr["keeps"]
     near_drops, sem_drops = fr["near_drops"], fr["sem_drops"]

@@ -926,70 +926,44 @@ def streaming_quality_rules(spark: SparkSession, stream_docs: DataFrame) -> Data
     """Incremental rule census: every zg06 rule is per-doc-local, so
     each micro-batch reduces to ONE per-source census partial (counts
     of first-failing rules — complete within the arrival batch), and
-    partials SUM-merge into versioned parquet (replay-safe via
-    versioned_state_source/commit_versioned_state). Counts merge
+    partials SUM-merge into versioned parquet (replay-safe, on the
+    streaming/ops.py merged_stream skeleton). Counts merge
     associatively + commutatively, so the close-time ppm rollup is
     micro-batch-layout invariant and equals batch zg06 exactly.
     Per-trigger cost O(batch + sources); no engine state store; the
     raw stream is never re-scanned."""
-    import os
-    import shutil
-    import tempfile
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
 
-    from spotify_tags_etl_spark.streaming.ops import (
-        commit_versioned_state,
-        record_batch_plan,
-        record_state_ops,
-        versioned_state_source,
-    )
-
-    root = tempfile.mkdtemp(prefix="zg07_rules_")
-    current: list[str] = []  # census version pointer
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = zg06_census_partial(batch)
-        target = os.path.join(root, f"census_v{batch_id}")
-        src = versioned_state_source(current, target)
-        if src:
-            part = (
-                spark.read.parquet(src)
-                .unionByName(part)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("drop_short").alias("drop_short"),
-                    F.sum("drop_long").alias("drop_long"),
-                    F.sum("drop_rep").alias("drop_rep"),
-                    F.sum("drop_stop").alias("drop_stop"),
-                    F.sum("n_kept").alias("n_kept"),
-                )
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("source")
+            .agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("drop_short").alias("drop_short"),
+                F.sum("drop_long").alias("drop_long"),
+                F.sum("drop_rep").alias("drop_rep"),
+                F.sum("drop_stop").alias("drop_stop"),
+                F.sum("n_kept").alias("n_kept"),
             )
-        record_batch_plan(part, "zg07:census_merge", seen=plan_seen)
-        commit_versioned_state(part, current, target, src)
-
-    q = (
-        stream_docs.select("source", "text")
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, drop_short bigint,"
-            " drop_long bigint, drop_rep bigint, drop_stop bigint,"
-            " n_kept bigint, kept_ppm bigint",
         )
-    census = spark.read.parquet(current[0]).localCheckpoint(eager=True)
-    # checkpoint only because rmtree deletes the backing files; a
-    # production run leaves the census as the parquet it already is
-    shutil.rmtree(root, ignore_errors=True)
+
+    docs = stream_docs.select("source", "text")
+    with merged_stream(docs, "zg07:census_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, drop_short bigint,"
+                " drop_long bigint, drop_rep bigint, drop_stop bigint,"
+                " n_kept bigint, kept_ppm bigint",
+            )
+        # checkpoint only because the scratch root's removal deletes the
+        # backing files; a production run leaves the census as the
+        # parquet it already is
+        census = state.localCheckpoint(eager=True)
     report = _zg06_finish(census)
     record_plan(report, "zg07:rule_report")
     return report
@@ -1003,7 +977,7 @@ def streaming_quality_rules(spark: SparkSession, stream_docs: DataFrame) -> Data
         "docs' first-failing-rule census partial (rules are "
         "per-doc-local, so attribution is complete within the arrival "
         "batch) and SUM-merges it into versioned parquet (replay-safe "
-        "versioned_state_source/commit_versioned_state — a replayed "
+        "merged_stream skeleton — a replayed "
         "batch_id merges against the pre-attempt version). Counts "
         "merge associatively + commutatively => the close-time ppm "
         "rollup is micro-batch-layout invariant (pinned under a 3-file "

@@ -685,44 +685,40 @@ def streaming_unified_keepset(
     representative is order-safe). Every store is idempotent-per-batch
     or SUM/MIN-mergeable => micro-batch-layout invariant, equal to
     batch zh01 (pinned under a 3-file split)."""
-    import shutil
-
+    from spotify_tags_etl_spark.functions.concurrency import checkpoint_parallel
     from spotify_tags_etl_spark.operators.zfops import (
         lineage_close_frames,
         resolve_census_state,
         run_lineage_ingest,
     )
+    from spotify_tags_etl_spark.streaming.ops import stream_scratch
 
     _nd, _curve, w_hist = ze01_fit_artifact(spark, sf_dir)
     wavg = {b: sum(w[b] for w in w_hist) for b in w_hist[0]}
-    root, store_dirs, state_parts = run_lineage_ingest(
-        spark, stream_docs, label="zh04", extra_doc_rows=_zh04_verdict_rows(wavg)
-    )
     cols = ", ".join(
         f"{name} bigint"
         for name, _ in _ZH01_STAGES
     )
-    if not state_parts:
-        return spark.createDataFrame(
-            [], f"source string, n_docs bigint, {cols}, kept_ppm bigint"
+    # r13: the scratch delete runs off the critical path (zf02's close)
+    with stream_scratch("zh04_lineage", background=True) as root:
+        store_dirs, state_parts = run_lineage_ingest(
+            spark, stream_docs, root, label="zh04",
+            extra_doc_rows=_zh04_verdict_rows(wavg),
         )
-    # checkpoints only because rmtree deletes the backing files.
-    # r13: overlap the two independent resolves (guide §2.6) and push
-    # the tmp-dir delete off the critical path (zf02's close change).
-    import threading
-
-    from spotify_tags_etl_spark.functions.concurrency import checkpoint_parallel
-
-    pre = checkpoint_parallel(
-        {
-            "state": resolve_census_state(spark, state_parts),
-            "store": spark.read.parquet(*store_dirs),
-        }
-    )
+        if not state_parts:
+            return spark.createDataFrame(
+                [], f"source string, n_docs bigint, {cols}, kept_ppm bigint"
+            )
+        # checkpoints only because the scratch root's removal deletes
+        # the backing files. r13: overlap the two independent resolves
+        # (guide §2.6)
+        pre = checkpoint_parallel(
+            {
+                "state": resolve_census_state(spark, state_parts),
+                "store": spark.read.parquet(*store_dirs),
+            }
+        )
     state, store = pre["state"], pre["store"]
-    threading.Thread(
-        target=shutil.rmtree, args=(root,), kwargs={"ignore_errors": True}
-    ).start()
 
     vflag = store.where(F.col("kind") == "vflag").select(
         "doc_id",

@@ -20,6 +20,14 @@ analogs as first-class operators:
 * xw01 — incremental funnel (CEP-lite): per-user sequential-pattern
   anchors merged set-orientedly into versioned keyed state.
 
+The foreachBatch twins that keep their state as versioned parquet
+(st08, xw01, xk03, xw06, xw08, xw10, yi03 here; za04, zb02, zc07, zd07,
+ze03, zg07 in the operator modules) run on ONE skeleton,
+:func:`merged_stream`: each supplies only its per-trigger
+``step(batch, prev)`` merge and its close. Twins that also write side
+stores (st09, zc04, zd05, zf02/zh04) keep their own batch functions but
+share :func:`stream_scratch` and :func:`run_foreach_batch`.
+
 Each runs as a real streaming query (``readStream`` → transform →
 ``writeStream`` to a memory sink, ``Trigger.AvailableNow``) and returns
 the materialized result, so the driver's oracle gate applies to the
@@ -43,8 +51,12 @@ Scale notes (1000-executor design point):
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import threading
 import uuid
-from typing import Iterator
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -67,26 +79,41 @@ _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 def read_table_stream(
     spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Streaming file-source scan of any test table (same symlink-staging
-    and session self-healing as :func:`read_events_stream`, minus the
-    events-specific timestamp normalization)."""
+    """Streaming file-source scan of any test table: file-source
+    micro-batches. Schema comes from one batch footer read (streaming
+    sources require an explicit schema)."""
     import hashlib
 
     from ..sources.tpch import ensure_session_defaults
 
     path = os.path.join(sf_dir, f"{name}.parquet")
+    # The file stream source requires a *directory* to monitor; the test
+    # tables are single files (read-only), so stage a symlink dir. At
+    # cluster scale the source would watch a real landing directory.
     stream_dir = os.path.join(
         "/tmp/spark_graft_stream", hashlib.md5(sf_dir.encode()).hexdigest()[:12], name
     )
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, f"{name}.parquet")
+    # lexists (not exists): a dangling link from a regenerated fixture must
+    # not trigger a re-create; FileExistsError guards concurrent stagers.
     if not os.path.lexists(link):
         try:
             os.symlink(path, link)
         except FileExistsError:
             pass
+    # Same vanilla-session guard as sources/tpch.py:load_table — the
+    # TIMESTAMP(NANOS) physical type needs this runtime conf on ANY session,
+    # and event-time windows/date_format must render in UTC to match the
+    # naive-UTC DuckDB oracles regardless of the driver JVM's default TZ.
     ensure_session_defaults(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # State-store partition count is frozen from shuffle.partitions at
+    # query start; a vanilla session's 200 means 200 state partitions per
+    # stateful operator per micro-batch — pure overhead at this scale.
+    # Only replace the untouched Spark default: a session where the caller
+    # explicitly tuned shuffle.partitions keeps its setting (at cluster
+    # scale this is sized to executor count, not left at 200).
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
         spark.conf.set(
             "spark.sql.shuffle.partitions",
@@ -100,62 +127,14 @@ def read_table_stream(
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming scan of the events table: file-source micro-batches.
+    """Streaming scan of the events table (:func:`read_table_stream`)
+    with the ``ts`` column normalized to a TIMESTAMP instant + bigint
+    ``ts_ns`` exactly as the batch loader does
+    (sources/tpch.py:normalize_events_ts), whatever the fixture
+    encoding — ``ts`` stays watermark-eligible."""
+    from ..sources.tpch import normalize_events_ts
 
-    Schema comes from one batch footer read (streaming sources require
-    an explicit schema); the ``ts`` column is normalized to a TIMESTAMP
-    instant + bigint ``ts_ns`` exactly as the batch loader does
-    (sources/tpch.py:normalize_events_ts), whatever the fixture encoding.
-    """
-    import hashlib
-    import os
-
-    path = os.path.join(sf_dir, "events.parquet")
-    # The file stream source requires a *directory* to monitor; the test
-    # tables are single files (read-only), so stage a symlink dir. At
-    # cluster scale the source would watch a real landing directory.
-    stream_dir = os.path.join(
-        "/tmp/spark_graft_stream", hashlib.md5(sf_dir.encode()).hexdigest()[:12], "events"
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    # lexists (not exists): a dangling link from a regenerated fixture must
-    # not trigger a re-create; FileExistsError guards concurrent stagers.
-    if not os.path.lexists(link):
-        try:
-            os.symlink(path, link)
-        except FileExistsError:
-            pass
-    # Same vanilla-session guard as sources/tpch.py:load_table — the
-    # TIMESTAMP(NANOS) physical type needs this runtime conf on ANY session,
-    # and event-time windows/date_format must render in UTC to match the
-    # naive-UTC DuckDB oracles regardless of the driver JVM's default TZ.
-    from ..sources.tpch import ensure_session_defaults, normalize_events_ts
-
-    ensure_session_defaults(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # State-store partition count is frozen from shuffle.partitions at
-    # query start; a vanilla session's 200 means 200 state partitions per
-    # stateful operator per micro-batch — pure overhead at this scale.
-    # Only replace the untouched Spark default: a session where the caller
-    # explicitly tuned shuffle.partitions keeps its setting (at cluster
-    # scale this is sized to executor count, not left at 200).
-    import os as _os
-
-    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            _os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-        )
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(stream_dir)
-    # Same encoding-driven normalization as the batch loader: whatever the
-    # fixture's physical type (bigint ns / timestamp / timestamp_ntz), the
-    # stream exposes TIMESTAMP ``ts`` (watermark-eligible) + bigint ``ts_ns``.
-    return normalize_events_ts(df)
+    return normalize_events_ts(read_table_stream(spark, sf_dir, "events", max_files_per_trigger))
 
 
 #: State-operator names of the most recent :func:`run_to_memory_with_progress`
@@ -186,14 +165,16 @@ STATE_OPS_LOG: list[tuple[str, tuple[str, ...]]] = []
 #: * foreachBatch runs: the engine-side plan is a trivial hand-off, so
 #:   each inner write site calls :func:`record_batch_plan` on the frame
 #:   it is about to materialize — one ``(label, metrics)`` entry per
-#:   micro-batch per site.
+#:   plan shape per site and run (:class:`VersionedMerge` renders the
+#:   first trigger and the first merge trigger; other sites render each
+#:   of their labels once per run).
 #:
 #: Tests pin the DEDUPLICATED set per query (micro-batch plans are
-#: data-independent in shape, so every batch of a site fingerprints
-#: identically; the set form keeps pins stable under batch-count
-#: changes from maxFilesPerTrigger tuning). A foreachBatch merge
-#: silently gaining an exchange — invisible to both the batch ratchet
-#: and the state-shape pin — now fails a test.
+#: data-independent in shape, so every merge trigger of a site
+#: fingerprints identically; the set form keeps pins stable under
+#: batch-count changes from maxFilesPerTrigger tuning). A foreachBatch
+#: merge silently gaining an exchange — invisible to both the batch
+#: ratchet and the state-shape pin — now fails a test.
 MICRO_PLAN_LOG: list[tuple[str, tuple[tuple[str, int], ...]]] = []
 
 
@@ -285,9 +266,6 @@ def commit_versioned_state(df: DataFrame, cur: list[str], target: str, src: str 
     rename whole onto ``target``. A half-written first attempt is
     replaced atomically; ``cur`` keeps [current, previous] so a replay
     can re-resolve its source via :func:`versioned_state_source`."""
-    import os
-    import shutil
-
     tmp = target + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
     if os.path.exists(target):
@@ -873,6 +851,93 @@ def run_foreach_batch(stream: DataFrame, batch_fn) -> None:
         q.stop()
 
 
+@contextmanager
+def stream_scratch(label: str, background: bool = False) -> Iterator[str]:
+    """Scratch root for one foreachBatch run's parquet state and side
+    stores, removed on every exit: a normal close, an empty stream, or
+    a raising batch. Whatever the caller returns from files under the
+    root must be materialized inside the ``with`` block.
+
+    ``background`` runs the removal on its own thread — for closes that
+    go on to run Spark jobs over checkpoints taken inside the block and
+    read nothing under the root again (zd05, zf02/zh04)."""
+    root = tempfile.mkdtemp(prefix=f"{label}_")
+    try:
+        yield root
+    finally:
+        if background:
+            threading.Thread(
+                target=shutil.rmtree, args=(root,), kwargs={"ignore_errors": True}
+            ).start()
+        else:
+            shutil.rmtree(root, ignore_errors=True)
+
+
+class VersionedMerge:
+    """The per-batch handler of :func:`merged_stream` (and the census
+    store of the side-store twins zc04/zd05): folds each micro-batch
+    into the next parquet version of the state under ``root``. ``step(batch, prev)`` returns the next state — the batch
+    partial when ``prev`` is None (first trigger), else the partial
+    merged into ``prev``, the previous version read back.
+
+    Replay-safe: a re-delivered batch id merges against the version
+    that preceded its first attempt (:func:`versioned_state_source`)
+    and commits by tmp+rename (:func:`commit_versioned_state`).
+
+    Plan fingerprints under ``label``: the first trigger (``prev`` is
+    None) and the first MERGE trigger are each rendered once — the two
+    shapes a run's micro-batch plan takes. Rendering costs a full
+    driver planning pass, so later triggers of a seen shape skip it."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        label: str,
+        step: Callable[[DataFrame, DataFrame | None], DataFrame],
+    ) -> None:
+        self.spark, self.root, self.label, self.step = spark, root, label, step
+        self.current: list[str] = []  # version POINTER, not state
+        self._rendered: set[bool] = set()  # shapes fingerprinted: merge or not
+
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        target = os.path.join(self.root, f"v{batch_id}")
+        src = versioned_state_source(self.current, target)
+        state = self.step(batch, self.spark.read.parquet(src) if src else None)
+        if (src is not None) not in self._rendered:
+            self._rendered.add(src is not None)
+            record_batch_plan(state, self.label)
+        commit_versioned_state(state, self.current, target, src)
+
+    def state(self) -> DataFrame | None:
+        """The latest committed version, or None before any batch."""
+        return self.spark.read.parquet(self.current[0]) if self.current else None
+
+
+@contextmanager
+def merged_stream(
+    stream: DataFrame,
+    label: str,
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> Iterator[DataFrame | None]:
+    """The versioned-merge skeleton of the foreachBatch streaming twins:
+    each micro-batch reduces to a partial that ``step`` merges into the
+    previous parquet version, and the result is committed as the next
+    version (:class:`VersionedMerge`). The merge must be associative
+    and commutative, so the final state is micro-batch-layout invariant
+    and the version pointer is the only state the driver holds.
+
+    Owns the scratch root (:func:`stream_scratch`), the run
+    (:func:`run_foreach_batch`, which records the state-shape pin) and
+    the root's removal on every exit. Yields the final state frame, or
+    None when no batch ran; the frame reads files under the root, so
+    the caller materializes its close inside the ``with`` block."""
+    with stream_scratch(label.replace(":", "_")) as root:
+        merge = VersionedMerge(stream.sparkSession, root, label, step)
+        run_foreach_batch(stream, merge)
+        yield merge.state()
+
+
 # ---------------------------------------------------------------------------
 # streaming CDC upsert via foreachBatch (merge-into pattern)
 # ---------------------------------------------------------------------------
@@ -890,25 +955,16 @@ def streaming_upsert(stream: DataFrame) -> DataFrame:
     tests/test_streaming.py against a differently-batched run and the
     batch oracle).
 
-    The standing table is a versioned parquet target merged through the
-    engine-level MERGE primitive (operators/maintenance.py:upsert_lww,
-    the uz01 shape): per batch, an argmax pre-reduction shrinks the
-    merge input to O(keys-in-batch), then a co-partitioned full-outer
-    join against the current version writes the next version. Writing
-    to ``v{batch_id}`` makes retries idempotent (exactly-once on top of
-    foreachBatch's at-least-once). No ``.collect()`` anywhere — the
-    driver holds only the current-version path."""
-    import shutil
-    import tempfile
-
+    The standing table is a versioned parquet target
+    (:func:`merged_stream`) merged through the engine-level MERGE
+    primitive (operators/maintenance.py:upsert_lww, the uz01 shape): per
+    batch, an argmax pre-reduction shrinks the merge input to
+    O(keys-in-batch), then a co-partitioned full-outer join against the
+    current version writes the next version. No ``.collect()`` anywhere
+    — the driver holds only the current-version path."""
     from spotify_tags_etl_spark.operators.maintenance import upsert_lww
 
-    spark = stream.sparkSession
-    root = tempfile.mkdtemp(prefix="st08_merge_")
-    current: list[str] = []  # version POINTER, not state
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         # Order on (usec, event_id): DuckDB reads the NANOS column at
         # microsecond precision, so the merge relation must not depend
         # on sub-usec digits the oracle cannot see.
@@ -919,45 +975,23 @@ def streaming_upsert(stream: DataFrame) -> DataFrame:
             .where(F.col("_rn") == 1)
             .select("user_id", "event_id", "ts_us", "value")
         )
-        if current:
-            merged = upsert_lww(
-                spark.read.parquet(current[0]), latest, "user_id", ("ts_us", "event_id")
-            )
-        else:
-            merged = latest
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "st08:merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
+        if prev is None:
+            return latest
+        return upsert_lww(prev, latest, "user_id", ("ts_us", "event_id"))
 
-    q = (
-        stream.select("user_id", "event_id", "ts_ns", "value")
-        .writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame(
-            [], "user_id long, last_event_id long, last_ts_us long, last_value double"
-        )
-    final = (
-        spark.read.parquet(current[0])
-        .select(
+    spark = stream.sparkSession
+    events = stream.select("user_id", "event_id", "ts_ns", "value")
+    with merged_stream(events, "st08:merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [], "user_id long, last_event_id long, last_ts_us long, last_value double"
+            )
+        return state.select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
             F.col("ts_us").alias("last_ts_us"),
             F.col("value").alias("last_value"),
-        )
-        .localCheckpoint(eager=True)  # detach from the temp files before cleanup
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return final
+        ).localCheckpoint(eager=True)  # detach from the temp files before cleanup
 
 
 @register(
@@ -1007,11 +1041,10 @@ def streaming_neardup(
     (least, greatest) canonicalization + the closing distinct absorb
     both orientations and any retried-batch re-appends (append-mode
     candidate writes are therefore retry-safe). The signature store is
-    batch-id-versioned parquet like st08 — no driver-held state beyond
-    the current-version path."""
-    import shutil
-    import tempfile
-
+    versioned parquet committed replay-safely
+    (:func:`commit_versioned_state`) — no driver-held state beyond the
+    current-version path."""
+    from spotify_tags_etl_spark.functions.concurrency import fan_out_scan, run_parallel
     from spotify_tags_etl_spark.operators.dedup import (
         banded_frame,
         jaccard_verify,
@@ -1020,82 +1053,63 @@ def streaming_neardup(
     )
 
     spark = stream_docs.sparkSession
-    root = tempfile.mkdtemp(prefix="st09_neardup_")
-    pairs_dir = os.path.join(root, "pairs")
-    current: list[str] = []  # signature-store version pointer
+    with stream_scratch("st09_neardup") as root:
+        pairs_dir = os.path.join(root, "pairs")
+        current: list[str] = []  # signature-store version pointer
+        plan_seen: set = set()  # r13: fingerprint each label once per run
 
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
-
-        # r12 §14: fan the single-split fixture batch out to the core
-        # count before the per-doc signature map work (scale-adaptive
-        # no-op once the batch already has >= cores partitions)
-        batch = fan_out_scan(batch, "doc_id")
-        # r13 (guide §1.2): the batch signature subtree fed THREE plan
-        # branches (both candidate join sides + the store write), so the
-        # shingle explode + 8-perm MinHash ran three times per trigger.
-        # Materialize it once; the two overlapped write jobs below and
-        # the self-join both read the checkpoint.
-        sig_b = minhash_signatures(word_shingles(batch)).localCheckpoint(
-            eager=True
-        )
-        sig_all = (
-            sig_b.unionByName(spark.read.parquet(current[0])) if current else sig_b
-        )
-        new_side = banded_frame(sig_b).alias("l")
-        all_side = banded_frame(sig_all).alias("r")
-        cand = (
-            new_side.join(
-                all_side,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bk") == F.col("r.bk"))
-                & (F.col("l.doc_id") != F.col("r.doc_id")),
+        def apply_batch(batch: DataFrame, batch_id: int) -> None:
+            # r12 §14: fan the single-split fixture batch out to the core
+            # count before the per-doc signature map work (scale-adaptive
+            # no-op once the batch already has >= cores partitions)
+            batch = fan_out_scan(batch, "doc_id")
+            # r13 (guide §1.2): the batch signature subtree fed THREE plan
+            # branches (both candidate join sides + the store write), so the
+            # shingle explode + 8-perm MinHash ran three times per trigger.
+            # Materialize it once; the two overlapped write jobs below and
+            # the self-join both read the checkpoint.
+            sig_b = minhash_signatures(word_shingles(batch)).localCheckpoint(
+                eager=True
             )
-            .select(
-                F.least("l.doc_id", "r.doc_id").alias("d1"),
-                F.greatest("l.doc_id", "r.doc_id").alias("d2"),
+            target = os.path.join(root, f"sig_v{batch_id}")
+            src = versioned_state_source(current, target)
+            sig_all = sig_b.unionByName(spark.read.parquet(src)) if src else sig_b
+            new_side = banded_frame(sig_b).alias("l")
+            all_side = banded_frame(sig_all).alias("r")
+            cand = (
+                new_side.join(
+                    all_side,
+                    (F.col("l.band") == F.col("r.band"))
+                    & (F.col("l.bk") == F.col("r.bk"))
+                    & (F.col("l.doc_id") != F.col("r.doc_id")),
+                )
+                .select(
+                    F.least("l.doc_id", "r.doc_id").alias("d1"),
+                    F.greatest("l.doc_id", "r.doc_id").alias("d2"),
+                )
+                .distinct()
             )
-            .distinct()
-        )
-        record_batch_plan(cand, "st09:candidates", seen=plan_seen)
-        target = os.path.join(root, f"sig_v{batch_id}")
-        record_batch_plan(sig_all, "st09:signatures", seen=plan_seen)
-        # r12 §2.6: the candidate append and the signature-store
-        # version write are independent sinks (append is retry-safe by
-        # the closing distinct; the version pointer advances only after
-        # its own write) — overlap them
-        from spotify_tags_etl_spark.functions.concurrency import run_parallel
+            record_batch_plan(cand, "st09:candidates", seen=plan_seen)
+            record_batch_plan(sig_all, "st09:signatures", seen=plan_seen)
+            # r12 §2.6: the candidate append and the signature-store
+            # version write are independent sinks (append is retry-safe by
+            # the closing distinct; the version pointer advances only after
+            # its own commit) — overlap them
+            run_parallel(
+                lambda: cand.write.mode("append").parquet(pairs_dir),
+                lambda: commit_versioned_state(sig_all, current, target, src),
+            )
 
-        run_parallel(
-            lambda: cand.write.mode("append").parquet(pairs_dir),
-            lambda: sig_all.write.mode("overwrite").parquet(target),
-        )
-        current[:] = [target]
-
-    q = (
-        stream_docs.select("doc_id", "text")
-        .writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not os.path.isdir(pairs_dir):
-        return spark.createDataFrame([], "d1 long, d2 long, jaccard_permille long")
-    pairs = spark.read.parquet(pairs_dir).distinct()
-    # verify once, against corpus shingles pruned to candidate docs
-    cand_ids = pairs.select(F.col("d1").alias("doc_id")).unionByName(
-        pairs.select(F.col("d2").alias("doc_id"))
-    ).distinct()
-    sh = word_shingles(corpus_docs.join(cand_ids, "doc_id", "left_semi"))
-    out = jaccard_verify(pairs, sh, threshold_permille).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+        run_foreach_batch(stream_docs.select("doc_id", "text"), apply_batch)
+        if not os.path.isdir(pairs_dir):
+            return spark.createDataFrame([], "d1 long, d2 long, jaccard_permille long")
+        pairs = spark.read.parquet(pairs_dir).distinct()
+        # verify once, against corpus shingles pruned to candidate docs
+        cand_ids = pairs.select(F.col("d1").alias("doc_id")).unionByName(
+            pairs.select(F.col("d2").alias("doc_id"))
+        ).distinct()
+        sh = word_shingles(corpus_docs.join(cand_ids, "doc_id", "left_semi"))
+        return jaccard_verify(pairs, sh, threshold_permille).localCheckpoint(eager=True)
 
 
 from spotify_tags_etl_spark.operators.dedup import _minhash_oracle as _dd02_oracle
@@ -1133,8 +1147,8 @@ def streaming_funnel(stream_events: DataFrame) -> DataFrame:
     """Incremental funnel (CEP-lite): per user, maintain the anchors
     (first view, first click after it, first purchase after that) as a
     keyed state table, merged set-orientedly per micro-batch — no
-    per-row driver logic, no Python state; the same versioned-parquet
-    state idiom as st08/st09.
+    per-row driver logic, no Python state; the versioned-parquet
+    state runs on :func:`merged_stream`.
 
     Per batch the three anchors re-derive from (standing state ∪ batch
     mins): ``mv' = min(mv, batch view min)``, ``mc' = min(mc, batch
@@ -1146,19 +1160,13 @@ def streaming_funnel(stream_events: DataFrame) -> DataFrame:
 
     (``xw`` registry name: sorts after the current driver window so it
     queues for the next rotation — see plans/registry.py.)"""
-    import shutil
-    import tempfile
-
     spark = stream_events.sparkSession
-    root = tempfile.mkdtemp(prefix="xw01_funnel_")
-    current: list[str] = []
 
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         b = batch.select("user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"))
         state = (
-            spark.read.parquet(current[0])
-            if current
+            prev
+            if prev is not None
             else spark.createDataFrame([], "user_id long, mv timestamp, mc timestamp, mp timestamp")
         )
         keys = (
@@ -1186,39 +1194,22 @@ def streaming_funnel(stream_events: DataFrame) -> DataFrame:
             .groupBy("user_id")
             .agg(F.min("ts").alias("bp"))
         )
-        st = st.join(bp, "user_id", "left").withColumn("mp", F.least("mp", "bp")).withColumn(
+        return st.join(bp, "user_id", "left").withColumn("mp", F.least("mp", "bp")).withColumn(
             "mp", F.coalesce("mp", "bp")
         ).drop("bp")
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(st, "xw01:funnel_state", seen=plan_seen)
-        st.write.mode("overwrite").parquet(target)
-        current[:] = [target]
 
-    q = (
-        stream_events.select("user_id", "event_type", "ts")
-        .writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        record_state_ops(q, "foreachBatch")
-    finally:
-        q.stop()
-    if not current:
-        return spark.createDataFrame([], "step string, n_users long")
-    st = spark.read.parquet(current[0])
-    out = (
-        st.agg(F.lit("view").alias("step"), F.count("mv").alias("n_users"))
-        .unionByName(st.agg(F.lit("view>click").alias("step"), F.count("mc").alias("n_users")))
-        .unionByName(
-            st.agg(F.lit("view>click>purchase").alias("step"), F.count("mp").alias("n_users"))
+    events = stream_events.select("user_id", "event_type", "ts")
+    with merged_stream(events, "xw01:funnel_state", step) as st:
+        if st is None:
+            return spark.createDataFrame([], "step string, n_users long")
+        return (
+            st.agg(F.lit("view").alias("step"), F.count("mv").alias("n_users"))
+            .unionByName(st.agg(F.lit("view>click").alias("step"), F.count("mc").alias("n_users")))
+            .unionByName(
+                st.agg(F.lit("view>click>purchase").alias("step"), F.count("mp").alias("n_users"))
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 @register(
@@ -1247,7 +1238,7 @@ def streaming_funnel(stream_events: DataFrame) -> DataFrame:
         "Streaming funnel: the xf01 sequential pattern maintained "
         "incrementally — per micro-batch, the three per-user anchors "
         "merge set-orientedly into a versioned keyed state table "
-        "(st08's idiom; state is O(users), merge input O(keys-in-"
+        "(the merged_stream skeleton; state is O(users), merge input O(keys-in-"
         "batch)). Equals the batch funnel under event-time-ordered "
         "arrival; same oracle as xf01."
     ),
@@ -1269,7 +1260,8 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str, stream: DataFrame) ->
     associative, commutative AND idempotent relation, so the final store
     is micro-batch-layout invariant and retry-safe by algebra alone (no
     dedup bookkeeping, unlike count-based upserts). Versioned parquet
-    target (st08's pattern); the driver holds only the version pointer.
+    target (:func:`merged_stream`); the driver holds only the version
+    pointer.
 
     At stream end the store's weekly union estimates are anchored two
     ways (verdict columns only, like av14's exact): equality with the
@@ -1278,17 +1270,10 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str, stream: DataFrame) ->
     sketch bytes are O(4KB), batches never re-scan history, and any
     coarser rollup is a union over stored partials.
     """
-    import shutil
-    import tempfile
-
     from spotify_tags_etl_spark.operators.advanced import _DAY_US, _XK02_BOUND
     from spotify_tags_etl_spark.sources.tpch import load_table
 
-    root = tempfile.mkdtemp(prefix="xk03_hll_")
-    current: list[str] = []  # version pointer, not state
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         daily = (
             batch.select(
                 "user_id",
@@ -1298,69 +1283,59 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str, stream: DataFrame) ->
             .groupBy("wk", "day")
             .agg(F.hll_sketch_agg("user_id").alias("sk"))
         )
-        if current:
-            stored = spark.read.parquet(current[0])
-            merged = (
-                stored.select("wk", "day", F.col("sk").alias("sk_a"))
-                .join(daily.select("wk", "day", F.col("sk").alias("sk_b")), ["wk", "day"], "full_outer")
-                .select(
-                    "wk",
-                    "day",
-                    F.when(F.col("sk_a").isNull(), F.col("sk_b"))
-                    .when(F.col("sk_b").isNull(), F.col("sk_a"))
-                    .otherwise(F.hll_union(F.col("sk_a"), F.col("sk_b")))
-                    .alias("sk"),
-                )
+        if prev is None:
+            return daily
+        return (
+            prev.select("wk", "day", F.col("sk").alias("sk_a"))
+            .join(daily.select("wk", "day", F.col("sk").alias("sk_b")), ["wk", "day"], "full_outer")
+            .select(
+                "wk",
+                "day",
+                F.when(F.col("sk_a").isNull(), F.col("sk_b"))
+                .when(F.col("sk_b").isNull(), F.col("sk_a"))
+                .otherwise(F.hll_union(F.col("sk_a"), F.col("sk_b")))
+                .alias("sk"),
             )
-        else:
-            merged = daily
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "xk03:hll_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
-
-    run_foreach_batch(stream.select("user_id", "ts"), apply_batch)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(f"unix_micros(ts) DIV {7 * _DAY_US}").alias("wk"),
-        F.expr(f"unix_micros(ts) DIV {_DAY_US}").alias("day"),
-    )
-    # Apples-to-apples anchor: batch-side UNION of the same daily partials,
-    # not a directly-built weekly sketch. Datasketches HLL estimates a
-    # directly-updated sketch with its HIP estimator but a UNIONED sketch
-    # with the composite estimator, so "union == direct" is NOT a true
-    # invariant — it held at sf0.01 by coincidence and broke at sf0.1.
-    # Union associativity (stream-merge layout invariance) is the property
-    # this query actually claims, and union-vs-union tests exactly that;
-    # closeness to ground truth is the separate 5% n_exact band.
-    anchor = (
-        ev.groupBy("wk", "day")
-        .agg(F.hll_sketch_agg("user_id").alias("dsk"))
-        .groupBy("wk")
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("dsk")).alias("_direct"))
-        .join(ev.groupBy("wk").agg(F.count_distinct("user_id").alias("n_exact")), "wk")
-    )
-    if not current:
-        return spark.createDataFrame([], "wk long, n_exact long, merged_ok boolean")
-    store = spark.read.parquet(current[0])
-    weekly = store.groupBy("wk").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("_est")
-    )
-    out = (
-        weekly.join(anchor, "wk")
-        .select(
-            "wk",
-            "n_exact",
-            (
-                (F.col("_est") == F.col("_direct"))
-                & (F.abs(F.col("_est") - F.col("n_exact")) <= F.lit(_XK02_BOUND) * F.col("n_exact"))
-            ).alias("merged_ok"),
         )
-        .localCheckpoint(eager=True)  # detach before temp cleanup
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+
+    with merged_stream(stream.select("user_id", "ts"), "xk03:hll_merge", step) as store:
+        if store is None:
+            return spark.createDataFrame([], "wk long, n_exact long, merged_ok boolean")
+        ev = load_table(spark, sf_dir, "events").select(
+            "user_id",
+            F.expr(f"unix_micros(ts) DIV {7 * _DAY_US}").alias("wk"),
+            F.expr(f"unix_micros(ts) DIV {_DAY_US}").alias("day"),
+        )
+        # Apples-to-apples anchor: batch-side UNION of the same daily partials,
+        # not a directly-built weekly sketch. Datasketches HLL estimates a
+        # directly-updated sketch with its HIP estimator but a UNIONED sketch
+        # with the composite estimator, so "union == direct" is NOT a true
+        # invariant — it held at sf0.01 by coincidence and broke at sf0.1.
+        # Union associativity (stream-merge layout invariance) is the property
+        # this query actually claims, and union-vs-union tests exactly that;
+        # closeness to ground truth is the separate 5% n_exact band.
+        anchor = (
+            ev.groupBy("wk", "day")
+            .agg(F.hll_sketch_agg("user_id").alias("dsk"))
+            .groupBy("wk")
+            .agg(F.hll_sketch_estimate(F.hll_union_agg("dsk")).alias("_direct"))
+            .join(ev.groupBy("wk").agg(F.count_distinct("user_id").alias("n_exact")), "wk")
+        )
+        weekly = store.groupBy("wk").agg(
+            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("_est")
+        )
+        return (
+            weekly.join(anchor, "wk")
+            .select(
+                "wk",
+                "n_exact",
+                (
+                    (F.col("_est") == F.col("_direct"))
+                    & (F.abs(F.col("_est") - F.col("n_exact")) <= F.lit(_XK02_BOUND) * F.col("n_exact"))
+                ).alias("merged_ok"),
+            )
+            .localCheckpoint(eager=True)  # detach before temp cleanup
+        )
 
 
 @register(
@@ -1487,7 +1462,7 @@ def xw05(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_cms_rollup(spark: SparkSession, sf_dir: str, stream: DataFrame) -> DataFrame:
     """Streaming maintenance of xz06's count-min table: each micro-batch
     reduces to <= D*W counter-cell partials, summed cell-wise into the
-    standing store (versioned parquet, st08/xk03's idiom). Counter
+    standing store (versioned parquet, :func:`merged_stream`). Counter
     addition is associative and commutative, so the merged sketch is
     BIT-IDENTICAL to the batch-built one whatever the micro-batch
     layout — which is why this query checks against the very same
@@ -1501,39 +1476,20 @@ def streaming_cms_rollup(spark: SparkSession, sf_dir: str, stream: DataFrame) ->
     table. State lives in the store, not the state-store — no watermark
     needed for a monotone additive aggregate.
     """
-    import os
-    import shutil
-    import tempfile
-
     from spotify_tags_etl_spark.operators.sketches import cms_report, cms_sketch
-    from spotify_tags_etl_spark.sources.tpch import load_table
 
-    root = tempfile.mkdtemp(prefix="xw06_cms_")
-    current: list[str] = []  # version pointer, not state
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = cms_sketch(batch, "event_type")
-        if current:
-            stored = spark.read.parquet(current[0])
-            merged = stored.union(part).groupBy("j", "bucket").agg(F.sum("c").alias("c"))
-        else:
-            merged = part
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "xw06:cms_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
+        if prev is None:
+            return part
+        return prev.union(part).groupBy("j", "bucket").agg(F.sum("c").alias("c"))
 
-    run_foreach_batch(stream.select("event_type"), apply_batch)
-
-    if not current:
-        return spark.createDataFrame(
-            [], "event_type string, est_count long, exact_count long, overcount long"
-        )
-    sketch = spark.read.parquet(current[0])
-    out = cms_report(spark, sf_dir, sketch).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+    with merged_stream(stream.select("event_type"), "xw06:cms_merge", step) as sketch:
+        if sketch is None:
+            return spark.createDataFrame(
+                [], "event_type string, est_count long, exact_count long, overcount long"
+            )
+        return cms_report(spark, sf_dir, sketch).localCheckpoint(eager=True)
 
 
 def _cms_oracle() -> str:
@@ -1612,15 +1568,12 @@ def stream_running_stats(spark: SparkSession, sf_dir: str, stream: DataFrame) ->
     arbitrary-state API, merged across micro-batches through a keyed
     ValueState; every batch emits the keys it touched (Update mode) and
     a foreachBatch LWW upsert keeps the serving table at the latest
-    emission — st08's versioned-store idiom with transformWithState
-    upstream. State is O(users) fixed-width tuples in the state store
-    (RocksDB at scale), NOT collected anywhere; at stream end the
+    emission — the versioned-store skeleton (:func:`merged_stream`)
+    with transformWithState upstream. State is O(users) fixed-width
+    tuples in the state store (RocksDB at scale), NOT collected
+    anywhere; at stream end the
     serving table equals the batch groupBy exactly (integer additive
     merges), which is what the oracle checks."""
-    import os
-    import shutil
-    import tempfile
-
     from spotify_tags_etl_spark.operators.maintenance import upsert
 
     cents = stream.select(
@@ -1633,36 +1586,22 @@ def stream_running_stats(spark: SparkSession, sf_dir: str, stream: DataFrame) ->
         timeMode="None",
     )
 
-    root = tempfile.mkdtemp(prefix="xw08_tws_")
-    current: list[str] = []
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         latest = batch.dropDuplicates(["user_id"])
-        if current:
-            stored = spark.read.parquet(current[0])
-            merged = upsert(stored, latest, "user_id").drop("_op")
-        else:
-            merged = latest
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(merged, "xw08:stats_merge", seen=plan_seen)
-        merged.write.mode("overwrite").parquet(target)
-        current[:] = [target]
+        if prev is None:
+            return latest
+        return upsert(prev, latest, "user_id").drop("_op")
 
-    run_foreach_batch(updated, apply_batch)
-
-    if not current:
-        return spark.createDataFrame(
-            [], "user_id long, n long, sum_cents long, max_cents long"
+    with merged_stream(updated, "xw08:stats_merge", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [], "user_id long, n long, sum_cents long, max_cents long"
+            )
+        return (
+            state.select("user_id", "n", "sum_cents", "max_cents")
+            .orderBy("user_id")
+            .localCheckpoint(eager=True)
         )
-    out = (
-        spark.read.parquet(current[0])
-        .select("user_id", "n", "sum_cents", "max_cents")
-        .orderBy("user_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 def xw08(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1783,10 +1722,6 @@ def xw09(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "checksum", "incremental"),
 )
 def xw10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     stream = read_events_stream(spark, sf_dir)
     # Per-field NULL sentinel, mirroring xz21: concat_ws SKIPS null parts
     # while the oracle's '||' propagates NULL — a NULL-bearing row must
@@ -1816,44 +1751,26 @@ def xw10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's HUGEINT is exact) — state and output stay 128-bit.
     enriched = stream.select(h.cast("decimal(38,0)").alias("h"))
 
-    root = tempfile.mkdtemp(prefix="xw10_chk_")
-    current: list[str] = []
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = batch.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("h").cast("decimal(38,0)").alias("checksum"),
         )
-        if current:
-            stored = spark.read.parquet(current[0])
-            part = (
-                stored.unionByName(part)
-                .agg(
-                    F.sum("n_rows").cast("bigint").alias("n_rows"),
-                    F.sum("checksum").cast("decimal(38,0)").alias("checksum"),
-                )
-            )
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(part, "xw10:checksum_part", seen=plan_seen)
-        part.write.mode("overwrite").parquet(target)
-        current[:] = [target]
+        if prev is None:
+            return part
+        return prev.unionByName(part).agg(
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
+            F.sum("checksum").cast("decimal(38,0)").alias("checksum"),
+        )
 
-    run_foreach_batch(enriched, apply_batch)
-
-    if not current:
-        return spark.createDataFrame([], "tbl string, n_rows long, checksum string")
-    out = (
-        spark.read.parquet(current[0])
-        .select(
+    with merged_stream(enriched, "xw10:checksum_part", step) as state:
+        if state is None:
+            return spark.createDataFrame([], "tbl string, n_rows long, checksum string")
+        return state.select(
             F.lit("events").alias("tbl"),
             "n_rows",
             F.col("checksum").cast("string").alias("checksum"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+        ).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1878,8 +1795,8 @@ def xw10(spark: SparkSession, sf_dir: str) -> DataFrame:
         "micro-batch reduces to O(days-in-batch) stat partials "
         "(count/min/max/sum — every one associative and commutative), "
         "merged into the versioned standing store by the same algebra "
-        "(st08/xk03's idiom: write v{batch_id}, driver holds only the "
-        "version pointer, retries idempotent). Because the merge is "
+        "(the merged_stream skeleton: the driver holds only the "
+        "version pointer, retries are replay-safe). Because the merge is "
         "pure monoid algebra the final manifest is micro-batch-layout "
         "invariant and equals the batch-built manifest EXACTLY — so "
         "this query checks against yl01's own oracle minus the NDV "
@@ -1891,15 +1808,7 @@ def xw10(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "maintenance", "incremental"),
 )
 def yi03(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    stream = read_events_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="yi03_manifest_")
-    current: list[str] = []  # version pointer, not state
-
-    plan_seen: set = set()  # r13: fingerprint each label once per run
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = batch.groupBy(
             F.expr("CAST(unix_micros(ts) DIV 86400000000 AS BIGINT)").alias("day")
         ).agg(
@@ -1910,37 +1819,29 @@ def yi03(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("user_id").cast("bigint").alias("max_user"),
             F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sum_cents"),
         )
-        if current:
-            stored = spark.read.parquet(current[0])
-            part = (
-                stored.unionByName(part)
-                .groupBy("day")
-                .agg(
-                    F.sum("n_rows").cast("bigint").alias("n_rows"),
-                    F.min("min_ts_us").cast("bigint").alias("min_ts_us"),
-                    F.max("max_ts_us").cast("bigint").alias("max_ts_us"),
-                    F.min("min_user").cast("bigint").alias("min_user"),
-                    F.max("max_user").cast("bigint").alias("max_user"),
-                    F.sum("sum_cents").cast("bigint").alias("sum_cents"),
-                )
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("day")
+            .agg(
+                F.sum("n_rows").cast("bigint").alias("n_rows"),
+                F.min("min_ts_us").cast("bigint").alias("min_ts_us"),
+                F.max("max_ts_us").cast("bigint").alias("max_ts_us"),
+                F.min("min_user").cast("bigint").alias("min_user"),
+                F.max("max_user").cast("bigint").alias("max_user"),
+                F.sum("sum_cents").cast("bigint").alias("sum_cents"),
             )
-        target = os.path.join(root, f"v{batch_id}")
-        record_batch_plan(part, "yi03:manifest_part", seen=plan_seen)
-        part.write.mode("overwrite").parquet(target)
-        current[:] = [target]
-
-    run_foreach_batch(stream.select("ts", "user_id", "value"), apply_batch)
-
-    if not current:
-        return spark.createDataFrame(
-            [],
-            "day long, n_rows long, min_ts_us long, max_ts_us long, "
-            "min_user long, max_user long, sum_cents long",
         )
-    out = (
-        spark.read.parquet(current[0])
-        .select("day", "n_rows", "min_ts_us", "max_ts_us", "min_user", "max_user", "sum_cents")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+
+    stream = read_events_stream(spark, sf_dir).select("ts", "user_id", "value")
+    with merged_stream(stream, "yi03:manifest_part", step) as state:
+        if state is None:
+            return spark.createDataFrame(
+                [],
+                "day long, n_rows long, min_ts_us long, max_ts_us long, "
+                "min_user long, max_user long, sum_cents long",
+            )
+        return state.select(
+            "day", "n_rows", "min_ts_us", "max_ts_us", "min_user", "max_user", "sum_cents"
+        ).localCheckpoint(eager=True)

@@ -482,8 +482,9 @@ def test_census_log_compaction(spark, sf_dir, tmp_path_factory, monkeypatch):
         .parquet(root)
     )
     monkeypatch.setattr(zfops, "ZF02_COMPACT_EVERY", 2)
-    r, _stores, state_parts = zfops.run_lineage_ingest(
-        spark, stream, label="zf02ct"
+    r = str(tmp_path_factory.mktemp("census_log_scratch"))
+    _stores, state_parts = zfops.run_lineage_ingest(
+        spark, stream, r, label="zf02ct"
     )
     try:
         # K=2 over 5 triggers: compactions at b1 (covers 0-1) and b3

@@ -1016,6 +1016,25 @@ def test_versioned_state_replay_safe(spark, tmp_path):
     got = {(r.k, r.n) for r in spark.read.parquet(cur[0]).collect()}
     assert got == {("a", 3), ("b", 6)}
 
+    # The same re-deliveries through merged_stream's per-batch handler:
+    # the state equals a single delivery of each batch.
+    from spotify_tags_etl_spark.streaming.ops import VersionedMerge
+
+    def step(batch, prev):
+        if prev is None:
+            return batch
+        return prev.unionByName(batch).groupBy("k").agg(F.sum("n").alias("n"))
+
+    def run(deliveries, sub):
+        handler = VersionedMerge(spark, os.path.join(root, sub), "replay:merge", step)
+        for rows, batch_id in deliveries:
+            handler(spark.createDataFrame(rows, "k string, n long"), batch_id)
+        return {(r.k, r.n) for r in handler.state().collect()}
+
+    b0, b1 = [("a", 1)], [("a", 2), ("b", 5)]
+    replayed = run([(b0, 0), (b0, 0), (b1, 1), (b1, 1)], "replayed")
+    assert replayed == run([(b0, 0), (b1, 1)], "single") == {("a", 3), ("b", 5)}
+
 
 def test_zf02_short_doc_stream(spark, sf_dir, tmp_path_factory):
     """Regression (r9 advice): a micro-batch containing a doc with

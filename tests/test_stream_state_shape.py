@@ -283,3 +283,42 @@ def test_every_registered_streaming_query_is_pinned():
     }
     unpinned = streaming - set(EXPECTED_STATE_SHAPE) - batch_expressed
     assert not unpinned, f"streaming queries without a state-shape pin: {sorted(unpinned)}"
+
+
+def test_first_merge_trigger_is_fingerprinted(spark, sf_dir, tmp_path):
+    """A multi-batch run takes two micro-batch plan shapes: the first
+    trigger (no standing state, ``merged = part``) and every later one
+    (the partial merged into the previous version). The skeleton
+    fingerprints each once, so the merge shape — with its union-merge
+    exchange — is pinned too, not only batch 0's."""
+    import os
+    import time
+
+    from spotify_tags_etl_spark.operators.zaops import streaming_preference_pairs
+    from spotify_tags_etl_spark.sources.tpch import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    root = str(tmp_path / "docs")
+    os.makedirs(root)
+    for i in range(2):
+        p = os.path.join(root, f"part-{i}.parquet")
+        docs.where(docs.doc_id % 2 == i).select("doc_id").toPandas().to_parquet(
+            p, index=False
+        )
+        now = time.time() + i
+        os.utime(p, (now, now))
+    stream = (
+        spark.readStream.schema(spark.read.parquet(root).schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(root)
+    )
+    sops.MICRO_PLAN_LOG.clear()
+    streaming_preference_pairs(spark, stream)
+    rendered = [fp for label, fp in sops.MICRO_PLAN_LOG if label == "za04:pairs_merge"]
+    assert len(rendered) == 2  # one per shape, each rendered once
+    first = EXPECTED_MICRO_PLANS["za04_stream_preference_pairs"]["za04:pairs_merge"][0]
+    shapes = _observed_micro_plans()["za04:pairs_merge"]
+    assert first in shapes and len(shapes) == 2
+    (merge,) = [fp for fp in shapes if fp != first]
+    assert merge["exchanges"] == first["exchanges"] + 1  # the union-merge groupBy

@@ -139,6 +139,48 @@ def test_foreach_batch_enrichment_sink(spark, sf_dir, multi_file_events, tmp_pat
     assert total == load_table(spark, sf_dir, "events").count()
 
 
+def test_merged_stream_removes_scratch_root(spark, multi_file_events, tmp_path, tmp_path_factory):
+    """The versioned-merge skeleton owns its scratch root and removes it
+    on every exit: a normal multi-batch run, a stream that never
+    triggers (the early empty-state return), and a step that raises."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from spotify_tags_etl_spark.streaming.ops import merged_stream
+
+    def count_step(batch, prev):
+        part = batch.agg(F.count(F.lit(1)).alias("n"))
+        if prev is None:
+            return part
+        return prev.unionByName(part).agg(F.sum("n").alias("n"))
+
+    def failing_step(batch, prev):
+        raise ValueError("step failed")
+
+    empty_dir = str(tmp_path_factory.mktemp("empty_stream"))
+    n_events = spark.read.parquet(multi_file_events).count()
+    saved = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path)
+    try:
+        stream = _read_stream_dir(spark, multi_file_events)
+        with merged_stream(stream, "toy:count", count_step) as state:
+            assert state.collect()[0]["n"] == n_events
+        assert os.listdir(tmp_path) == []
+
+        empty = spark.readStream.schema("event_id long").parquet(empty_dir)
+        with merged_stream(empty, "toy:count", count_step) as state:
+            assert state is None
+        assert os.listdir(tmp_path) == []
+
+        with pytest.raises(StreamingQueryException):
+            with merged_stream(_read_stream_dir(spark, multi_file_events), "toy:fail", failing_step):
+                pass
+        assert os.listdir(tmp_path) == []
+    finally:
+        tempfile.tempdir = saved
+
+
 def test_stream_stream_join_across_batches(spark, sf_dir, multi_file_events):
     """Stream-stream interval join over time-ordered micro-batches equals
     the batch range join: pairs spanning a batch boundary (error in one
