@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from spotify_tags_etl_spark.plans.registry import register
 from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
+from spotify_tags_etl_spark.functions.vecexpr import cosine, l2norm
 from spotify_tags_etl_spark.sources.tpch import load_table
 
 N_HASHES = 8
@@ -422,10 +423,9 @@ def dd04(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-# One definition of the cross-engine in-order dot product (see
-# operators/similarity.py) — a drifting second copy would silently break
-# the other family's bit-exact parity guarantee.
-from spotify_tags_etl_spark.operators.similarity import _DOT as _COS_DOT  # noqa: E402
+# One definition of the cross-engine in-order dot product (the double
+# fold in functions/vecexpr.py; its DuckDB twin in operators/similarity.py)
+# — a drifting second copy would silently break bit-exact parity.
 from spotify_tags_etl_spark.operators.similarity import _ORACLE_DOT as _COS_DOT_DUCK  # noqa: E402
 _COS_THRESH = 0.30  # synthetic 64-dim cluster embeddings: within-label max ≈ 0.47, p99 ≈ 0.295
 
@@ -455,15 +455,13 @@ _COS_THRESH = 0.30  # synthetic 64-dim cluster embeddings: within-label max ≈ 
 )
 def dd05(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out_scan(load_table(spark, sf_dir, "embeddings"), "vec_id")  # r12 §14
-    nrm = F.sqrt(F.expr(_COS_DOT.format(a="embedding", b="embedding")))
-    e = emb.select("vec_id", "label", "embedding", nrm.alias("nrm"))
+    e = emb.select("vec_id", "label", "embedding", l2norm("embedding").alias("nrm"))
     a = e.select(F.col("vec_id").alias("d1"), F.col("label").alias("lbl"), F.col("embedding").alias("v1"), F.col("nrm").alias("n1"))
     b = e.select(F.col("vec_id").alias("d2"), F.col("label").alias("lbl"), F.col("embedding").alias("v2"), F.col("nrm").alias("n2"))
-    cos = F.expr(_COS_DOT.format(a="v1", b="v2")) / F.nullif(F.col("n1") * F.col("n2"), F.lit(0.0))
     return (
         a.join(b, "lbl")
         .where(F.col("d1") < F.col("d2"))
-        .withColumn("cosine", cos)
+        .withColumn("cosine", cosine("v1", "v2", "n1", "n2"))
         .where(F.col("cosine") >= _COS_THRESH)
         .select("d1", "d2", F.round("cosine", 6).alias("cosine_r"))
     )

@@ -3,7 +3,7 @@
 Two paths, both pure DataFrame algebra:
 
 * brute-force cosine top-k — the exact baseline: query-set × corpus join,
-  sequential-fold dot product (``F.aggregate`` over zipped arrays —
+  sequential-fold dot product (``functions/vecexpr.dot`` —
   bit-identical to DuckDB's ``list_dot_product``, both are in-order
   double folds), window top-k;
 * hyperplane-LSH-bucketed ANN — the scale path: sign-signature buckets
@@ -23,19 +23,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spotify_tags_etl_spark.functions.hashing import hash_frac, hash_frac_sql
+from spotify_tags_etl_spark.functions.vecexpr import (
+    cosine,
+    dot,
+    dot_sql,
+    l2norm,
+    sq_l2_int64_sql,
+)
 from spotify_tags_etl_spark.plans.registry import register
 from spotify_tags_etl_spark.sources.tpch import load_table
-
-#: In-order double fold — same reduction sequence as DuckDB list_dot_product.
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-
-
-def dot(a: str, b: str):
-    return F.expr(_DOT.format(a=a, b=b))
-
-
-def l2norm(a: str):
-    return F.sqrt(F.expr(_DOT.format(a=a, b=a)))
 
 
 def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
@@ -52,7 +48,7 @@ def cosine_topk(
         F.broadcast(q)
         .crossJoin(c)
         .where(F.col("q_id") != F.col("c_id"))
-        .withColumn("cosine", dot("q_vec", "c_vec") / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0)))
+        .withColumn("cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
@@ -175,7 +171,7 @@ def lsh_bucketed_ann(corpus: DataFrame, planes: DataFrame, k: int) -> DataFrame:
         .select(
             "q_id",
             "c_id",
-            (dot("q_vec", "c_vec") / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0))).alias("cosine"),
+            cosine("q_vec", "c_vec", "q_norm", "c_norm").alias("cosine"),
         )
     )
     scored = half.select(
@@ -297,7 +293,7 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     scored = (
         with_norm(corpus, "embedding")
         .crossJoin(F.broadcast(centroids))
-        .withColumn("sim", dot("embedding", "cent_vec") / F.nullif(F.col("_norm") * F.col("cent_norm"), F.lit(0.0)))
+        .withColumn("sim", cosine("embedding", "cent_vec", "_norm", "cent_norm"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cent_id"))
     return (
@@ -315,7 +311,7 @@ def ivf_ann(corpus: DataFrame, centroids: DataFrame, query_ids, k: int = IVF_K, 
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"), F.col("_norm").alias("q_norm")
     )
     probe_scored = queries.crossJoin(F.broadcast(centroids)).withColumn(
-        "sim", dot("q_vec", "cent_vec") / F.nullif(F.col("q_norm") * F.col("cent_norm"), F.lit(0.0))
+        "sim", cosine("q_vec", "cent_vec", "q_norm", "cent_norm")
     )
     wp = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("cent_id"))
     probes = (
@@ -329,7 +325,7 @@ def ivf_ann(corpus: DataFrame, centroids: DataFrame, query_ids, k: int = IVF_K, 
     cand = (
         assigned.join(F.broadcast(probes), "cent_id")
         .where(F.col("q_id") != F.col("vec_id"))
-        .withColumn("cosine", dot("q_vec", "embedding") / F.nullif(F.col("q_norm") * F.col("_norm"), F.lit(0.0)))
+        .withColumn("cosine", cosine("q_vec", "embedding", "q_norm", "_norm"))
     )
     wk = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
@@ -627,7 +623,7 @@ _KM_ARGMIN = (
     " named_struct('d2', CAST('Infinity' AS DOUBLE), 'cluster', -1),"
     " (acc, s) -> IF(s.d2 < acc.d2, s, acc)"
     ")"
-).format(dot=_DOT.format(a="qvd", b="c.cvec"))
+).format(dot=dot_sql("qvd", "c.cvec"))
 
 
 def _km_assign(v: DataFrame, cents: DataFrame) -> DataFrame:
@@ -888,15 +884,9 @@ def xe01(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("cw")).alias("cb"))
     )
 
-    def _pq_dist(qcol: str, ccol: str) -> str:
-        return (
-            f"aggregate(zip_with({qcol}, c.{ccol}, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0 AS BIGINT), (a, v) -> a + v)"
-        )
-
     def _argmin(qcol: str, ccol: str):
         return F.expr(
-            f"array_min(transform(cb, c -> struct({_pq_dist(qcol, ccol)} AS d, c.cw_id AS id)))"
+            f"array_min(transform(cb, c -> struct({sq_l2_int64_sql(qcol, f'c.{ccol}')} AS d, c.cw_id AS id)))"
         )
 
     return (
@@ -1263,25 +1253,19 @@ def xe04(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("cw")).alias("cb"))
     )
 
-    def _dist(qcol: str, ccol: str) -> str:
-        return (
-            f"aggregate(zip_with({qcol}, c.{ccol}, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0 AS BIGINT), (a, v) -> a + v)"
-        )
-
     with_cb = base.crossJoin(F.broadcast(cb_row))
     # corpus codes: per-subspace argmin over the broadcast codebook (xe01)
     codes = with_cb.select(
         "vec_id",
-        F.expr(f"array_min(transform(cb, c -> struct({_dist('q0','c0')} AS d, c.cw_id AS id))).id").alias("code0"),
-        F.expr(f"array_min(transform(cb, c -> struct({_dist('q1','c1')} AS d, c.cw_id AS id))).id").alias("code1"),
+        F.expr(f"array_min(transform(cb, c -> struct({sq_l2_int64_sql('q0', 'c.c0')} AS d, c.cw_id AS id))).id").alias("code0"),
+        F.expr(f"array_min(transform(cb, c -> struct({sq_l2_int64_sql('q1', 'c.c1')} AS d, c.cw_id AS id))).id").alias("code1"),
     )
     # query ADC tables: cw_id-ordered arrays of the 16 per-subspace distances
     # (cb is sorted by cw_id = 0..15, so position i+1 holds codeword i)
     qtables = with_cb.where(F.col("vec_id") % _BQ_QSTRIDE == 0).select(
         F.col("vec_id").alias("q_id"),
-        F.expr(f"transform(cb, c -> {_dist('q0','c0')})").alias("t0"),
-        F.expr(f"transform(cb, c -> {_dist('q1','c1')})").alias("t1"),
+        F.expr(f"transform(cb, c -> {sq_l2_int64_sql('q0', 'c.c0')})").alias("t0"),
+        F.expr(f"transform(cb, c -> {sq_l2_int64_sql('q1', 'c.c1')})").alias("t1"),
     )
     scored = (
         codes.crossJoin(F.broadcast(qtables))
@@ -1455,10 +1439,7 @@ def prefix_rerank_topk(
     cand = coarse.withColumn("crank", F.row_number().over(wc)).where(
         F.col("crank") <= RERANK_DEPTH
     )
-    fine = cand.withColumn(
-        "cosine",
-        dot("q_vec", "c_vec") / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0)),
-    )
+    fine = cand.withColumn("cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm"))
     wf = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         fine.withColumn("rank", F.row_number().over(wf))

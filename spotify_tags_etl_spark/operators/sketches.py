@@ -32,6 +32,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -192,14 +193,10 @@ def xz06(spark: SparkSession, sf_dir: str) -> DataFrame:
 def xz11(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # functionType passed explicitly: this module runs under
-    # `from __future__ import annotations`, which stringifies the
-    # (pd.Series) -> float hints pandas_udf would otherwise sniff to
-    # classify the UDF as GROUPED_AGG.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def mad(cents):
+    @pandas_udf("double")
+    def mad(cents: pd.Series) -> float:
         a = cents.to_numpy(dtype="int64")
         return float(np.median(np.abs(a - np.median(a))))
 

@@ -541,7 +541,8 @@ _KNN_K = 5
     tags=("similarity", "eval", "llm-pipeline"),
 )
 def yk01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spotify_tags_etl_spark.operators.similarity import dot, with_norm
+    from spotify_tags_etl_spark.functions.vecexpr import cosine
+    from spotify_tags_etl_spark.operators.similarity import with_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = with_norm(
@@ -564,10 +565,7 @@ def yk01(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q)
         .crossJoin(c)
         .where(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "cosine",
-            dot("q_vec", "c_vec") / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0)),
-        )
+        .withColumn("cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm"))
     )
     wk = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     topk = (

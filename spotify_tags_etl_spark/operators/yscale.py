@@ -1268,11 +1268,10 @@ def ye02(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(queries x corpus x dim) rows (12.8M at sf0.1) shuffled through
     # a groupBy — when both sides are fixed-width integer vectors. Now:
     # quantize each side once per row (yv02's hoist), broadcast the
-    # query sample, and score each pair with one Arrow einsum
-    # (functions/arrowdot.py — integer sums, bit-identical). The
-    # shuffle carries O(queries x corpus) pair rows, dim never explodes.
-    from spotify_tags_etl_spark.functions.arrowdot import pair_dot_int64
-    from spotify_tags_etl_spark.functions.vecexpr import quantize_long
+    # query sample, and score each pair with the exact int64 pair dot
+    # (functions/vecexpr.py). The shuffle carries O(queries x corpus)
+    # pair rows, dim never explodes.
+    from spotify_tags_etl_spark.functions.vecexpr import pair_dot_int64, quantize_long
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qv = emb.select("vec_id", quantize_long("embedding").alias("qe"))

@@ -238,18 +238,15 @@ def yv02(spark: SparkSession, sf_dir: str) -> DataFrame:
     # best-relevant key, once for the rank count) — two scans, two pair
     # scorings, three exchanges — and re-ran floor(cast(x)*127) on BOTH
     # vectors inside every pair's fold (O(pairs x dim) casts instead of
-    # O(rows x dim)). Now: quantize each SIDE once per row
-    # (vecexpr.quantize_long), score each pair with the minimal x*y
-    # fold, and derive BOTH the best-relevant key and the rank in a
-    # single partition-by-qid pass: bkey as a window max over relevant
-    # pairs, rank as the groupBy that reuses the window's partitioning
-    # (no extra exchange). Queries with no relevant candidate had no
-    # `rel` row and were dropped by the old inner join — the bkey IS
-    # NULL filter reproduces that exactly. (Unrolling the fold into a
-    # flat 64-term expression was measured too: the executed stage is
-    # faster but per-run planning over the 64x wider expression tree
-    # costs more than it saves — see OPTIMIZATION_r12.md.)
-    from spotify_tags_etl_spark.functions.vecexpr import quantize_long
+    # O(rows x dim)). Now: quantize each SIDE once per row, score each
+    # pair with the exact int64 pair dot (functions/vecexpr.py holds the
+    # kernels and their measured evidence), and derive BOTH the
+    # best-relevant key and the rank in a single partition-by-qid pass:
+    # bkey as a window max over relevant pairs, rank as the groupBy that
+    # reuses the window's partitioning (no extra exchange). Queries with
+    # no relevant candidate had no `rel` row and were dropped by the old
+    # inner join — the bkey IS NULL filter reproduces that exactly.
+    from spotify_tags_etl_spark.functions.vecexpr import pair_dot_int64, quantize_long
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") % YV02_STRIDE == 0).select(
@@ -262,12 +259,6 @@ def yv02(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("clabel"),
         quantize_long("embedding").alias("ce8"),
     )
-    # r13: the pair dot runs as one numpy einsum per Arrow batch
-    # instead of an interpreted per-element fold (guide §4.2; integer
-    # sums — bit-identical; measured 1.90 -> 1.43 s interleaved A/B —
-    # functions/arrowdot.py).
-    from spotify_tags_etl_spark.functions.arrowdot import pair_dot_int64
-
     scored = pair_dot_int64(
         c.join(F.broadcast(q), F.col("cid") != F.col("qid")).select(
             "qid", "qlabel", "cid", "clabel", "qe8", "ce8"

@@ -48,8 +48,14 @@ from spotify_tags_etl_spark.operators.ytrain import (
 )
 from spotify_tags_etl_spark.plans.planmetrics import record_plan
 from spotify_tags_etl_spark.plans.registry import register
-from spotify_tags_etl_spark.functions.arrowdot import pair_dot_int64
 from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
+from spotify_tags_etl_spark.functions.vecexpr import (
+    cosine_at_least_int64,
+    pair_dot_int64,
+    project_int64,
+    quantize_long,
+    self_dot_int64,
+)
 from spotify_tags_etl_spark.sources.tpch import load_table
 
 # ---------------------------------------------------------------------------
@@ -517,24 +523,10 @@ def zc03_project(emb: DataFrame) -> DataFrame:
     fan it out (zc03_corpus_and_edges) checkpoint the result."""
     dims = ZC03_BITS * ZC03_TABLES
     wrows = [[_zc03_w(i, j) for i in range(1, 65)] for j in range(1, dims + 1)]
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 127) AS BIGINT))"
-        ).alias("q"),
+    q = emb.select("vec_id", quantize_long("embedding").alias("q"))
+    p = q.select(
+        "vec_id", "q", self_dot_int64("q").alias("na"), *project_int64("q", wrows)
     )
-    proj_cols = [
-        F.expr(
-            f"aggregate(zip_with(q, array({','.join(str(w) for w in wrows[j - 1])}),"
-            " (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias(f"p{j}")
-        for j in range(1, dims + 1)
-    ]
-    na = F.expr(
-        "aggregate(zip_with(q, q, (x, y) -> x * y), CAST(0 AS BIGINT),"
-        " (acc, v) -> acc + v)"
-    ).alias("na")
-    p = q.select("vec_id", "q", na, *proj_cols)
     bks = [
         F.expr(
             " + ".join(
@@ -572,11 +564,7 @@ def zc03_edges_from_b(b: DataFrame) -> DataFrame:
     )
     b1 = b.select(F.col("vec_id").alias("d1"), F.col("q").alias("q1"), F.col("na").alias("na1"))
     b2 = b.select(F.col("vec_id").alias("d2"), F.col("q").alias("q2"), F.col("na").alias("na2"))
-    t2 = ZC03_T_PPM * ZC03_T_PPM
-    # r13: the exact-verify dot runs as ONE numpy einsum per Arrow
-    # batch instead of an interpreted per-element fold (guide §4.2;
-    # integer sums, so the result is bit-identical — see
-    # functions/arrowdot.py for the measured evidence).
+    # exact int64 kernels — evidence in functions/vecexpr.py
     dots = pair_dot_int64(
         pairs.join(b1, "d1").join(b2, "d2").select(
             "d1", "d2", "na1", "na2", "q1", "q2"
@@ -585,14 +573,7 @@ def zc03_edges_from_b(b: DataFrame) -> DataFrame:
         "q2",
         "dp",
     )
-    edges = dots.where(
-        (F.col("dp") > 0)
-        & (
-            F.expr("CAST(dp AS DECIMAL(38,0)) * dp * 1000000000000")
-            >= F.expr(f"{t2} * (CAST(na1 AS DECIMAL(38,0)) * na2)")
-        )
-    ).select("d1", "d2")
-    return edges
+    return dots.where(cosine_at_least_int64(ZC03_T_PPM)).select("d1", "d2")
 
 
 # ---------------------------------------------------------------------------

@@ -40,8 +40,14 @@ from spotify_tags_etl_spark.operators.dedup import _minhash_ctes
 from spotify_tags_etl_spark.operators.zcops import _zc03_ctes
 from spotify_tags_etl_spark.plans.planmetrics import record_plan
 from spotify_tags_etl_spark.plans.registry import register
-from spotify_tags_etl_spark.functions.arrowdot import pair_dot_int64
 from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
+from spotify_tags_etl_spark.functions.vecexpr import (
+    cosine_at_least_int64,
+    pair_dot_int64,
+    project_int64,
+    quantize_long,
+    self_dot_int64,
+)
 from spotify_tags_etl_spark.sources.tpch import load_table
 
 # ---------------------------------------------------------------------------
@@ -344,22 +350,8 @@ def zd02_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_zc03_w(i, j) for i in range(1, 65)] for j in range(1, _ZD02_DIMS + 1)
     ]
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 127) AS BIGINT))"
-        ).alias("q"),
-    )
-    proj = q.select(
-        "vec_id",
-        *[
-            F.expr(
-                f"aggregate(zip_with(q, array({','.join(str(w) for w in wrows[j - 1])}),"
-                " (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-            ).alias(f"p{j}")
-            for j in range(1, _ZD02_DIMS + 1)
-        ],
-    )
+    q = emb.select("vec_id", quantize_long("embedding").alias("q"))
+    proj = q.select("vec_id", *project_int64("q", wrows))
     # One corpus-projection scan feeds both the corpus side and the
     # centroid side — checkpoint instead of re-deriving (zc03's
     # discipline; at 100 TB this is the persisted projection table).
@@ -648,24 +640,10 @@ def zd03(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan = pl0.join(F.broadcast(best), "_k").select("n", "bits", "tables", "_k")
 
     # --- corpus side: 32 stripe projections, bits-gated buckets
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 127) AS BIGINT))"
-        ).alias("q"),
-    )
-    proj_cols = [
-        F.expr(
-            f"aggregate(zip_with(q, array({','.join(str(w) for w in wrows[j - 1])}),"
-            " (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias(f"p{j}")
-        for j in range(1, dims + 1)
-    ]
-    na = F.expr(
-        "aggregate(zip_with(q, q, (x, y) -> x * y), CAST(0 AS BIGINT),"
-        " (acc, v) -> acc + v)"
-    ).alias("na")
-    p = q.select("vec_id", "q", na, *proj_cols).withColumn("_k", F.lit(1))
+    q = emb.select("vec_id", quantize_long("embedding").alias("q"))
+    p = q.select(
+        "vec_id", "q", self_dot_int64("q").alias("na"), *project_int64("q", wrows)
+    ).withColumn("_k", F.lit(1))
     bks = [
         F.expr(
             " + ".join(
@@ -707,9 +685,7 @@ def zd03(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = b.select(
         F.col("vec_id").alias("d2"), F.col("q").alias("q2"), F.col("na").alias("na2")
     )
-    t2 = _ZD03_T_PPM * _ZD03_T_PPM
-    # r13: exact-verify dot as one numpy einsum per Arrow batch (guide
-    # §4.2; integer sums — bit-identical; functions/arrowdot.py).
+    # exact int64 kernels — evidence in functions/vecexpr.py
     dups = (
         pair_dot_int64(
             pairs.join(b1, "d1").join(b2, "d2").select(
@@ -719,13 +695,7 @@ def zd03(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q2",
             "dp",
         )
-        .where(
-            (F.col("dp") > 0)
-            & (
-                F.expr("CAST(dp AS DECIMAL(38,0)) * dp * 1000000000000")
-                >= F.expr(f"{t2} * (CAST(na1 AS DECIMAL(38,0)) * na2)")
-            )
-        )
+        .where(cosine_at_least_int64(_ZD03_T_PPM))
         .groupBy("d2")
         .agg(F.count(F.lit(1)).alias("dn"))
     )

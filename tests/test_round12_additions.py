@@ -709,7 +709,7 @@ ZF01P_EXPECTED_LOOP_PLANS = {
     "zf01p:importance_census": [{"exchanges": 1}],
     "zf01p:exact_keeps": [{"exchanges": 1}],
     "zf01p:near_drops": [{"exchanges": 4}],
-    # r13: exact-verify dot as one MapInArrow numpy pass (arrowdot.py)
+    # r13: exact-verify dot as one MapInArrow numpy pass (vecexpr.pair_dot_int64)
     "zf01p:sem_drops": [{"exchanges": 2, "map_in_arrow": 1}],
     "zf01p:contam": [{"exchanges": 2}],
     "zf01p:offtarget": [{"exchanges": 1}],
@@ -809,8 +809,7 @@ def test_margins_artifact_end_to_end_carry_forward(spark, parted_corpus):
 
 
 # ---------------------------------------------------------------------------
-# r12 OPTIMIZATION round: process-scoped artifact warehouse + unrolled
-# fixed-dim vector arithmetic (functions/vecexpr.py)
+# r12 OPTIMIZATION round: process-scoped artifact warehouse
 # ---------------------------------------------------------------------------
 
 
@@ -841,37 +840,6 @@ def test_warehouse_root_is_process_scoped(monkeypatch):
     # env override wins (tests pinning cross-process behavior use this)
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", "/tmp/wh_override_probe")
     assert artifactio.warehouse_root() == "/tmp/wh_override_probe"
-
-
-def test_yv02_hoisted_quantize_matches_inline_fold(spark):
-    """yv02's r12 rewrite hoists floor(cast(x)*127) out of the pair
-    fold: quantize_long per SIDE then a bare x*y fold must equal the
-    old form that quantized both elements inside every pair's lambda
-    (covers negatives, zeros, fractional magnitudes)."""
-    from pyspark.sql import functions as F
-
-    from spotify_tags_etl_spark.functions.vecexpr import quantize_long
-
-    rows = [
-        ([0.5, -0.25, 0.0, 1.0], [0.999, -0.999, 0.123, -0.123]),
-        ([-1.0, 0.007874, -0.007874, 0.25], [0.5, 0.5, -0.5, -0.25]),
-    ]
-    df = spark.createDataFrame(rows, "a: array<float>, b: array<float>")
-    got = df.select(
-        quantize_long("a").alias("qa"), quantize_long("b").alias("qb"), "a", "b"
-    ).select(
-        F.expr(
-            "aggregate(zip_with(a, b, (x, y) -> "
-            "CAST(floor(CAST(x AS DOUBLE) * 127) AS BIGINT)"
-            " * CAST(floor(CAST(y AS DOUBLE) * 127) AS BIGINT)), 0L,"
-            " (acc, v) -> acc + v)"
-        ).alias("ref"),
-        F.expr(
-            "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-        ).alias("hoisted"),
-    ).collect()
-    for r in got:
-        assert r.ref == r.hoisted
 
 
 # ---------------------------------------------------------------------------

@@ -340,7 +340,7 @@ EXPECTED_LOOP_PLANS = {
     "zd06_semantic_dedup_keepset": {
         # r12 §14: + the scale-adaptive embeddings fan-out exchange
         "zc03:projected_corpus": [{"exchanges": 1}],
-        # r13: + the MapInArrow exact-verify dot (functions/arrowdot.py)
+        # r13: + the MapInArrow exact-verify dot (vecexpr.pair_dot_int64)
         "zd06:dup_edges": [{"exchanges": 1, "map_in_arrow": 1}],
         "zd06:round0": [{"exchanges": 2, "sort_merge_joins": 1}],
         # two round shapes: the steady-state round and the final
@@ -797,7 +797,7 @@ ZF01_EXPECTED_LOOP_PLANS = {
     # the fan is a no-op and the stage keeps its five exchanges.
     "zf01:near_drops": [{"exchanges": 7}],
     # r13: the exact-verify dot is one MapInArrow numpy pass (guide
-    # §4.2, functions/arrowdot.py) instead of an interpreted fold
+    # §4.2, vecexpr.pair_dot_int64) instead of an interpreted fold
     "zf01:sem_drops": [{"exchanges": 2, "map_in_arrow": 1}],
     "zf01:contam": [{"exchanges": 3}],
     "zf01:offtarget": [{"exchanges": 1}],
