@@ -14,8 +14,8 @@ and ``cosine_at_least_int64`` (the exact-cosine verify predicate).
 **double — sequential left fold.** ``dot``/``l2norm``/``cosine`` and
 the ``dot_sql`` text fold ``acc + x*y`` in element order. Float
 addition is NOT associative, so this order is part of the result: it
-is the order of DuckDB's ``list_dot_product``, and the oracles pin it
-bit-for-bit. Never route a double fold through a vectorized or
+is the order of DuckDB's ``list_dot_product`` (``oracle_dot_sql``, the
+oracles' side), and the oracles pin it bit-for-bit. Never route a double fold through a vectorized or
 reordered kernel.
 
 Measured evidence behind the spellings (do not change them without
@@ -172,6 +172,11 @@ def dot_sql(a: str, b: str) -> str:
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
+
+
+def oracle_dot_sql(a: str, b: str) -> str:
+    """DuckDB text of the same in-order double dot, for the oracles."""
+    return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
 
 
 def dot(a: str, b: str) -> Column:

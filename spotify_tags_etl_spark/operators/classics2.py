@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_tags_etl_spark.operators.classics import _rev_micros
 from spotify_tags_etl_spark.plans.registry import register
 from spotify_tags_etl_spark.sources.tpch import load_table
 
@@ -42,17 +43,6 @@ _REV_MICROS_SQL = (
     "SUM(CAST(round(l_extendedprice * 100) AS BIGINT)"
     " * (10000 - CAST(round(l_discount * 10000) AS BIGINT)))"
 )
-
-
-def _rev_micros():
-    # DECIMAL(38,0) accumulator: Spark SUM(BIGINT) wraps near SF40+ fact
-    # volumes; the oracle's SUM is HUGEINT-exact (see classics.py twin).
-    return F.sum(
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("bigint")
-            * (F.lit(10000) - F.round(F.col("l_discount") * 10000).cast("bigint"))
-        ).cast("decimal(38,0)")
-    )
 
 
 # ---------------------------------------------------------------------------

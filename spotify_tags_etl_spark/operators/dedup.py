@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from spotify_tags_etl_spark.plans.registry import register
 from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
-from spotify_tags_etl_spark.functions.vecexpr import cosine, l2norm
+from spotify_tags_etl_spark.functions.vecexpr import cosine, l2norm, oracle_dot_sql
 from spotify_tags_etl_spark.sources.tpch import load_table
 
 N_HASHES = 8
@@ -423,10 +423,6 @@ def dd04(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-# One definition of the cross-engine in-order dot product (the double
-# fold in functions/vecexpr.py; its DuckDB twin in operators/similarity.py)
-# — a drifting second copy would silently break bit-exact parity.
-from spotify_tags_etl_spark.operators.similarity import _ORACLE_DOT as _COS_DOT_DUCK  # noqa: E402
 _COS_THRESH = 0.30  # synthetic 64-dim cluster embeddings: within-label max ≈ 0.47, p99 ≈ 0.295
 
 
@@ -435,14 +431,14 @@ _COS_THRESH = 0.30  # synthetic 64-dim cluster embeddings: within-label max ≈ 
     oracle=f"""
     WITH e AS (
       SELECT vec_id, label, embedding,
-             sqrt({_COS_DOT_DUCK.format(a='embedding', b='embedding')}) AS nrm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS nrm
       FROM embeddings
     )
     SELECT a.vec_id AS d1, b.vec_id AS d2,
-           ROUND({_COS_DOT_DUCK.format(a='a.embedding', b='b.embedding')} / NULLIF(a.nrm * b.nrm, 0), 6)
+           ROUND({oracle_dot_sql('a.embedding', 'b.embedding')} / NULLIF(a.nrm * b.nrm, 0), 6)
              AS cosine_r
     FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_COS_DOT_DUCK.format(a='a.embedding', b='b.embedding')} / NULLIF(a.nrm * b.nrm, 0) >= {_COS_THRESH}
+    WHERE {oracle_dot_sql('a.embedding', 'b.embedding')} / NULLIF(a.nrm * b.nrm, 0) >= {_COS_THRESH}
     """,
     doc=(
         "Embedding-cosine near-dup pairs, blocked by label (cluster id): "

@@ -28,6 +28,7 @@ from spotify_tags_etl_spark.functions.vecexpr import (
     dot,
     dot_sql,
     l2norm,
+    oracle_dot_sql,
     sq_l2_int64_sql,
 )
 from spotify_tags_etl_spark.plans.registry import register
@@ -58,25 +59,22 @@ def cosine_topk(
     )
 
 
-_ORACLE_DOT = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-
 @register(
     "ss01_bruteforce_cosine_topk",
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS q_id, embedding AS q_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm
       FROM embeddings WHERE vec_id < 8
     ),
     c AS (
       SELECT vec_id AS c_id, embedding AS c_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm
       FROM embeddings
     ),
     scored AS (
       SELECT q_id, c_id,
-             {_ORACLE_DOT.format(a='q_vec', b='c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
+             {oracle_dot_sql('q_vec', 'c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
       FROM q, c WHERE q_id <> c_id
     )
     SELECT q_id, c_id, rank, ROUND(cosine, 6) AS cosine_r FROM (
@@ -204,7 +202,7 @@ def _ss02_oracle() -> str:
     )
     def bucket(t: int) -> str:
         bits = ",\n               ".join(
-            f"CASE WHEN {_ORACLE_DOT.format(a='embedding', b=f'p{t * N_PLANES_PER_TABLE + i}')} >= 0"
+            f"CASE WHEN {oracle_dot_sql('embedding', f'p{t * N_PLANES_PER_TABLE + i}')} >= 0"
             f" THEN '1' ELSE '0' END"
             for i in range(N_PLANES_PER_TABLE)
         )
@@ -232,12 +230,12 @@ def _ss02_oracle() -> str:
       )
     ),
     q AS (SELECT vec_id AS q_id, embedding AS q_vec,
-                 sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm FROM embeddings),
+                 sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm FROM embeddings),
     c AS (SELECT vec_id AS c_id, embedding AS c_vec,
-                 sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm FROM embeddings),
+                 sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm FROM embeddings),
     scored AS (
       SELECT cand.q_id, cand.c_id,
-             {_ORACLE_DOT.format(a='q_vec', b='c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
+             {oracle_dot_sql('q_vec', 'c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
       FROM cand JOIN q USING (q_id) JOIN c USING (c_id)
     )
     SELECT q_id, c_id, rank, ROUND(cosine, 6) AS cosine_r FROM (
@@ -336,22 +334,22 @@ def ivf_ann(corpus: DataFrame, centroids: DataFrame, query_ids, k: int = IVF_K, 
 
 
 def _ivf_oracle() -> str:
-    d = _ORACLE_DOT
+    d = oracle_dot_sql
     return f"""
     WITH cent AS (
       SELECT vec_id AS cent_id, embedding AS cent_vec,
-             sqrt({d.format(a='embedding', b='embedding')}) AS cent_norm
+             sqrt({d('embedding', 'embedding')}) AS cent_norm
       FROM embeddings WHERE vec_id < {N_CENTROIDS}
     ),
     corpus AS (
-      SELECT vec_id, embedding, sqrt({d.format(a='embedding', b='embedding')}) AS nrm
+      SELECT vec_id, embedding, sqrt({d('embedding', 'embedding')}) AS nrm
       FROM embeddings
     ),
     assigned AS (
       SELECT vec_id, embedding, nrm, cent_id FROM (
         SELECT c.vec_id, c.embedding, c.nrm, cent.cent_id,
                ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                 ORDER BY {d.format(a='c.embedding', b='cent.cent_vec')} / NULLIF(c.nrm * cent.cent_norm, 0) DESC,
+                 ORDER BY {d('c.embedding', 'cent.cent_vec')} / NULLIF(c.nrm * cent.cent_norm, 0) DESC,
                           cent.cent_id) AS rn
         FROM corpus c, cent
       ) WHERE rn = 1
@@ -360,7 +358,7 @@ def _ivf_oracle() -> str:
       SELECT q_id, q_vec, q_norm, cent_id FROM (
         SELECT c.vec_id AS q_id, c.embedding AS q_vec, c.nrm AS q_norm, cent.cent_id,
                ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                 ORDER BY {d.format(a='c.embedding', b='cent.cent_vec')} / NULLIF(c.nrm * cent.cent_norm, 0) DESC,
+                 ORDER BY {d('c.embedding', 'cent.cent_vec')} / NULLIF(c.nrm * cent.cent_norm, 0) DESC,
                           cent.cent_id) AS rn
         FROM corpus c, cent
         WHERE c.vec_id < 8
@@ -368,9 +366,9 @@ def _ivf_oracle() -> str:
     )
     SELECT q_id, c_id, rank, ROUND(cosine, 6) AS cosine_r FROM (
       SELECT p.q_id, a.vec_id AS c_id,
-             {d.format(a='p.q_vec', b='a.embedding')} / NULLIF(p.q_norm * a.nrm, 0) AS cosine,
+             {d('p.q_vec', 'a.embedding')} / NULLIF(p.q_norm * a.nrm, 0) AS cosine,
              ROW_NUMBER() OVER (PARTITION BY p.q_id
-               ORDER BY {d.format(a='p.q_vec', b='a.embedding')} / NULLIF(p.q_norm * a.nrm, 0) DESC,
+               ORDER BY {d('p.q_vec', 'a.embedding')} / NULLIF(p.q_norm * a.nrm, 0) DESC,
                         a.vec_id) AS rank
       FROM probes p JOIN assigned a USING (cent_id)
       WHERE p.q_id <> a.vec_id
@@ -482,17 +480,17 @@ def gemm_cosine_topk(
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS q_id, embedding AS q_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm
       FROM embeddings WHERE vec_id < 8
     ),
     c AS (
       SELECT vec_id AS c_id, embedding AS c_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm
       FROM embeddings
     ),
     scored AS (
       SELECT q_id, c_id,
-             {_ORACLE_DOT.format(a='q_vec', b='c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
+             {oracle_dot_sql('q_vec', 'c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
       FROM q, c WHERE q_id <> c_id
     )
     SELECT q_id, c_id, rank, ROUND(cosine, 6) AS cosine_r FROM (
@@ -700,7 +698,7 @@ def _km_oracle() -> str:
     """Unrolled CTE chain mirroring kmeans_quantized step for step."""
     q = _KM_QSCALE
     k = _KM_K
-    dvc = _ORACLE_DOT.format(a="v.qvd", b="c.cvec")
+    dvc = oracle_dot_sql("v.qvd", "c.cvec")
     assign = (
         "SELECT vec_id, qv, qvd, dvv, cluster, d2 FROM ("
         "  SELECT v.vec_id, v.qv, v.qvd, v.dvv, c.cluster,"
@@ -721,8 +719,8 @@ def _km_oracle() -> str:
       SELECT vec_id,
              list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {q}) AS BIGINT)) AS qv,
              CAST(list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {q}) AS BIGINT)) AS DOUBLE[]) AS qvd,
-             {_ORACLE_DOT.format(a='list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * ' + str(q) + ') AS BIGINT))',
-                                 b='list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * ' + str(q) + ') AS BIGINT))')} AS dvv
+             {oracle_dot_sql('list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * ' + str(q) + ') AS BIGINT))',
+                             'list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * ' + str(q) + ') AS BIGINT))')} AS dvv
       FROM embeddings
     ),
     c0 AS (SELECT CAST(vec_id AS INT) AS cluster, qvd AS cvec, dvv AS dcc FROM v WHERE vec_id < {k}),
@@ -1039,12 +1037,12 @@ _RRF_TOP = 10
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS q_id, embedding AS q_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm
       FROM embeddings WHERE vec_id % {_BQ_QSTRIDE} = 0
     ),
     c AS (
       SELECT vec_id AS c_id, embedding AS c_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm
       FROM embeddings
     ),
     cos_rank AS (
@@ -1052,7 +1050,7 @@ _RRF_TOP = 10
         SELECT q.q_id, c.c_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.q_id
-                 ORDER BY {_ORACLE_DOT.format(a='q_vec', b='c_vec')}
+                 ORDER BY {oracle_dot_sql('q_vec', 'c_vec')}
                           / NULLIF(q_norm * c_norm, 0) DESC, c.c_id
                ) AS rk
         FROM q JOIN c ON q.q_id <> c.c_id
@@ -1292,12 +1290,12 @@ def xe04(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS q_id, embedding AS q_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm
       FROM embeddings WHERE vec_id % {_BQ_QSTRIDE} = 0
     ),
     c AS (
       SELECT vec_id AS c_id, embedding AS c_vec,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm
       FROM embeddings
     ),
     truth AS (
@@ -1305,7 +1303,7 @@ def xe04(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT q.q_id, c.c_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.q_id
-                 ORDER BY {_ORACLE_DOT.format(a='q_vec', b='c_vec')}
+                 ORDER BY {oracle_dot_sql('q_vec', 'c_vec')}
                           / NULLIF(q_norm * c_norm, 0) DESC, c.c_id
                ) AS rk
         FROM q JOIN c ON q.q_id <> c.c_id
@@ -1453,26 +1451,26 @@ def prefix_rerank_topk(
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS q_id, embedding AS q_vec, embedding[1:{PREFIX_DIMS}] AS q_pre,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm
       FROM embeddings WHERE vec_id < 8
     ),
     c AS (
       SELECT vec_id AS c_id, embedding AS c_vec, embedding[1:{PREFIX_DIMS}] AS c_pre,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm
       FROM embeddings
     ),
     coarse AS (
       SELECT q_id, c_id, q_vec, c_vec, q_norm, c_norm,
-             {_ORACLE_DOT.format(a='q_pre', b='c_pre')} AS coarse,
+             {oracle_dot_sql('q_pre', 'c_pre')} AS coarse,
              ROW_NUMBER() OVER (
                PARTITION BY q_id
-               ORDER BY {_ORACLE_DOT.format(a='q_pre', b='c_pre')} DESC, c_id
+               ORDER BY {oracle_dot_sql('q_pre', 'c_pre')} DESC, c_id
              ) AS crank
       FROM q, c WHERE q_id <> c_id
     ),
     fine AS (
       SELECT q_id, c_id,
-             {_ORACLE_DOT.format(a='q_vec', b='c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
+             {oracle_dot_sql('q_vec', 'c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
       FROM coarse WHERE crank <= {RERANK_DEPTH}
     )
     SELECT q_id, c_id, rank, ROUND(cosine, 6) AS cosine_r FROM (
@@ -1506,17 +1504,17 @@ def xe03(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS q_id, embedding AS q_vec, embedding[1:{PREFIX_DIMS}] AS q_pre,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS q_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS q_norm
       FROM embeddings WHERE vec_id < 8
     ),
     c AS (
       SELECT vec_id AS c_id, embedding AS c_vec, embedding[1:{PREFIX_DIMS}] AS c_pre,
-             sqrt({_ORACLE_DOT.format(a='embedding', b='embedding')}) AS c_norm
+             sqrt({oracle_dot_sql('embedding', 'embedding')}) AS c_norm
       FROM embeddings
     ),
     scored AS (
       SELECT q_id, c_id, q_vec, c_vec, q_norm, c_norm, q_pre, c_pre,
-             {_ORACLE_DOT.format(a='q_vec', b='c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
+             {oracle_dot_sql('q_vec', 'c_vec')} / NULLIF(q_norm * c_norm, 0) AS cosine
       FROM q, c WHERE q_id <> c_id
     ),
     exact AS (
@@ -1530,7 +1528,7 @@ def xe03(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT q_id, c_id, cosine,
              ROW_NUMBER() OVER (
                PARTITION BY q_id
-               ORDER BY {_ORACLE_DOT.format(a='q_pre', b='c_pre')} DESC, c_id
+               ORDER BY {oracle_dot_sql('q_pre', 'c_pre')} DESC, c_id
              ) AS crank
       FROM scored
     ),

@@ -4,7 +4,10 @@ shared by the batch plan ratchet (``tools/plan_audit.py`` /
 (``streaming/ops.py`` / ``tests/test_stream_state_shape.py``).
 
 Each metric counts occurrences of a plan-node substring in an executed
-physical plan's string rendering. "Worse" for the batch ratchet means
+physical plan's string rendering. The batch ratchet and the loop-stage
+and foreachBatch pins render a frame's plan before any action on it, so
+under AQE they count the initial plan: the declared shape, independent
+of runtime statistics. "Worse" for the batch ratchet means
 strictly greater than the pinned snapshot on any metric; the streaming
 pins are exact (a micro-batch plan gaining OR losing an exchange is a
 deliberate change either way).

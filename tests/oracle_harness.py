@@ -166,11 +166,13 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str)
             )
 
 
-def run_parity(spark, sf_dir: str, name: str, builder, oracle: str) -> None:
-    spark_pdf = builder(spark, sf_dir).toPandas()
+def oracle_frame(sf_dir: str, oracle: str) -> pd.DataFrame:
     con = duckdb_connect(sf_dir)
     try:
-        oracle_pdf = con.execute(oracle).fetchdf()
+        return con.execute(oracle).fetchdf()
     finally:
         con.close()
-    compare_frames(spark_pdf, oracle_pdf, name)
+
+
+def run_parity(spark, sf_dir: str, name: str, builder, oracle: str) -> None:
+    compare_frames(builder(spark, sf_dir).toPandas(), oracle_frame(sf_dir, oracle), name)

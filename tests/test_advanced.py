@@ -53,35 +53,30 @@ def test_asof_preserves_left_rowcount(spark, asof_frames):
     assert set(out.columns) == {"k", "t", "lid", "rid"}
 
 
-def test_kmv_estimate_within_error(spark, sf_dir):
+def test_kmv_estimate_within_error(built):
     """KMV with k=32 has relative std error ~1/sqrt(k-2) ≈ 18%; the
     deterministic estimate for each event_type must land inside 3σ."""
-    from spotify_tags_etl_spark.plans import registry
-
-    rows = registry.get("av11_kmv_sketch").builder(spark, sf_dir).collect()
+    rows = built("av11_kmv_sketch").rows
     assert rows
     for r in rows:
         assert r.approx_distinct == pytest.approx(r.n_exact, rel=0.55)
 
 
-def test_sessionize_counts_sum_to_events(spark, sf_dir):
-    from spotify_tags_etl_spark.plans import registry
+def test_sessionize_counts_sum_to_events(spark, sf_dir, built):
     from spotify_tags_etl_spark.sources.tpch import load_table
 
-    sess = registry.get("av08_sessionize").builder(spark, sf_dir)
-    total = sess.agg(F.sum("n_events")).collect()[0][0]
+    total = sum(r.n_events for r in built("av08_sessionize").rows)
     assert total == load_table(spark, sf_dir, "events").count()
 
 
-def test_moments_match_builtin_stats(spark, sf_dir):
+def test_moments_match_builtin_stats(spark, sf_dir, built):
     """The exact-integer-sum moments must agree with Spark's float
     var_samp/corr to float precision (the builtins are the semantics;
     the integer path is the deterministic implementation)."""
-    from spotify_tags_etl_spark.plans import registry
     from spotify_tags_etl_spark.sources.tpch import load_table
 
     ours = {r.event_type: (r.var_value, r.corr_value_user)
-            for r in registry.get("av13_moments").builder(spark, sf_dir).collect()}
+            for r in built("av13_moments").rows}
     ref = {r.event_type: (r.v, r.c)
            for r in load_table(spark, sf_dir, "events").groupBy("event_type").agg(
                F.var_samp("value").alias("v"),
@@ -122,19 +117,18 @@ def test_hll_union_of_daily_equals_direct_weekly(spark, sf_dir):
     assert merged == direct
 
 
-def test_clamped_balance_identity_vs_recursion(spark, sf_dir):
+def test_clamped_balance_identity_vs_recursion(spark, sf_dir, built):
     """xr04's closed form (cumsum - min(0, running_min(cumsum))) must
     equal the literal non-associative recurrence b_t = max(0, b_(t-1)
     + d_t) row by row — the identity is the whole operator, so pin it
     against ground truth, not just the oracle's algebra mirror."""
     from collections import defaultdict
 
-    from spotify_tags_etl_spark.plans import registry
     from spotify_tags_etl_spark.sources.tpch import load_table
 
     got = {
         (r.user_id, r.event_id): r.balance_cents
-        for r in registry.get("xr04_clamped_running_balance").builder(spark, sf_dir).collect()
+        for r in built("xr04_clamped_running_balance").rows
     }
     ev = (
         load_table(spark, sf_dir, "events")

@@ -6,28 +6,29 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spotify_tags_etl_spark.operators import dedup, multimodal, similarity, textops
+from spotify_tags_etl_spark.operators import dedup, multimodal, textops
 from spotify_tags_etl_spark.sources.tpch import load_table
 
 
-def test_minhash_finds_planted_near_dups(spark, sf_dir):
+def test_minhash_finds_planted_near_dups(built):
     """The corpus has planted near-duplicate docs (shared long prefixes);
     MinHash+LSH at 0.8 must find pairs, and every pair must truly be
     near-identical."""
-    pairs = dedup.dd02(spark, sf_dir).collect()
+    pairs = built("dd02_minhash_lsh").rows
     assert len(pairs) > 0
     assert all(p.jaccard_permille >= 800 for p in pairs)
 
 
-def test_lsh_candidates_superset_sanity(spark, sf_dir):
+def test_lsh_candidates_superset_sanity(built):
     """Every ≥0.9-jaccard pair found by exact blocked comparison within
     source-blocks must also be caught by the LSH path (banding with 4
     bands of 2 at j=0.9 has detection prob ~1 - (1-0.81)^4 ≈ 0.9987)."""
     exact = {
         (r.d1, r.d2)
-        for r in dedup.dd04(spark, sf_dir).where(F.col("jaccard_permille") >= 900).collect()
+        for r in built("dd04_ngram_jaccard_block").rows
+        if r.jaccard_permille >= 900
     }
-    lsh = {(r.d1, r.d2) for r in dedup.dd02(spark, sf_dir).collect()}
+    lsh = {(r.d1, r.d2) for r in built("dd02_minhash_lsh").rows}
     assert exact <= lsh
 
 
@@ -68,8 +69,8 @@ def test_exact_dedup_finds_injected_duplicate(spark, sf_dir):
     assert out[0].keep < 1_000_000  # keep-first is the original
 
 
-def test_bruteforce_topk_ordering(spark, sf_dir):
-    rows = similarity.ss01(spark, sf_dir).collect()
+def test_bruteforce_topk_ordering(built):
+    rows = built("ss01_bruteforce_cosine_topk").rows
     by_q = {}
     for r in rows:
         by_q.setdefault(r.q_id, []).append(r)
@@ -81,12 +82,12 @@ def test_bruteforce_topk_ordering(spark, sf_dir):
         assert all(r.c_id != q for r in rs)
 
 
-def test_lsh_ann_top1_mostly_agrees_with_bruteforce(spark, sf_dir):
+def test_lsh_ann_top1_mostly_agrees_with_bruteforce(built):
     """ANN recall sanity: with 4 OR-amplified tables the bucketed top-1
     matches exact top-1 well above the single-table ~13% collision rate
     (measured 87.5% on this deterministic corpus; assert a safe floor)."""
-    exact = {r.q_id: r.c_id for r in similarity.ss01(spark, sf_dir).where("rank = 1").collect()}
-    ann = {r.q_id: r.c_id for r in similarity.ss02(spark, sf_dir).where("rank = 1").collect()}
+    exact = {r.q_id: r.c_id for r in built("ss01_bruteforce_cosine_topk").rows if r.rank == 1}
+    ann = {r.q_id: r.c_id for r in built("ss02_lsh_ann").rows if r.rank == 1}
     common = [q for q in exact if q in ann]
     assert common
     recall = sum(exact[q] == ann[q] for q in common) / len(common)
@@ -179,17 +180,12 @@ def test_stratified_sample_is_subset_and_stable(spark, sf_dir):
     assert s1 < all_ids
 
 
-def test_ivf_ann_recall_vs_exact(spark, sf_dir):
+def test_ivf_ann_recall_vs_exact(built):
     """IVF with nprobe=2 of 8 lists must recover a decent share of the
     exact top-5 (it's approximate; the planted-cluster corpus keeps true
     neighbors in the same list most of the time)."""
-    from spotify_tags_etl_spark.operators.similarity import ss01, vx01
-
-    exact = {
-        (r.q_id, r.c_id)
-        for r in ss01(spark, sf_dir).where(F.col("rank") <= 5).collect()
-    }
-    approx = {(r.q_id, r.c_id) for r in vx01(spark, sf_dir).collect()}
+    exact = {(r.q_id, r.c_id) for r in built("ss01_bruteforce_cosine_topk").rows if r.rank <= 5}
+    approx = {(r.q_id, r.c_id) for r in built("vx01_ivf_ann").rows}
     assert len(approx & exact) / len(exact) >= 0.5
 
 
@@ -652,21 +648,13 @@ def test_empty_doc_token_ratio_is_ansi_safe(spark, tmp_path):
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_exact_simjoin_supersets_lsh(spark, sf_dir):
+def test_exact_simjoin_supersets_lsh(built):
     """xz01's prefix-filtered exact join is the recall ground truth for
     dd02's MinHash+LSH at the same threshold: LSH may miss pairs (false
     negatives by design) but must never invent one, so dd02 ⊆ xz01 and
     the shared pairs carry identical exact-jaccard scores."""
-    from spotify_tags_etl_spark.plans import registry
-
-    exact = {
-        (r.d1, r.d2): r.jaccard_permille
-        for r in registry.get("xz01_exact_simjoin_prefix").builder(spark, sf_dir).collect()
-    }
-    lsh = {
-        (r.d1, r.d2): r.jaccard_permille
-        for r in registry.get("dd02_minhash_lsh").builder(spark, sf_dir).collect()
-    }
+    exact = {(r.d1, r.d2): r.jaccard_permille for r in built("xz01_exact_simjoin_prefix").rows}
+    lsh = {(r.d1, r.d2): r.jaccard_permille for r in built("dd02_minhash_lsh").rows}
     assert set(lsh) <= set(exact)
     assert all(exact[p] == j for p, j in lsh.items())
     assert len(exact) > 0

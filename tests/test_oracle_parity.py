@@ -1,29 +1,26 @@
-"""Every registered query with an oracle must hash-match DuckDB (driver's t2 gate)."""
+"""Every registered query must hash-match its DuckDB oracle (driver's t2 gate)."""
 
 from __future__ import annotations
 
 import pytest
 
 from spotify_tags_etl_spark.plans import registry
-from tests.oracle_harness import run_parity
+from tests.oracle_harness import compare_frames, oracle_frame
 
-_QUERIES = registry.all_queries()
-_ORACLES = registry.all_oracles()
-
-
-@pytest.mark.parametrize("name", sorted(_ORACLES))
-def test_oracle_parity(spark, sf_dir, name):
-    run_parity(spark, sf_dir, name, _QUERIES[name], _ORACLES[name])
+_DEFS = registry.all_defs()
 
 
-@pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES)))
-def test_rows_only(spark, sf_dir, name):
-    df = _QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+@pytest.mark.parametrize("name", sorted(_DEFS))
+def test_oracle_parity(sf_dir, built, name):
+    rec = built(name)
+    oracle = _DEFS[name].oracle
+    if oracle is None:  # rows-only: the build ran and returned columns
+        assert len(rec.pdf.columns) > 0
+        return
+    compare_frames(rec.pdf, oracle_frame(sf_dir, oracle), name)
 
 
-def test_harness_is_dtype_strict(spark, sf_dir):
+def test_harness_is_dtype_strict(sf_dir, built):
     """The round-3 post-mortem: the driver's value-hash is dtype-
     sensitive, and the old harness widened dtypes before comparing, so
     DuckDB's un-CAST windowed integer SUM (HUGEINT -> fetchdf float64)
@@ -31,10 +28,8 @@ def test_harness_is_dtype_strict(spark, sf_dir):
     Reproduce that exact red here: run av08 against its PRE-FIX oracle
     (session_seq without the BIGINT cast) — the dtype-strict harness
     must fail it even though every value compares equal."""
-    from spotify_tags_etl_spark.plans.registry import resolve
-
-    name = resolve("av08_sessionize")
-    fixed = _ORACLES[name]
+    rec = built("av08_sessionize")
+    fixed = _DEFS[rec.name].oracle
     assert "CAST(SUM(is_new) OVER" in fixed, "oracle lost its r4 BIGINT cast"
     broken = fixed.replace(
         "CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts\n"
@@ -44,17 +39,15 @@ def test_harness_is_dtype_strict(spark, sf_dir):
     )
     assert broken != fixed, "revert substitution did not apply"
     with pytest.raises(AssertionError, match="dtype mismatch"):
-        run_parity(spark, sf_dir, name, _QUERIES[name], broken)
+        compare_frames(rec.pdf, oracle_frame(sf_dir, broken), rec.name)
     # and the FIXED oracle passes, same session, same data
-    run_parity(spark, sf_dir, name, _QUERIES[name], fixed)
+    compare_frames(rec.pdf, oracle_frame(sf_dir, fixed), rec.name)
 
 
 def test_harness_rejects_list_cells():
     """vx02's r3 driver `err`: the driver's hasher cannot hash list
     cells. Any array-typed output column must hard-fail locally."""
     import pandas as pd
-
-    from tests.oracle_harness import compare_frames
 
     pdf = pd.DataFrame({"k": [1], "codes": [[1, 2, 3]]})
     with pytest.raises(AssertionError, match="list/array"):

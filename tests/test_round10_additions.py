@@ -7,11 +7,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from spotify_tags_etl_spark.plans.registry import get
-
-
-def _q(name: str):
-    return get(name).builder
+from tests.conftest import assert_loop_pins, build_record
 
 
 # ---------------------------------------------------------------------------
@@ -19,8 +15,8 @@ def _q(name: str):
 # ---------------------------------------------------------------------------
 
 
-def test_zg01_mass_conservation(spark, sf_dir):
-    rows = _q("zg01_curated_pack_manifest")(spark, sf_dir).collect()
+def test_zg01_mass_conservation(built):
+    rows = built("zg01_curated_pack_manifest").rows
     assert rows
 
     # Per band: kept + displaced telescopes to the FULL corpus band
@@ -28,7 +24,7 @@ def test_zg01_mass_conservation(spark, sf_dir):
     # no curation) — docs and tokens both.
     full = {
         r.band_exp: (r.n_docs, r.doc_tokens)
-        for r in _q("zc06_pack_efficiency")(spark, sf_dir).collect()
+        for r in built("zc06_pack_efficiency").rows
     }
     got = {
         r.band_exp: (r.n_kept + r.n_displaced, r.kept_tokens + r.displaced_tokens)
@@ -58,17 +54,17 @@ def test_zg01_mass_conservation(spark, sf_dir):
     # per band zg01 displaces at least zd04's mass.
     zd04 = {
         r.band_exp: r.displaced_tokens
-        for r in _q("zd04_contamination_aware_packing")(spark, sf_dir).collect()
+        for r in built("zd04_contamination_aware_packing").rows
     }
     for r in rows:
         assert r.displaced_tokens >= zd04.get(r.band_exp, 0)
 
 
-def test_zg01_kept_matches_zf01(spark, sf_dir):
+def test_zg01_kept_matches_zf01(built):
     # Total survivor docs in the manifest == zf01's own keep count.
-    rows = _q("zg01_curated_pack_manifest")(spark, sf_dir).collect()
+    rows = built("zg01_curated_pack_manifest").rows
     zf01_kept = sum(
-        r.n_kept for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()
+        r.n_kept for r in built("zf01_curation_lineage").rows
     )
     assert sum(r.n_kept for r in rows) == zf01_kept
 
@@ -78,14 +74,14 @@ def test_zg01_kept_matches_zf01(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg02_schedule_structure(spark, sf_dir):
-    rows = _q("zg02_curated_curriculum")(spark, sf_dir).collect()
+def test_zg02_schedule_structure(spark, sf_dir, built):
+    rows = built("zg02_curated_curriculum").rows
     assert rows
 
     # Survivor counts per source from zf01's report.
     zf01_by_source = {
         r.source: r.n_kept
-        for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()
+        for r in built("zf01_curation_lineage").rows
     }
 
     per_source: dict[str, list] = defaultdict(list)
@@ -138,9 +134,9 @@ def test_zg02_schedule_structure(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg03_sweep_monotonicity(spark, sf_dir):
+def test_zg03_sweep_monotonicity(built):
     rows = sorted(
-        _q("zg03_gate_threshold_sweep")(spark, sf_dir).collect(), key=lambda r: r.k
+        built("zg03_gate_threshold_sweep").rows, key=lambda r: r.k
     )
     assert [r.k for r in rows] == list(range(1, 10))
 
@@ -167,12 +163,12 @@ def test_zg03_sweep_monotonicity(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg04_datasheet_consistency(spark, sf_dir):
-    rows = {r.source: r for r in _q("zg04_corpus_datasheet")(spark, sf_dir).collect()}
+def test_zg04_datasheet_consistency(built):
+    rows = {r.source: r for r in built("zg04_corpus_datasheet").rows}
     assert rows
 
     # Curation column = zf01's per-source survivor census, verbatim.
-    zf = {r.source: r for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()}
+    zf = {r.source: r for r in built("zf01_curation_lineage").rows}
     assert set(rows) == set(zf)
     for s, r in rows.items():
         assert r.n_docs == zf[s].n_docs
@@ -183,7 +179,7 @@ def test_zg04_datasheet_consistency(spark, sf_dir):
     # bigram) cannot be kept by the gate, so widening the population
     # from ze02's classifiable docs to ALL docs changes n_docs but not
     # n_kept.
-    ze = {r.source: r for r in _q("ze02_classifier_gate")(spark, sf_dir).collect()}
+    ze = {r.source: r for r in built("ze02_classifier_gate").rows}
     for s, r in rows.items():
         assert r.gate_kept == ze[s].n_kept
 
@@ -206,14 +202,14 @@ def test_zg04_datasheet_consistency(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg05_shard_conservation(spark, sf_dir):
+def test_zg05_shard_conservation(built):
     rows = sorted(
-        _q("zg05_curated_shard_plan")(spark, sf_dir).collect(), key=lambda r: r.shard
+        built("zg05_curated_shard_plan").rows, key=lambda r: r.shard
     )
     assert rows
 
     # Window and token totals telescope to zg01's curated manifest.
-    zg01 = _q("zg01_curated_pack_manifest")(spark, sf_dir).collect()
+    zg01 = built("zg01_curated_pack_manifest").rows
     assert sum(r.n_windows for r in rows) == sum(r.n_windows for r in zg01)
     assert sum(r.shard_tokens for r in rows) == sum(r.kept_tokens for r in zg01)
     assert sum(r.n_docs for r in rows) == sum(r.n_kept for r in zg01)
@@ -234,8 +230,8 @@ def test_zg05_shard_conservation(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg06_rule_census_conserves(spark, sf_dir):
-    rows = _q("zg06_quality_rule_census")(spark, sf_dir).collect()
+def test_zg06_rule_census_conserves(built):
+    rows = built("zg06_quality_rule_census").rows
     assert rows
     for r in rows:
         assert (
@@ -248,7 +244,7 @@ def test_zg06_rule_census_conserves(spark, sf_dir):
         assert sum(getattr(r, col) for r in rows) > 0, col
 
 
-def test_zg07_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zg07_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """The census SUM-merge must produce the identical report whether
     the corpus arrives as 1 micro-batch or 3; both must equal batch
     zg06 exactly."""
@@ -275,10 +271,8 @@ def test_zg07_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = [tuple(r) for r in streaming_quality_rules(spark, stream).collect()]
-    single = [
-        tuple(r) for r in _q("zg07_stream_quality_rules")(spark, sf_dir).collect()
-    ]
-    batch = [tuple(r) for r in _q("zg06_quality_rule_census")(spark, sf_dir).collect()]
+    single = [tuple(r) for r in built("zg07_stream_quality_rules").rows]
+    batch = [tuple(r) for r in built("zg06_quality_rule_census").rows]
     assert multi == single == batch
     assert len(batch) > 0
 
@@ -424,29 +418,18 @@ ZG_EXPECTED_SCANS = {
 
 @pytest.mark.parametrize("name", sorted(ZG_EXPECTED_LOOP_PLANS))
 def test_zg_loop_stage_pins(spark, sf_dir, name):
-    from spotify_tags_etl_spark.operators.zeops import ze01_fit_artifact
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
+    from spotify_tags_etl_spark.operators.zeops import ze01_fit_artifact, ze02_margins_artifact
     from spotify_tags_etl_spark.operators.zfops import zf01_flags_artifact
 
     # consumers are pinned on the artifact-HIT path for BOTH artifacts
     # (the steady state a production pipeline runs in) — cf.
     # test_ze_loop_stage_pins; publish first so a cold warehouse cannot
     # flip these pins to the miss path
-    from spotify_tags_etl_spark.operators.zeops import ze02_margins_artifact
-
     ze01_fit_artifact(spark, sf_dir)
     zf01_flags_artifact(spark, sf_dir).count()
     ze02_margins_artifact(spark, sf_dir).count()
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == ZG_EXPECTED_SCANS[name]
-    assert pm.observed_loop_plans() == ZG_EXPECTED_LOOP_PLANS[name]
+    rec = build_record(spark, sf_dir, name)
+    assert_loop_pins(rec, ZG_EXPECTED_LOOP_PLANS[name], ZG_EXPECTED_SCANS[name])
 
 
 def test_zf01_flags_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
@@ -516,10 +499,10 @@ def test_zf01_flags_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def test_zg08_overlap_consistency(spark, sf_dir):
+def test_zg08_overlap_consistency(built):
     rows = {
         (r.stage_a, r.stage_b): r
-        for r in _q("zg08_stage_overlap")(spark, sf_dir).collect()
+        for r in built("zg08_stage_overlap").rows
     }
     stages = ["exact", "near", "sem", "con", "off"]
     assert set(rows) == {
@@ -539,7 +522,7 @@ def test_zg08_overlap_consistency(spark, sf_dir):
                 r.n_both * 1_000_000 // union if union else None
             )
 
-    zf = _q("zf01_curation_lineage")(spark, sf_dir).collect()
+    zf = built("zf01_curation_lineage").rows
     # The funnel's FIRST stage: unconditional == first-fail, exactly.
     assert rows[("exact", "exact")].n_a == sum(r.drop_exact for r in zf)
     # Later stages: unconditional verdicts dominate first-fail counts.
@@ -554,11 +537,11 @@ def test_zg08_overlap_consistency(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg09_sweep_monotone_and_anchored(spark, sf_dir):
+def test_zg09_sweep_monotone_and_anchored(built):
     from spotify_tags_etl_spark.operators.zgops import ZG06_REP_PPM
 
     rows = sorted(
-        _q("zg09_rule_threshold_sweep")(spark, sf_dir).collect(),
+        built("zg09_rule_threshold_sweep").rows,
         key=lambda r: r.thr_ppm,
     )
     assert len(rows) == 9
@@ -577,7 +560,7 @@ def test_zg09_sweep_monotone_and_anchored(spark, sf_dir):
         assert b.drop_short == a.drop_short and b.drop_long == a.drop_long
 
     # the deployed-threshold row IS zg06's census, totalled
-    zg06 = _q("zg06_quality_rule_census")(spark, sf_dir).collect()
+    zg06 = built("zg06_quality_rule_census").rows
     at = {r.thr_ppm: r for r in rows}[ZG06_REP_PPM]
     for col in ("n_docs", "drop_short", "drop_long", "drop_rep", "drop_stop", "n_kept"):
         assert getattr(at, col) == sum(getattr(r, col) for r in zg06), col
@@ -588,10 +571,10 @@ def test_zg09_sweep_monotone_and_anchored(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zg10_mix_shift_consistency(spark, sf_dir):
+def test_zg10_mix_shift_consistency(built):
     from spotify_tags_etl_spark.operators.ytrain import YV01_BLOCK
 
-    rows = {r.source: r for r in _q("zg10_curation_mix_shift")(spark, sf_dir).collect()}
+    rows = {r.source: r for r in built("zg10_curation_mix_shift").rows}
     assert rows
 
     # Hamilton exactness: both sides apportion the full block.
@@ -600,7 +583,7 @@ def test_zg10_mix_shift_consistency(spark, sf_dir):
     assert sum(r.dquota for r in rows.values()) == 0
 
     # The full-corpus side is yv01's own mixing schedule, verbatim.
-    yv01 = {r.source: r for r in _q("yv01_mixing_schedule")(spark, sf_dir).collect()}
+    yv01 = {r.source: r for r in built("yv01_mixing_schedule").rows}
     assert set(rows) == set(yv01)
     for s, r in rows.items():
         assert (r.n_docs_full, r.chars_full, r.quota_full) == (
@@ -613,7 +596,7 @@ def test_zg10_mix_shift_consistency(spark, sf_dir):
         assert r.dquota == r.quota_surv - r.quota_full
 
     # The survivor side covers exactly zf01's keeps.
-    zf = {r.source: r.n_kept for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()}
+    zf = {r.source: r.n_kept for r in built("zf01_curation_lineage").rows}
     for s, r in rows.items():
         assert r.n_docs_surv == zf.get(s, 0)
 

@@ -13,11 +13,8 @@ import shutil
 
 import pytest
 
-
-def _q(name: str):
-    from spotify_tags_etl_spark.plans.registry import all_queries, resolve
-
-    return all_queries()[resolve(name)]
+from spotify_tags_etl_spark.plans.registry import get
+from tests.conftest import assert_loop_pins, build_record
 
 
 # ---------------------------------------------------------------------------
@@ -253,7 +250,7 @@ def test_fit_artifact_gc_on_republish(spark, flags_sandbox):
     assert not os.path.exists(old_target)
 
 
-def test_v2_artifact_rule_columns_match_live_census(spark, sf_dir):
+def test_v2_artifact_rule_columns_match_live_census(spark, sf_dir, built):
     """The artifact's stored rule verdicts aggregate to exactly zg06's
     census (the artifact path IS the census path now — this pins the
     spelling equality between zf01_flags(with_rules=True) and
@@ -272,7 +269,7 @@ def test_v2_artifact_rule_columns_match_live_census(spark, sf_dir):
         tuple(r) for r in _zg06_finish(zg06_census_partial(docs)).collect()
     )
     via_artifact = sorted(
-        tuple(r) for r in _q("zg06_quality_rule_census")(spark, sf_dir).collect()
+        tuple(r) for r in built("zg06_quality_rule_census").rows
     )
     assert via_artifact == live
 
@@ -289,7 +286,7 @@ def test_v2_artifact_rule_columns_match_live_census(spark, sf_dir):
     assert n_bad == 0
 
 
-def test_zd01_matches_prior_live_composition(spark, sf_dir):
+def test_zd01_matches_prior_live_composition(spark, sf_dir, built):
     """zd01 re-pointed at the artifact must equal the three stages'
     own composition (the r9 semantics, re-derived live here)."""
     from pyspark.sql import functions as F
@@ -320,7 +317,7 @@ def test_zd01_matches_prior_live_composition(spark, sf_dir):
         )
     got = {
         r.source: (r.n_docs, r.n_exact_kept, r.n_near_kept, r.n_sem_kept)
-        for r in _q("zd01_dedup_funnel")(spark, sf_dir).collect()
+        for r in built("zd01_dedup_funnel").rows
     }
     assert got == {s: tuple(v) for s, v in agg.items()}
 
@@ -330,8 +327,8 @@ def test_zd01_matches_prior_live_composition(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zh01_mass_conservation(spark, sf_dir):
-    rows = _q("zh01_unified_keepset")(spark, sf_dir).collect()
+def test_zh01_mass_conservation(built):
+    rows = built("zh01_unified_keepset").rows
     assert rows
     drop_cols = [
         "drop_short", "drop_long", "drop_rep", "drop_stop", "drop_exact",
@@ -342,11 +339,11 @@ def test_zh01_mass_conservation(spark, sf_dir):
         assert r.kept_ppm == (r.n_kept * 1_000_000) // r.n_docs
 
 
-def test_zh01_rule_prefix_equals_zg06(spark, sf_dir):
+def test_zh01_rule_prefix_equals_zg06(built):
     """Rules run FIRST in both zh01 and zg06, so the four rule-drop
     columns must match the standalone census exactly per source."""
-    zh = {r.source: r for r in _q("zh01_unified_keepset")(spark, sf_dir).collect()}
-    zg = {r.source: r for r in _q("zg06_quality_rule_census")(spark, sf_dir).collect()}
+    zh = {r.source: r for r in built("zh01_unified_keepset").rows}
+    zg = {r.source: r for r in built("zg06_quality_rule_census").rows}
     assert set(zh) == set(zg)
     for s in zh:
         for c in ("drop_short", "drop_long", "drop_rep", "drop_stop"):
@@ -354,12 +351,12 @@ def test_zh01_rule_prefix_equals_zg06(spark, sf_dir):
         assert zh[s].n_docs == zg[s].n_docs
 
 
-def test_zh01_gate_threshold_is_median_edge(spark, sf_dir):
+def test_zh01_gate_threshold_is_median_edge(spark, sf_dir, built):
     """The deployed operating point equals zg03's k=5 cut (the tuning
     table and the deployed gate must agree on the same edge)."""
     from spotify_tags_etl_spark.operators.zhops import ZH_GATE_DECILE
 
-    sweep = {r.k: r.thr for r in _q("zg03_gate_threshold_sweep")(spark, sf_dir).collect()}
+    sweep = {r.k: r.thr for r in built("zg03_gate_threshold_sweep").rows}
     from pyspark.sql import functions as F
 
     from spotify_tags_etl_spark.operators.zeops import (
@@ -383,11 +380,11 @@ def test_zh01_gate_threshold_is_median_edge(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zh02_band_mass_conserves_vs_zg01(spark, sf_dir):
+def test_zh02_band_mass_conserves_vs_zg01(built):
     """Per band: zh02's kept + three system displacements = the band's
     full corpus token mass = zg01's kept + five stage displacements."""
-    zh = {r.band_exp: r for r in _q("zh02_unified_pack_manifest")(spark, sf_dir).collect()}
-    zg = {r.band_exp: r for r in _q("zg01_curated_pack_manifest")(spark, sf_dir).collect()}
+    zh = {r.band_exp: r for r in built("zh02_unified_pack_manifest").rows}
+    zg = {r.band_exp: r for r in built("zg01_curated_pack_manifest").rows}
     assert set(zh) == set(zg)
     for b in zh:
         zh_total = zh[b].kept_tokens + zh[b].displaced_tokens
@@ -398,9 +395,9 @@ def test_zh02_band_mass_conserves_vs_zg01(spark, sf_dir):
         assert zh[b].n_kept <= zg[b].n_kept, b
 
 
-def test_zh03_reconciles_with_zh02(spark, sf_dir):
-    zh2 = _q("zh02_unified_pack_manifest")(spark, sf_dir).collect()
-    zh3 = _q("zh03_unified_shard_plan")(spark, sf_dir).collect()
+def test_zh03_reconciles_with_zh02(built):
+    zh2 = built("zh02_unified_pack_manifest").rows
+    zh3 = built("zh03_unified_shard_plan").rows
     assert sum(r.shard_tokens for r in zh3) == sum(r.kept_tokens for r in zh2)
     assert sum(r.n_docs for r in zh3) == sum(r.n_kept for r in zh2)
     assert sum(r.n_windows for r in zh3) == sum(r.n_windows for r in zh2)
@@ -412,8 +409,8 @@ def test_zh03_reconciles_with_zh02(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zh05_diagonals_and_symmetry(spark, sf_dir):
-    rows = _q("zh05_system_overlap")(spark, sf_dir).collect()
+def test_zh05_diagonals_and_symmetry(built):
+    rows = built("zh05_system_overlap").rows
     assert len(rows) == 28  # 7 systems, upper triangle incl. diagonal
     by_pair = {(r.ia, r.ib): r for r in rows}
     # diagonal: n_a == n_b == n_both, jaccard == 1e6 (or NULL when 0)
@@ -426,11 +423,11 @@ def test_zh05_diagonals_and_symmetry(spark, sf_dir):
     for (i, j), r in by_pair.items():
         assert r.n_both <= min(r.n_a, r.n_b)
     # rules diagonal == zg06's total drops
-    zg06 = _q("zg06_quality_rule_census")(spark, sf_dir).collect()
+    zg06 = built("zg06_quality_rule_census").rows
     total_rule_drops = sum(r.n_docs - r.n_kept for r in zg06)
     assert by_pair[(0, 0)].n_a == total_rule_drops
     # exact..off diagonals == zg08's (the shared five funnel stages)
-    zg08 = {(r.ia, r.ib): r for r in _q("zg08_stage_overlap")(spark, sf_dir).collect()}
+    zg08 = {(r.ia, r.ib): r for r in built("zg08_stage_overlap").rows}
     for zh_i, zg_i in ((1, 0), (2, 1), (3, 2), (4, 3), (5, 4)):
         assert by_pair[(zh_i, zh_i)].n_a == zg08[(zg_i, zg_i)].n_a, zh_i
         for zh_j, zg_j in ((1, 0), (2, 1), (3, 2), (4, 3), (5, 4)):
@@ -443,12 +440,12 @@ def test_zh05_diagonals_and_symmetry(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zh06_schedule_structure(spark, sf_dir):
+def test_zh06_schedule_structure(built):
     """zc05/zg02's invariants over the unified survivor corpus: every
     survivor scheduled exactly once per surviving source, difficulty
     monotone within each source lane, block/slot = divmod(crank-1,
     quota)."""
-    rows = _q("zh06_unified_curriculum")(spark, sf_dir).collect()
+    rows = built("zh06_unified_curriculum").rows
     assert rows
     per_source: dict[str, list] = {}
     for r in rows:
@@ -461,11 +458,11 @@ def test_zh06_schedule_structure(spark, sf_dir):
             assert (r.block, r.slot) == divmod(r.crank - 1, quota), (s, r)
 
 
-def test_zh06_survivors_match_zh01(spark, sf_dir):
+def test_zh06_survivors_match_zh01(built):
     """The curriculum schedules exactly zh01's kept mass (minus
     zero-quota sources, zc05's rule)."""
-    zh1 = {r.source: r.n_kept for r in _q("zh01_unified_keepset")(spark, sf_dir).collect()}
-    rows = _q("zh06_unified_curriculum")(spark, sf_dir).collect()
+    zh1 = {r.source: r.n_kept for r in built("zh01_unified_keepset").rows}
+    rows = built("zh06_unified_curriculum").rows
     sched: dict[str, int] = {}
     for r in rows:
         sched[r.source] = sched.get(r.source, 0) + 1
@@ -574,25 +571,15 @@ ZH_EXPECTED_SCANS = {
 
 @pytest.mark.parametrize("name", sorted(ZH_EXPECTED_LOOP_PLANS))
 def test_zh_loop_stage_pins(spark, sf_dir, name):
-    from spotify_tags_etl_spark.operators.zeops import ze01_fit_artifact
+    from spotify_tags_etl_spark.operators.zeops import ze01_fit_artifact, ze02_margins_artifact
     from spotify_tags_etl_spark.operators.zfops import zf01_flags_artifact
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    from spotify_tags_etl_spark.operators.zeops import ze02_margins_artifact
 
     # artifact-HIT path (the steady state) — publish all three first
     ze01_fit_artifact(spark, sf_dir)
     zf01_flags_artifact(spark, sf_dir).count()
     ze02_margins_artifact(spark, sf_dir).count()
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == ZH_EXPECTED_SCANS[name]
-    assert pm.observed_loop_plans() == ZH_EXPECTED_LOOP_PLANS[name]
+    rec = build_record(spark, sf_dir, name)
+    assert_loop_pins(rec, ZH_EXPECTED_LOOP_PLANS[name], ZH_EXPECTED_SCANS[name])
 
 
 # ---------------------------------------------------------------------------
@@ -600,7 +587,7 @@ def test_zh_loop_stage_pins(spark, sf_dir, name):
 # ---------------------------------------------------------------------------
 
 
-def test_zh04_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zh04_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """stream(3-file split) == stream(single availableNow) == batch
     zh01 — the associativity/commutativity pin."""
     import time
@@ -625,10 +612,8 @@ def test_zh04_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = [tuple(r) for r in streaming_unified_keepset(spark, sf_dir, stream).collect()]
-    single = [
-        tuple(r) for r in _q("zh04_stream_unified_keepset")(spark, sf_dir).collect()
-    ]
-    batch = [tuple(r) for r in _q("zh01_unified_keepset")(spark, sf_dir).collect()]
+    single = [tuple(r) for r in built("zh04_stream_unified_keepset").rows]
+    batch = [tuple(r) for r in built("zh01_unified_keepset").rows]
     assert multi == single == batch
     assert len(batch) > 0
 
@@ -658,9 +643,9 @@ def test_zh04_degenerate_docs_stream(spark, tmp_path):
     emb = pq.read_table("/root/testdata/sf0.001/embeddings.parquet")
     pq.write_table(emb.slice(0, 0), os.path.join(root, "embeddings.parquet"))
 
-    batch = [tuple(r) for r in _q("zh01_unified_keepset")(spark, root).collect()]
+    batch = [tuple(r) for r in get("zh01_unified_keepset").builder(spark, root).collect()]
     stream = [
-        tuple(r) for r in _q("zh04_stream_unified_keepset")(spark, root).collect()
+        tuple(r) for r in get("zh04_stream_unified_keepset").builder(spark, root).collect()
     ]
     assert stream == batch
     assert sum(r[1] for r in batch) == 5  # all five docs accounted

@@ -15,12 +15,6 @@ import pyarrow.parquet as pq
 import pytest
 
 
-def _q(name: str):
-    from spotify_tags_etl_spark.plans.registry import all_queries, resolve
-
-    return all_queries()[resolve(name)]
-
-
 # ---------------------------------------------------------------------------
 # synthetic partitioned corpus — documents as a DIRECTORY of part files
 # ---------------------------------------------------------------------------
@@ -335,12 +329,12 @@ def test_flags_key_is_per_file(parted_corpus):
 # ---------------------------------------------------------------------------
 
 
-def test_zi01_reconciles_with_zh_band(spark, sf_dir):
+def test_zi01_reconciles_with_zh_band(built):
     """The manifest's numbers are the zh band's, exactly: system census
     = zh01 collapsed corpus-wide, window/token totals = zh02's rollup,
     shard count = zh03's writer fan-out."""
-    row = _q("zi01_release_manifest")(spark, sf_dir).collect()[0]
-    zh01 = _q("zh01_unified_keepset")(spark, sf_dir).collect()
+    row = built("zi01_release_manifest").rows[0]
+    zh01 = built("zh01_unified_keepset").rows
     assert row.n_docs == sum(r.n_docs for r in zh01)
     assert row.n_kept == sum(r.n_kept for r in zh01)
     assert row.d_rules == sum(
@@ -354,22 +348,24 @@ def test_zi01_reconciles_with_zh_band(spark, sf_dir):
     assert row.d_gate == sum(r.drop_gate for r in zh01)
     assert row.conservation_ok == 1
 
-    zh02 = _q("zh02_unified_pack_manifest")(spark, sf_dir).collect()
+    zh02 = built("zh02_unified_pack_manifest").rows
     assert row.kept_tokens == sum(r.kept_tokens for r in zh02)
     assert row.n_windows == sum(r.n_windows for r in zh02)
     assert row.n_bands == sum(1 for r in zh02 if r.n_kept > 0)
 
-    zh03 = _q("zh03_unified_shard_plan")(spark, sf_dir).collect()
+    zh03 = built("zh03_unified_shard_plan").rows
     assert row.n_shards == len(zh03)
 
 
-def test_zi01_digest_stability(spark, sf_dir):
+def test_zi01_digest_stability(spark, sf_dir, built):
     """Same inputs => same manifest digest (the reproducibility stamp),
     and the digest IS md5 of the documented canonical rendering."""
     import hashlib
 
-    r1 = _q("zi01_release_manifest")(spark, sf_dir).collect()[0]
-    r2 = _q("zi01_release_manifest")(spark, sf_dir).collect()[0]
+    from spotify_tags_etl_spark.plans.registry import get
+
+    r1 = built("zi01_release_manifest").rows[0]
+    r2 = get("zi01_release_manifest").builder(spark, sf_dir).collect()[0]
     assert r1 == r2
     from spotify_tags_etl_spark.operators.ziops import _ZI01_FIELDS, ZI01_VERSION
 
@@ -406,25 +402,25 @@ def test_release_record_carries_artifact_identities(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zi02_deployed_point_reproduces_zh01(spark, sf_dir):
+def test_zi02_deployed_point_reproduces_zh01(built):
     """The k = ZH_GATE_DECILE row IS the deployed operating point: its
     keep count and gate displacement equal zh01's census (the pin that
     turns the constant into evidence)."""
     from spotify_tags_etl_spark.operators.zhops import ZH_GATE_DECILE
 
-    rows = {r.k: r for r in _q("zi02_gate_sensitivity")(spark, sf_dir).collect()}
-    zh01 = _q("zh01_unified_keepset")(spark, sf_dir).collect()
+    rows = {r.k: r for r in built("zi02_gate_sensitivity").rows}
+    zh01 = built("zh01_unified_keepset").rows
     deployed = rows[ZH_GATE_DECILE]
     assert deployed.n_kept == sum(r.n_kept for r in zh01)
     assert deployed.d_gate == sum(r.drop_gate for r in zh01)
 
 
-def test_zi02_structure(spark, sf_dir):
+def test_zi02_structure(built):
     """Nine rows; per-row mass conservation; d_rules/d_funnel are
     k-invariant (they precede the gate); keep mass is nonincreasing in
     k (a higher edge can only cut more)."""
     rows = sorted(
-        _q("zi02_gate_sensitivity")(spark, sf_dir).collect(),
+        built("zi02_gate_sensitivity").rows,
         key=lambda r: r.k,
     )
     assert [r.k for r in rows] == list(range(1, 10))
@@ -528,7 +524,7 @@ def test_census_log_compaction(spark, sf_dir, tmp_path_factory, monkeypatch):
 
 
 def test_zf02_report_unchanged_by_compaction(
-    spark, sf_dir, tmp_path_factory, monkeypatch
+    spark, sf_dir, built, tmp_path_factory, monkeypatch
 ):
     """The close report is invariant to the compaction cadence: K=1
     (compact every trigger), K=2, and the default all equal batch
@@ -563,9 +559,7 @@ def test_zf02_report_unchanged_by_compaction(
             ).collect()
         ]
 
-    batch = [
-        tuple(r) for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()
-    ]
+    batch = [tuple(r) for r in built("zf01_curation_lineage").rows]
     for k in (1, 2):
         monkeypatch.setattr(zfops, "ZF02_COMPACT_EVERY", k)
         assert run() == batch, f"cadence K={k} changed the close report"

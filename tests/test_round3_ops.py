@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from spotify_tags_etl_spark.operators.advanced import xg03, xl03
 from spotify_tags_etl_spark.operators.maintenance import xv03
-from spotify_tags_etl_spark.operators.sketches import xz06
 from spotify_tags_etl_spark.operators.training import (
     bloom_decontaminate,
     decontaminate,
@@ -28,10 +27,10 @@ def _formatted_plan(spark, df) -> str:
     )
 
 
-def test_cms_never_underestimates(spark, sf_dir):
+def test_cms_never_underestimates(built):
     """The count-min guarantee: est >= exact for every key, and the
     overcount column is exactly the difference."""
-    rows = xz06(spark, sf_dir).collect()
+    rows = built("xz06_cms_heavy_hitters").rows
     assert rows, "sketch produced no estimates"
     for r in rows:
         assert r.est_count >= r.exact_count
@@ -128,13 +127,13 @@ def test_xv03_scan_has_partition_filters(spark, sf_dir):
     assert all("2024-01-08" <= d <= "2024-01-14" for d in dates)
 
 
-def test_streaming_cms_equals_batch(spark, sf_dir):
+def test_streaming_cms_equals_batch(spark, sf_dir, built):
     """Counter addition is associative+commutative: the incrementally
     merged sketch must give bit-identical estimates to the batch build
     regardless of micro-batch layout."""
     from spotify_tags_etl_spark.streaming.ops import read_events_stream, streaming_cms_rollup
 
-    batch = {tuple(r) for r in xz06(spark, sf_dir).collect()}
+    batch = {tuple(r) for r in built("xz06_cms_heavy_hitters").rows}
     streamed = {
         tuple(r)
         for r in streaming_cms_rollup(
@@ -249,12 +248,10 @@ def test_xs05_distinct_below_probe(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_xz10_greedy_is_monotone_decreasing(spark, sf_dir):
+def test_xz10_greedy_is_monotone_decreasing(built):
     """Greedy marginal gains must be non-increasing (submodularity of
     coverage) and picks distinct."""
-    from spotify_tags_etl_spark.operators.training import xz10
-
-    rows = sorted(xz10(spark, sf_dir).collect(), key=lambda r: r.round)
+    rows = sorted(built("xz10_greedy_cover").rows, key=lambda r: r.round)
     gains = [r.gain for r in rows]
     assert gains == sorted(gains, reverse=True)
     assert len({r.doc_id for r in rows}) == len(rows)

@@ -8,16 +8,16 @@ from __future__ import annotations
 
 import re
 
-from spotify_tags_etl_spark.operators.ycuration import YV15_BLOCKLIST, yv15
-from spotify_tags_etl_spark.operators.yrlhf import YV14_CLASSES, yv14
-from spotify_tags_etl_spark.operators.ytrain import YV10_ROUNDS, yv10
+from spotify_tags_etl_spark.operators.ycuration import YV15_BLOCKLIST
+from spotify_tags_etl_spark.operators.yrlhf import YV14_CLASSES
+from spotify_tags_etl_spark.operators.ytrain import YV10_ROUNDS
 from spotify_tags_etl_spark.sources.tpch import load_table
 
 _SYM = re.compile(r"^[a-z]+$")
 
 
-def test_yv10_merge_table_shape(spark, sf_dir):
-    rows = yv10(spark, sf_dir).collect()
+def test_yv10_merge_table_shape(built):
+    rows = built("yv10_bpe_merge_rounds").rows
     assert [r.round for r in rows] == list(range(1, YV10_ROUNDS + 1))
     # symbols are alphabetic concatenations (the injection-safety invariant
     # the literal-embedding merge fold relies on)
@@ -33,8 +33,8 @@ def test_yv10_merge_table_shape(spark, sf_dir):
     assert len(rows[0].pa) == 1 and len(rows[0].pb) == 1
 
 
-def test_yv14_consensus_partitions_items(spark, sf_dir):
-    rows = yv14(spark, sf_dir).collect()
+def test_yv14_consensus_partitions_items(spark, sf_dir, built):
+    rows = built("yv14_label_majority").rows
     n_events = load_table(spark, sf_dir, "events").count()
     assert sum(r.n_items for r in rows) == n_events
     for r in rows:
@@ -43,8 +43,8 @@ def test_yv14_consensus_partitions_items(spark, sf_dir):
         assert r.majority_ppm == r.n_majority * 1_000_000 // r.n_items
 
 
-def test_yv15_gate_decision_is_consistent(spark, sf_dir):
-    rows = yv15(spark, sf_dir).collect()
+def test_yv15_gate_decision_is_consistent(spark, sf_dir, built):
+    rows = built("yv15_domain_quality_gate").rows
     docs = load_table(spark, sf_dir, "documents")
     assert sum(r.n_docs for r in rows) == docs.count()
     blocked = {r.source for r in rows if r.blocklisted}
@@ -54,10 +54,10 @@ def test_yv15_gate_decision_is_consistent(spark, sf_dir):
         assert r.keep == int(not r.blocklisted and not r.low_quality)
 
 
-def test_yv16_estimator_invariants(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yrlhf import YV16_POLICIES, yv16
+def test_yv16_estimator_invariants(spark, sf_dir, built):
+    from spotify_tags_etl_spark.operators.yrlhf import YV16_POLICIES
 
-    rows = yv16(spark, sf_dir).collect()
+    rows = built("yv16_ips_offpolicy").rows
     n_events = load_table(spark, sf_dir, "events").count()
     assert [r.policy for r in rows] == list(range(YV16_POLICIES))
     for r in rows:
@@ -70,14 +70,14 @@ def test_yv16_estimator_invariants(spark, sf_dir):
         assert 0 <= r.ips_ppm <= 9_000_000
 
 
-def test_yv17_matches_pure_python_recompute(spark, sf_dir):
+def test_yv17_matches_pure_python_recompute(spark, sf_dir, built):
     """Full closed-form recompute of Fleiss' kappa from the same md5
     vote synthesis — integer-exact, including the documented
     ppm-rounded kappa derivation."""
     import hashlib
     from collections import Counter
 
-    from spotify_tags_etl_spark.operators.yrlhf import _YV17_C, _YV17_M, yv17
+    from spotify_tags_etl_spark.operators.yrlhf import _YV17_C, _YV17_M
 
     ids = [r.event_id for r in load_table(spark, sf_dir, "events").select("event_id").collect()]
     per_unit: dict[int, Counter] = {}
@@ -99,7 +99,7 @@ def test_yv17_matches_pure_python_recompute(spark, sf_dir):
     num = (po_ppm - pe_ppm) * 1_000_000
     den = 1_000_000 - pe_ppm
     kappa_ppm = -(-num // den) if (num < 0) != (den < 0) else num // den  # trunc toward 0
-    row = yv17(spark, sf_dir).collect()[0]
+    row = built("yv17_fleiss_kappa").rows[0]
     assert (row.n_items, row.po_ppm, row.pe_ppm, row.kappa_ppm) == (
         n,
         po_ppm,
@@ -108,13 +108,13 @@ def test_yv17_matches_pure_python_recompute(spark, sf_dir):
     )
 
 
-def test_yv18_waterfill_optimality(spark, sf_dir):
+def test_yv18_waterfill_optimality(built):
     """The allocation is feasible, exhausts the budget up to the
     documented integer remainder, and the level is maximal (funding one
     more domain would overshoot)."""
-    from spotify_tags_etl_spark.operators.ytrain import _YV18_BDEN, _YV18_BNUM, yv18
+    from spotify_tags_etl_spark.operators.ytrain import _YV18_BDEN, _YV18_BNUM
 
-    rows = yv18(spark, sf_dir).collect()
+    rows = built("yv18_token_waterfill").rows
     total = sum(r.tokens for r in rows)
     budget = total * _YV18_BNUM // _YV18_BDEN
     alloc = sum(r.alloc for r in rows)
@@ -132,11 +132,11 @@ def test_yv18_waterfill_optimality(spark, sf_dir):
         assert r.alloc == level < r.tokens  # maximality: next domain overshoots
 
 
-def test_yv19_ci_brackets_the_point_estimate(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yrlhf import _YV19_REPS, yv16, yv19
+def test_yv19_ci_brackets_the_point_estimate(built):
+    from spotify_tags_etl_spark.operators.yrlhf import _YV19_REPS
 
-    rows = {r.policy: r for r in yv19(spark, sf_dir).collect()}
-    point = {r.policy: r.snips_ppm for r in yv16(spark, sf_dir).collect()}
+    rows = {r.policy: r for r in built("yv19_snips_bootstrap_ci").rows}
+    point = {r.policy: r.snips_ppm for r in built("yv16_ips_offpolicy").rows}
     assert set(rows) == set(point)
     for p, r in rows.items():
         assert r.n_reps == _YV19_REPS  # no replicate degenerated to 0-mass
@@ -183,7 +183,7 @@ def test_waterfill_matches_bruteforce_on_random_frames(spark):
             assert (r.alloc == t) if not r.capped else (r.alloc <= t)
 
 
-def test_yv20_matches_pure_python_fixed_point(spark, sf_dir):
+def test_yv20_matches_pure_python_fixed_point(built):
     """Recompute the whole S-curve scoring in pure Python with the same
     ppm-truncating squaring spec; the engine table must match exactly."""
     from spotify_tags_etl_spark.operators.dedup import (
@@ -217,7 +217,7 @@ def test_yv20_matches_pure_python_fixed_point(spark, sf_dir):
                 else:
                     fn_area += 1_000_000 - p
             exp[(r, b)] = (fp_area, fn_area)
-    got = yv20(spark, sf_dir).collect()
+    got = built("yv20_lsh_parameter_plan").rows
     assert len(got) == len(exp)
     for row in got:
         fp_area, fn_area = exp[(row.r, row.b)]
@@ -229,7 +229,7 @@ def test_yv20_matches_pure_python_fixed_point(spark, sf_dir):
     assert next(r for r in got if r.rank == 1) == best
 
 
-def test_yv21_matches_pure_python_recompute(spark, sf_dir):
+def test_yv21_matches_pure_python_recompute(spark, sf_dir, built):
     """Full recompute of every threshold's confusion counts from the
     same md5 synthesis — and the structural PR-curve monotonicities."""
     import hashlib
@@ -257,7 +257,7 @@ def test_yv21_matches_pure_python_recompute(spark, sf_dir):
                 exp[t][1] += 1
             elif label:
                 exp[t][2] += 1
-    rows = yv21(spark, sf_dir).collect()
+    rows = built("yv21_pr_threshold_sweep").rows
     assert [r.threshold_pm for r in rows] == list(_YV21_TS)
     for r in rows:
         tp, fp, fn = exp[r.threshold_pm]
@@ -273,10 +273,10 @@ def test_yv21_matches_pure_python_recompute(spark, sf_dir):
     assert recs == sorted(recs, reverse=True)
 
 
-def test_yv22_matches_pure_python_recompute(spark, sf_dir):
+def test_yv22_matches_pure_python_recompute(spark, sf_dir, built):
     import hashlib
 
-    from spotify_tags_etl_spark.operators.ycuration import _YV22_MOD, yv22
+    from spotify_tags_etl_spark.operators.ycuration import _YV22_MOD
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text").collect()
 
@@ -296,7 +296,7 @@ def test_yv22_matches_pure_python_recompute(spark, sf_dir):
         n, c = exp.setdefault(lang, [0, 0])
         exp[lang][0] += len(grams)
         exp[lang][1] += sum(1 for g in grams if g in train_vocab)
-    got = yv22(spark, sf_dir).collect()
+    got = built("yv22_bigram_coverage").rows
     assert {r.lang for r in got} == set(exp)
     for r in got:
         n, c = exp[r.lang]
@@ -304,17 +304,15 @@ def test_yv22_matches_pure_python_recompute(spark, sf_dir):
         assert r.covered_ppm == c * 1_000_000 // n
 
 
-def test_yv23_report_is_consistent_with_its_components(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yrlhf import yv14, yv16, yv17, yv23
-
-    rep = {r.metric: r.value for r in yv23(spark, sf_dir).collect()}
-    pol = yv16(spark, sf_dir).collect()
+def test_yv23_report_is_consistent_with_its_components(built):
+    rep = {r.metric: r.value for r in built("yv23_rlhf_eval_report").rows}
+    pol = built("yv16_ips_offpolicy").rows
     best = max(pol, key=lambda r: (r.snips_ppm, -r.policy))
     assert rep["best_policy"] == best.policy
     assert rep["best_policy_snips_ppm"] == best.snips_ppm
     assert rep["min_ess_ppm"] == min(r.ess_ppm for r in pol)
-    assert rep["fleiss_kappa_ppm"] == yv17(spark, sf_dir).collect()[0].kappa_ppm
-    rows = yv14(spark, sf_dir).collect()
+    assert rep["fleiss_kappa_ppm"] == built("yv17_fleiss_kappa").rows[0].kappa_ppm
+    rows = built("yv14_label_majority").rows
     assert rep["label_majority_ppm"] == sum(r.n_majority for r in rows) * 1_000_000 // sum(
         r.n_items for r in rows
     )

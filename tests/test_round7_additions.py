@@ -18,19 +18,14 @@ import pytest
 from spotify_tags_etl_spark.operators.yrlhf import YV07_MODELS, _RMOD
 from spotify_tags_etl_spark.operators.zaops import ZA02_ITERS, ZA02_SCALE
 from spotify_tags_etl_spark.operators.ytrain import YV10_ROUNDS, waterfill
-from spotify_tags_etl_spark.plans import registry
-
-
-def _q(name: str):
-    qs = registry.all_queries()
-    return qs[name] if name in qs else qs["zv_" + name]
+from tests.conftest import assert_loop_pins
 
 
 def _h32(tag: str, val: int) -> int:
     return int(hashlib.md5(f"{tag}:{val}".encode()).hexdigest()[:8], 16)
 
 
-def test_za02_python_recompute(spark, sf_dir):
+def test_za02_python_recompute(sf_dir, built):
     event_ids = pq.read_table(f"{sf_dir}/events.parquet", columns=["event_id"])[
         "event_id"
     ].to_pylist()
@@ -78,15 +73,15 @@ def test_za02_python_recompute(spark, sf_dir):
     ]
     got = [
         (r.model, r.n_battles, r.w2, r.strength_ppm, r.bt_rank)
-        for r in _q("za02_bradley_terry")(spark, sf_dir).orderBy("model").collect()
+        for r in sorted(built("za02_bradley_terry").rows, key=lambda r: r.model)
     ]
     assert got == expected
 
 
-def test_za02_strengths_track_winrates(spark, sf_dir):
+def test_za02_strengths_track_winrates(built):
     """Sanity anchor to yv07's published numbers: the model with the
     highest overall draw-adjusted win share gets rank 1."""
-    rows = _q("za02_bradley_terry")(spark, sf_dir).collect()
+    rows = built("za02_bradley_terry").rows
     by_share = max(rows, key=lambda r: (r.w2 / (2 * r.n_battles), -r.model))
     top = next(r for r in rows if r.bt_rank == 1)
     assert top.model == by_share.model
@@ -94,13 +89,13 @@ def test_za02_strengths_track_winrates(spark, sf_dir):
     assert all(r.strength_ppm >= 1 for r in rows)
 
 
-def test_za01_tokens_are_merge_results(spark, sf_dir):
+def test_za01_tokens_are_merge_results(built):
     """Every censused token must be a symbol some learned rule CREATED
     (merge results are the only multi-char symbols), with positive
     weighted occurrences; at most one census row per learned rule."""
-    merges = _q("yv10_bpe_merge_rounds")(spark, sf_dir).collect()
+    merges = built("yv10_bpe_merge_rounds").rows
     created = {r.pa + r.pb for r in merges}
-    out = _q("za01_bpe_apply")(spark, sf_dir).collect()
+    out = built("za01_bpe_apply").rows
     assert 0 < len(out) <= YV10_ROUNDS
     assert {r.token for r in out} <= created
     assert all(r.occurrences > 0 and r.token_chars == len(r.token) for r in out)
@@ -116,7 +111,7 @@ def test_waterfill_requires_subunity_budget(spark):
         waterfill(df, 2, 2)
 
 
-def test_za04_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_za04_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """za04's incremental extremes merge must produce EXACTLY batch
     yv05's pair set for any micro-batch layout: a 3-file run (one file
     per trigger, docs split by id) equals the single-batch registry run
@@ -144,15 +139,13 @@ def test_za04_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = {tuple(r) for r in streaming_preference_pairs(spark, stream).collect()}
-    single = {
-        tuple(r) for r in _q("za04_stream_preference_pairs")(spark, sf_dir).collect()
-    }
-    batch = {tuple(r) for r in _q("yv05_preference_pairs")(spark, sf_dir).collect()}
+    single = {tuple(r) for r in built("za04_stream_preference_pairs").rows}
+    batch = {tuple(r) for r in built("yv05_preference_pairs").rows}
     assert multi == single == batch
     assert len(batch) > 0
 
 
-def test_zb02_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zb02_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """zb02's incremental histogram merge must produce EXACTLY batch
     za03's drift table for any micro-batch layout."""
     import os
@@ -178,20 +171,18 @@ def test_zb02_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = {tuple(r) for r in streaming_quantile_drift(spark, stream).collect()}
-    single = {
-        tuple(r) for r in _q("zb02_stream_quantile_drift")(spark, sf_dir).collect()
-    }
-    batch = {tuple(r) for r in _q("za03_quantile_drift")(spark, sf_dir).collect()}
+    single = {tuple(r) for r in built("zb02_stream_quantile_drift").rows}
+    batch = {tuple(r) for r in built("za03_quantile_drift").rows}
     assert multi == single == batch
     assert len(batch) == 3
 
 
-def test_zb01_rolls_up_to_za05(spark, sf_dir):
+def test_zb01_rolls_up_to_za05(built):
     """Per-source accounting must sum exactly to za05's corpus totals
     (same learned tokenizer, same word band, two independent apply
     shapes — dictionary join vs vocab fold)."""
-    per_source = _q("zb01_bpe_source_tokens")(spark, sf_dir).collect()
-    total = _q("za05_bpe_token_accounting")(spark, sf_dir).collect()[0]
+    per_source = built("zb01_bpe_source_tokens").rows
+    total = built("za05_bpe_token_accounting").rows[0]
     assert sum(r.words for r in per_source) == total.word_occurrences
     assert sum(r.tokens for r in per_source) == total.total_tokens
 
@@ -341,29 +332,8 @@ EXPECTED_SCANS = {
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTED_LOOP_PLANS))
-def test_loop_stage_plan_pins(spark, sf_dir, name):
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == EXPECTED_SCANS[name], (
-        f"{name}: stage scan columns changed — got {observed_scans}, "
-        f"pinned {EXPECTED_SCANS[name]}. A widened ReadSchema means "
-        "column pruning broke; an extra scan signature means a corpus "
-        "re-read appeared."
-    )
-    observed = pm.observed_loop_plans()
-    assert observed == EXPECTED_LOOP_PLANS[name], (
-        f"{name}: loop-stage plan fingerprint changed — got {observed}, "
-        f"pinned {EXPECTED_LOOP_PLANS[name]}. A gained metric means an "
-        "unplanned shuffle/Python stage inside a driver-loop stage the "
-        "batch ratchet cannot see. If deliberate, update the pin."
-    )
+def test_loop_stage_plan_pins(built, name):
+    assert_loop_pins(built(name), EXPECTED_LOOP_PLANS[name], EXPECTED_SCANS[name])
 
 
 def test_record_plan_counts_metrics(spark):
@@ -380,7 +350,7 @@ def test_record_plan_counts_metrics(spark):
     assert observed["toy:map"] == [{}]
 
 
-def test_zb03_selects_target_like_docs(spark, sf_dir):
+def test_zb03_selects_target_like_docs(built):
     """The importance scorer must actually rank target-distribution
     documents up: a strong majority of the top-k should carry the
     target lang, and the weight construction must make every per-bucket
@@ -388,7 +358,7 @@ def test_zb03_selects_target_like_docs(spark, sf_dir):
     full census by construction of the two ppm normalizations)."""
     from spotify_tags_etl_spark.operators.zaops import ZB03_TARGET_LANG, ZB03_TOPK
 
-    rows = _q("zb03_importance_weights")(spark, sf_dir).collect()
+    rows = built("zb03_importance_weights").rows
     assert len(rows) == ZB03_TOPK
     en = sum(1 for r in rows if r.lang == ZB03_TARGET_LANG)
     assert en >= ZB03_TOPK * 3 // 4, f"only {en}/{ZB03_TOPK} target-lang docs in top-k"

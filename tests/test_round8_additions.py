@@ -23,13 +23,8 @@ from spotify_tags_etl_spark.operators.zcops import (
     ZC01_TOK_PPM,
     ZC01_WINDOW,
 )
-from spotify_tags_etl_spark.plans import registry
 from spotify_tags_etl_spark.plans.planmetrics import _struct_field_names
-
-
-def _q(name: str):
-    qs = registry.all_queries()
-    return qs[name] if name in qs else qs["zv_" + name]
+from tests.conftest import assert_loop_pins
 
 
 # ---------------------------------------------------------------------------
@@ -37,8 +32,8 @@ def _q(name: str):
 # ---------------------------------------------------------------------------
 
 
-def test_zc01_packing_invariants(spark, sf_dir):
-    rows = _q("zc01_sequence_packing")(spark, sf_dir).collect()
+def test_zc01_packing_invariants(spark, sf_dir, built):
+    rows = built("zc01_sequence_packing").rows
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert len(rows) == n_docs  # every doc placed exactly once
     assert len({r.doc_id for r in rows}) == n_docs
@@ -79,7 +74,7 @@ def test_zc01_packing_invariants(spark, sf_dir):
             )
 
 
-def test_zc01_token_estimate_matches_constant(spark, sf_dir):
+def test_zc01_token_estimate_matches_constant(spark, sf_dir, built):
     # tok = clamp(n_chars * ppm / 1e6) exactly — recompute from the raw table
     docs = {
         r.doc_id: r.n_chars
@@ -87,7 +82,7 @@ def test_zc01_token_estimate_matches_constant(spark, sf_dir):
         .select("doc_id", "n_chars")
         .collect()
     }
-    for r in _q("zc01_sequence_packing")(spark, sf_dir).collect():
+    for r in built("zc01_sequence_packing").rows:
         want = min(max(docs[r.doc_id] * ZC01_TOK_PPM // 1_000_000, 1), ZC01_WINDOW)
         assert r.doc_tokens == want
 
@@ -97,8 +92,8 @@ def test_zc01_token_estimate_matches_constant(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zc02_roundtrip_is_lossless(spark, sf_dir):
-    rows = _q("zc02_tokenizer_roundtrip")(spark, sf_dir).collect()
+def test_zc02_roundtrip_is_lossless(built):
+    rows = built("zc02_tokenizer_roundtrip").rows
     assert rows  # at least one populated bucket
     for r in rows:
         assert r.mismatch_types == 0, f"bucket {r.bucket}: {r.mismatch_types} mismatches"
@@ -211,18 +206,8 @@ EXPECTED_SCANS = {
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTED_LOOP_PLANS))
-def test_zc_loop_stage_pins(spark, sf_dir, name):
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == EXPECTED_SCANS[name]
-    assert pm.observed_loop_plans() == EXPECTED_LOOP_PLANS[name]
+def test_zc_loop_stage_pins(built, name):
+    assert_loop_pins(built(name), EXPECTED_LOOP_PLANS[name], EXPECTED_SCANS[name])
 
 
 # ---------------------------------------------------------------------------
@@ -230,12 +215,12 @@ def test_zc_loop_stage_pins(spark, sf_dir, name):
 # ---------------------------------------------------------------------------
 
 
-def test_zc03_drops_are_true_dups(spark, sf_dir):
+def test_zc03_drops_are_true_dups(spark, sf_dir, built):
     import numpy as np
 
     from spotify_tags_etl_spark.operators.zcops import ZC03_T_PPM
 
-    rows = _q("zc03_semantic_dedup")(spark, sf_dir).collect()
+    rows = built("zc03_semantic_dedup").rows
     emb = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .orderBy("vec_id")
@@ -285,7 +270,7 @@ def test_zc03_w_matches_sql_formula():
 # ---------------------------------------------------------------------------
 
 
-def test_zc04_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zc04_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """zc04's incremental census + doc-store merge must produce EXACTLY
     batch zb03's top-k for any micro-batch layout: a 3-file run (one
     file per trigger) equals the single-batch registry run equals
@@ -315,9 +300,9 @@ def test_zc04_layout_invariant(spark, sf_dir, tmp_path_factory):
     multi = [tuple(r) for r in streaming_importance_weights(spark, stream).collect()]
     single = [
         tuple(r)
-        for r in _q("zc04_stream_importance_weights")(spark, sf_dir).collect()
+        for r in built("zc04_stream_importance_weights").rows
     ]
-    batch = [tuple(r) for r in _q("zb03_importance_weights")(spark, sf_dir).collect()]
+    batch = [tuple(r) for r in built("zb03_importance_weights").rows]
     assert multi == single == batch
     assert len(batch) > 0
 
@@ -327,11 +312,11 @@ def test_zc04_layout_invariant(spark, sf_dir, tmp_path_factory):
 # ---------------------------------------------------------------------------
 
 
-def test_zc05_schedule_semantics(spark, sf_dir):
-    rows = _q("zc05_curriculum_schedule")(spark, sf_dir).collect()
+def test_zc05_schedule_semantics(spark, sf_dir, built):
+    rows = built("zc05_curriculum_schedule").rows
     quotas = {
         r.source: r.quota
-        for r in _q("yv01_mixing_schedule")(spark, sf_dir).collect()
+        for r in built("yv01_mixing_schedule").rows
     }
     n_chars = {
         r.doc_id: r.n_chars
@@ -397,18 +382,8 @@ EXPECTED_SCANS_2 = {
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTED_LOOP_PLANS_2))
-def test_zc_loop_stage_pins_2(spark, sf_dir, name):
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == EXPECTED_SCANS_2[name]
-    assert pm.observed_loop_plans() == EXPECTED_LOOP_PLANS_2[name]
+def test_zc_loop_stage_pins_2(built, name):
+    assert_loop_pins(built(name), EXPECTED_LOOP_PLANS_2[name], EXPECTED_SCANS_2[name])
 
 
 # ---------------------------------------------------------------------------
@@ -416,9 +391,9 @@ def test_zc_loop_stage_pins_2(spark, sf_dir, name):
 # ---------------------------------------------------------------------------
 
 
-def test_zc06_rolls_up_to_zc01(spark, sf_dir):
-    report = {r.band_exp: r for r in _q("zc06_pack_efficiency")(spark, sf_dir).collect()}
-    packed = _q("zc01_sequence_packing")(spark, sf_dir).collect()
+def test_zc06_rolls_up_to_zc01(built):
+    report = {r.band_exp: r for r in built("zc06_pack_efficiency").rows}
+    packed = built("zc01_sequence_packing").rows
     per_band = defaultdict(lambda: {"windows": set(), "docs": 0, "tokens": 0})
     for r in packed:
         b = per_band[r.window_id // ZC01_BAND_BASE]
@@ -443,7 +418,7 @@ def test_zc06_rolls_up_to_zc01(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zc07_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zc07_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """zc07's incremental band merge must produce EXACTLY batch zc06's
     report for any micro-batch layout (the banded packing stats are
     order-free — that claim IS this test)."""
@@ -472,8 +447,8 @@ def test_zc07_layout_invariant(spark, sf_dir, tmp_path_factory):
     multi = [tuple(r) for r in streaming_pack_efficiency(spark, stream).collect()]
     single = [
         tuple(r)
-        for r in _q("zc07_stream_pack_efficiency")(spark, sf_dir).collect()
+        for r in built("zc07_stream_pack_efficiency").rows
     ]
-    batch = [tuple(r) for r in _q("zc06_pack_efficiency")(spark, sf_dir).collect()]
+    batch = [tuple(r) for r in built("zc06_pack_efficiency").rows]
     assert multi == single == batch
     assert len(batch) > 0

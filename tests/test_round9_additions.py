@@ -12,10 +12,7 @@ from pyspark.sql import functions as F
 from spotify_tags_etl_spark.operators.scalerank import grouped_rank
 from spotify_tags_etl_spark.plans.planmetrics import _scan_schemas
 from spotify_tags_etl_spark.plans.registry import get
-
-
-def _q(name: str):
-    return get(name).builder
+from tests.conftest import assert_loop_pins, build_record
 
 
 # ---------------------------------------------------------------------------
@@ -23,25 +20,23 @@ def _q(name: str):
 # ---------------------------------------------------------------------------
 
 
-def test_zd01_funnel_composition(spark, sf_dir):
-    rows = _q("zd01_dedup_funnel")(spark, sf_dir).collect()
+def test_zd01_funnel_composition(spark, sf_dir, built):
+    rows = built("zd01_dedup_funnel").rows
     assert rows
 
     # Independently recompute the three stage sets from the component
     # queries the funnel claims to compose.
     docs = {
         r.doc_id: r.source
-        for r in _q("dd01_exact_hash")(spark, sf_dir).sparkSession.read.parquet(
-            f"{sf_dir}/documents.parquet"
-        ).select("doc_id", "source").collect()
+        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "source")
+        .collect()
     }
-    exact_keeps = {
-        r.keep_doc_id for r in _q("dd01_exact_hash")(spark, sf_dir).collect()
-    }
-    near_drops = {r.d2 for r in _q("dd02_minhash_lsh")(spark, sf_dir).collect()}
+    exact_keeps = {r.keep_doc_id for r in built("dd01_exact_hash").rows}
+    near_drops = {r.d2 for r in built("dd02_minhash_lsh").rows}
     sem_drops = {
         r.vec_id
-        for r in _q("zc03_semantic_dedup")(spark, sf_dir).collect()
+        for r in built("zc03_semantic_dedup").rows
         if r.keep == 0
     }
 
@@ -138,8 +133,8 @@ def test_scan_schemas_unparseable_raises():
 # ---------------------------------------------------------------------------
 
 
-def test_zd02_manifest_masses(spark, sf_dir):
-    rows = _q("zd02_rag_index_manifest")(spark, sf_dir).collect()
+def test_zd02_manifest_masses(spark, sf_dir, built):
+    rows = built("zd02_rag_index_manifest").rows
     assert 1 <= len(rows) <= 8
 
     # Total chunks/tokens across lists == tx06's chunks restricted to
@@ -150,7 +145,7 @@ def test_zd02_manifest_masses(spark, sf_dir):
         .select("vec_id")
         .collect()
     }
-    chunks = _q("tx06_chunk_tokens")(spark, sf_dir).collect()
+    chunks = built("tx06_chunk_tokens").rows
     indexable = [c for c in chunks if c.doc_id in emb_ids]
     assert sum(r.n_chunks for r in rows) == len(indexable)
     assert sum(r.n_tokens for r in rows) == sum(c.n_tokens for c in indexable)
@@ -170,10 +165,10 @@ def test_zd02_manifest_masses(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_zd03_plan_matches_python_twin(spark, sf_dir):
+def test_zd03_plan_matches_python_twin(built):
     from spotify_tags_etl_spark.operators.zdops import zd03_plan
 
-    rows = _q("zd03_semantic_dedup_planned")(spark, sf_dir).collect()
+    rows = built("zd03_semantic_dedup_planned").rows
     n = rows[0].corpus_n
     bits, tables = zd03_plan(n)
     assert len(rows) == n
@@ -193,7 +188,7 @@ def test_zd03_plan_reacts_to_corpus_size():
         assert bits in (2, 4, 8) and tables in (1, 2, 4)
 
 
-def test_zd03_no_false_drops(spark, sf_dir):
+def test_zd03_no_false_drops(spark, sf_dir, built):
     # Every drop must be a genuine above-threshold duplicate of some
     # smaller-id vector — brute force over the quantized corpus.
     from spotify_tags_etl_spark.operators.zdops import _ZD03_T_PPM
@@ -210,7 +205,7 @@ def test_zd03_no_false_drops(spark, sf_dir):
         dp = sum(x * y for x, y in zip(emb[a], emb[b]))
         return dp > 0 and dp * dp * 10**12 >= _ZD03_T_PPM**2 * norms[a] * norms[b]
 
-    rows = _q("zd03_semantic_dedup_planned")(spark, sf_dir).collect()
+    rows = built("zd03_semantic_dedup_planned").rows
     dropped = [r.vec_id for r in rows if r.keep == 0]
     for d in dropped:
         assert any(is_dup(s, d) for s in emb if s < d), f"false drop {d}"
@@ -270,7 +265,7 @@ def test_zd04_planted_contamination_mass(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_zd05_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zd05_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """zd05's census + signature/shingle-store merge must produce
     EXACTLY the batch funnel's exact/near columns for any micro-batch
     layout: a 3-file run (one file per trigger) equals the single-batch
@@ -298,13 +293,11 @@ def test_zd05_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = [tuple(r) for r in streaming_dedup_funnel(spark, stream).collect()]
-    single = [
-        tuple(r) for r in _q("zd05_stream_dedup_funnel")(spark, sf_dir).collect()
-    ]
+    single = [tuple(r) for r in built("zd05_stream_dedup_funnel").rows]
     batch = [
         (r.source, r.n_docs, r.n_exact_kept, r.n_near_kept, r.exact_keep_ppm,
          r.near_keep_ppm)
-        for r in _q("zd01_dedup_funnel")(spark, sf_dir).collect()
+        for r in built("zd01_dedup_funnel").rows
     ]
     assert multi == single == batch
     assert len(batch) > 0
@@ -396,20 +389,12 @@ EXPECTED_SCANS = {
 @pytest.mark.parametrize("name", sorted(EXPECTED_LOOP_PLANS))
 def test_zd_loop_stage_pins(spark, sf_dir, name):
     from spotify_tags_etl_spark.operators.zfops import zf01_flags_artifact
-    from spotify_tags_etl_spark.plans import planmetrics as pm
 
     # zd01 is pinned on the flags-artifact HIT path (the steady state);
     # publish first so a cold warehouse cannot flip it to the miss path
     zf01_flags_artifact(spark, sf_dir).count()
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == EXPECTED_SCANS[name]
-    assert pm.observed_loop_plans() == EXPECTED_LOOP_PLANS[name]
+    rec = build_record(spark, sf_dir, name)
+    assert_loop_pins(rec, EXPECTED_LOOP_PLANS[name], EXPECTED_SCANS[name])
 
 
 # ---------------------------------------------------------------------------
@@ -417,9 +402,9 @@ def test_zd_loop_stage_pins(spark, sf_dir, name):
 # ---------------------------------------------------------------------------
 
 
-def test_zd06_drops_subset_of_transitive(spark, sf_dir):
-    ks = {r.vec_id: r.keep for r in _q("zd06_semantic_dedup_keepset")(spark, sf_dir).collect()}
-    tr = {r.vec_id: r.keep for r in _q("zc03_semantic_dedup")(spark, sf_dir).collect()}
+def test_zd06_drops_subset_of_transitive(built):
+    ks = {r.vec_id: r.keep for r in built("zd06_semantic_dedup_keepset").rows}
+    tr = {r.vec_id: r.keep for r in built("zc03_semantic_dedup").rows}
     assert set(ks) == set(tr)
     # Keep-set greedy never drops what the transitive rule keeps — it
     # can only rescue chain tails the transitive rule over-drops.
@@ -453,7 +438,7 @@ def test_zd06_greedy_on_planted_chain(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_zd07_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zd07_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     import os
     import time
 
@@ -477,10 +462,8 @@ def test_zd07_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = [tuple(r) for r in streaming_rag_manifest(spark, sf_dir, stream).collect()]
-    single = [
-        tuple(r) for r in _q("zd07_stream_rag_manifest")(spark, sf_dir).collect()
-    ]
-    batch = [tuple(r) for r in _q("zd02_rag_index_manifest")(spark, sf_dir).collect()]
+    single = [tuple(r) for r in built("zd07_stream_rag_manifest").rows]
+    batch = [tuple(r) for r in built("zd02_rag_index_manifest").rows]
     assert multi == single == batch
     assert len(batch) > 0
 
@@ -578,25 +561,15 @@ ZE_EXPECTED_SCANS = {
 
 @pytest.mark.parametrize("name", sorted(ZE_EXPECTED_LOOP_PLANS))
 def test_ze_loop_stage_pins(spark, sf_dir, name):
-    from spotify_tags_etl_spark.operators.zeops import ze01_fit_artifact
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    from spotify_tags_etl_spark.operators.zeops import ze02_margins_artifact
+    from spotify_tags_etl_spark.operators.zeops import ze01_fit_artifact, ze02_margins_artifact
 
     # consumers are pinned on the artifact-HIT path (the steady state a
     # production pipeline runs in); publish first so a cold warehouse
     # can't flip these pins to the miss path
     ze01_fit_artifact(spark, sf_dir)
     ze02_margins_artifact(spark, sf_dir).count()
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q(name)(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == ZE_EXPECTED_SCANS[name]
-    assert pm.observed_loop_plans() == ZE_EXPECTED_LOOP_PLANS[name]
+    rec = build_record(spark, sf_dir, name)
+    assert_loop_pins(rec, ZE_EXPECTED_LOOP_PLANS[name], ZE_EXPECTED_SCANS[name])
 
 
 def test_ze01_fit_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
@@ -648,14 +621,14 @@ def test_ze01_fit_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
     assert len(calls) == 2
 
 
-def test_ze01_round1_all_misclassified_and_learns(spark, sf_dir):
+def test_ze01_round1_all_misclassified_and_learns(spark, sf_dir, built):
     """At w=0 every margin is 0 and ties count as errors, so round 1
     must misclassify EVERY doc that has at least one bigram (acc_ppm
     0); later rounds must improve on that floor."""
     from spotify_tags_etl_spark.operators.zeops import ze01_design_matrix
     from spotify_tags_etl_spark.sources.tpch import load_table
 
-    rows = {r.round: r for r in _q("ze01_perceptron_filter")(spark, sf_dir).collect()}
+    rows = {r.round: r for r in built("ze01_perceptron_filter").rows}
     nd = (
         ze01_design_matrix(load_table(spark, sf_dir, "documents"))
         .select("doc_id")
@@ -670,14 +643,14 @@ def test_ze01_round1_all_misclassified_and_learns(spark, sf_dir):
         assert r.acc_ppm == ((nd - r.n_mis) * 10**6) // nd
 
 
-def test_ze01_layout_invariant(spark, sf_dir):
+def test_ze01_layout_invariant(spark, sf_dir, built):
     """Batch (full-misclassified-set) updates are order-free: the fit
     must be bit-identical when the corpus arrives in a different
     partitioning — the property that makes the perceptron relational."""
     import spotify_tags_etl_spark.operators.zeops as ze
     from spotify_tags_etl_spark.sources import tpch
 
-    base = [tuple(r) for r in _q("ze01_perceptron_filter")(spark, sf_dir).collect()]
+    base = [tuple(r) for r in built("ze01_perceptron_filter").rows]
 
     orig = tpch.load_table
 
@@ -695,14 +668,14 @@ def test_ze01_layout_invariant(spark, sf_dir):
     assert alt == base
 
 
-def test_ze02_gate_accounting(spark, sf_dir):
+def test_ze02_gate_accounting(spark, sf_dir, built):
     """The gate census must telescope against the fit's own doc count
     and against an in-process recomputation of the averaged weights,
     and averaging must not do worse than the final (oscillating)
     iterate on the training corpus."""
     from spotify_tags_etl_spark.operators.zeops import ze01_fit
 
-    rep = {r.source: r for r in _q("ze02_classifier_gate")(spark, sf_dir).collect()}
+    rep = {r.source: r for r in built("ze02_classifier_gate").rows}
     feats, nd, rows, w_hist = ze01_fit(spark, sf_dir)
     feats.unpersist()
     assert sum(r.n_docs for r in rep.values()) == nd
@@ -718,7 +691,7 @@ def test_ze02_gate_accounting(spark, sf_dir):
     assert (overall_correct * 10**6) // nd >= last_round_acc_ppm
 
 
-def test_ze03_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_ze03_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """The census SUM-merge must produce the identical report whether
     the corpus arrives as 1 micro-batch or 3; both must equal batch
     ze02 exactly."""
@@ -745,15 +718,13 @@ def test_ze03_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = [tuple(r) for r in streaming_classifier_gate(spark, sf_dir, stream).collect()]
-    single = [
-        tuple(r) for r in _q("ze03_stream_classifier_gate")(spark, sf_dir).collect()
-    ]
-    batch = [tuple(r) for r in _q("ze02_classifier_gate")(spark, sf_dir).collect()]
+    single = [tuple(r) for r in built("ze03_stream_classifier_gate").rows]
+    batch = [tuple(r) for r in built("ze02_classifier_gate").rows]
     assert multi == single == batch
     assert len(batch) > 0
 
 
-def test_ze04_calibration_accounting(spark, sf_dir):
+def test_ze04_calibration_accounting(spark, sf_dir, built):
     """Equal-mass bins that telescope against the fit and the gate:
     decile sizes differ by at most 1, masses sum to the fit's doc
     count, total keeps equal ze02's, and the top decile must carry
@@ -761,14 +732,14 @@ def test_ze04_calibration_accounting(spark, sf_dir):
     surface)."""
     from spotify_tags_etl_spark.operators.zeops import ze01_fit
 
-    rows = {r.decile: r for r in _q("ze04_gate_calibration")(spark, sf_dir).collect()}
+    rows = {r.decile: r for r in built("ze04_gate_calibration").rows}
     assert sorted(rows) == list(range(10))
     feats, nd, _curve, _w = ze01_fit(spark, sf_dir)
     feats.unpersist()
     sizes = [rows[d].n_docs for d in range(10)]
     assert sum(sizes) == nd
     assert max(sizes) - min(sizes) <= 1
-    gate = _q("ze02_classifier_gate")(spark, sf_dir).collect()
+    gate = built("ze02_classifier_gate").rows
     assert sum(r.n_kept for r in rows.values()) == sum(g.n_kept for g in gate)
     # margin > 0 is a SUFFIX of the margin order, so keeps must be a
     # contiguous tail: every decile above the first kept one is fully
@@ -819,27 +790,18 @@ ZF01_EXPECTED_SCANS = {
 }
 
 
-def test_zf01_loop_stage_pins(spark, sf_dir):
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q("zf01_curation_lineage")(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == ZF01_EXPECTED_SCANS
-    assert pm.observed_loop_plans() == ZF01_EXPECTED_LOOP_PLANS
+def test_zf01_loop_stage_pins(built):
+    rec = built("zf01_curation_lineage")
+    assert_loop_pins(rec, ZF01_EXPECTED_LOOP_PLANS, ZF01_EXPECTED_SCANS)
 
 
-def test_zf01_first_drop_attribution(spark, sf_dir):
+def test_zf01_first_drop_attribution(spark, sf_dir, built):
     """Replicate the five-stage first-drop attribution doc-by-doc from
     the component stages' own queries and require an exact match, plus
     per-source mass conservation."""
     from spotify_tags_etl_spark.operators.zfops import zf01_offtarget
 
-    rows = _q("zf01_curation_lineage")(spark, sf_dir).collect()
+    rows = built("zf01_curation_lineage").rows
     assert rows
 
     docs = {
@@ -848,14 +810,14 @@ def test_zf01_first_drop_attribution(spark, sf_dir):
         .select("doc_id", "source")
         .collect()
     }
-    exact_keeps = {r.keep_doc_id for r in _q("dd01_exact_hash")(spark, sf_dir).collect()}
-    near_drops = {r.d2 for r in _q("dd02_minhash_lsh")(spark, sf_dir).collect()}
+    exact_keeps = {r.keep_doc_id for r in built("dd01_exact_hash").rows}
+    near_drops = {r.d2 for r in built("dd02_minhash_lsh").rows}
     sem_drops = {
         r.vec_id
-        for r in _q("zc03_semantic_dedup")(spark, sf_dir).collect()
+        for r in built("zc03_semantic_dedup").rows
         if r.keep == 0
     }
-    contam = {r.doc_id for r in _q("tz06_decontaminate")(spark, sf_dir).collect()}
+    contam = {r.doc_id for r in built("tz06_decontaminate").rows}
     offtgt = {r.doc_id for r in zf01_offtarget(spark, sf_dir).collect()}
 
     want: dict[str, list[int]] = defaultdict(lambda: [0] * 7)
@@ -925,21 +887,12 @@ ZF02_EXPECTED_SCANS = {
 }
 
 
-def test_zf02_loop_stage_pins(spark, sf_dir):
-    from spotify_tags_etl_spark.plans import planmetrics as pm
-
-    pm.LOOP_PLAN_LOG.clear()
-    pm.SCAN_LOG.clear()
-    _q("zf02_stream_curation_lineage")(spark, sf_dir).count()
-    scans: dict[str, set] = {}
-    for label, sc in pm.SCAN_LOG:
-        scans.setdefault(label, set()).add(sc)
-    observed_scans = {l: sorted(list(t) for t in v) for l, v in scans.items()}
-    assert observed_scans == ZF02_EXPECTED_SCANS
-    assert pm.observed_loop_plans() == ZF02_EXPECTED_LOOP_PLANS
+def test_zf02_loop_stage_pins(built):
+    rec = built("zf02_stream_curation_lineage")
+    assert_loop_pins(rec, ZF02_EXPECTED_LOOP_PLANS, ZF02_EXPECTED_SCANS)
 
 
-def test_zf02_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_zf02_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """Every per-stage merge is associative + commutative, so the
     lineage must be identical whether the corpus arrives as 1
     micro-batch or 3 — and equal batch zf01 exactly."""
@@ -966,10 +919,8 @@ def test_zf02_layout_invariant(spark, sf_dir, tmp_path_factory):
         .parquet(root)
     )
     multi = [tuple(r) for r in streaming_curation_lineage(spark, sf_dir, stream).collect()]
-    single = [
-        tuple(r) for r in _q("zf02_stream_curation_lineage")(spark, sf_dir).collect()
-    ]
-    batch = [tuple(r) for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()]
+    single = [tuple(r) for r in built("zf02_stream_curation_lineage").rows]
+    batch = [tuple(r) for r in built("zf01_curation_lineage").rows]
     assert multi == single == batch
     assert len(batch) > 0
 
@@ -1089,12 +1040,12 @@ def test_zf02_short_doc_stream(spark, sf_dir, tmp_path_factory):
         .parquet(stream_root)
     )
     multi = [tuple(r) for r in streaming_curation_lineage(spark, root, stream).collect()]
-    batch = [tuple(r) for r in _q("zf01_curation_lineage")(spark, root).collect()]
+    batch = [tuple(r) for r in get("zf01_curation_lineage").builder(spark, root).collect()]
     assert multi == batch
     assert len(batch) > 0
 
 
-def test_ze05_hard_examples_are_confidently_wrong(spark, sf_dir):
+def test_ze05_hard_examples_are_confidently_wrong(spark, sf_dir, built):
     """Every exported doc must be misclassified by the averaged model,
     and the export must be exactly the |margin|-top-k of the full
     misclassified set (replicated in-process)."""
@@ -1104,7 +1055,7 @@ def test_ze05_hard_examples_are_confidently_wrong(spark, sf_dir):
         ze01_fit,
     )
 
-    rows = _q("ze05_hard_examples")(spark, sf_dir).collect()
+    rows = built("ze05_hard_examples").rows
     assert 0 < len(rows) <= ZE05_TOPK
     feats, _nd, _curve, w_hist = ze01_fit(spark, sf_dir)
     wavg = {b: sum(w[b] for w in w_hist) for b in w_hist[0]}
@@ -1127,7 +1078,7 @@ def test_ze05_hard_examples_are_confidently_wrong(spark, sf_dir):
         assert (r.y == 1) == (r.lang == "en")
 
 
-def test_ze01_python_reference_fit(spark, sf_dir):
+def test_ze01_python_reference_fit(spark, sf_dir, built):
     """Third-engine check (yv17's closed-form-recompute discipline):
     a pure-Python reimplementation of the hashed-bigram design matrix
     and the 6 batch-perceptron rounds must reproduce ze01's learning
@@ -1180,7 +1131,7 @@ def test_ze01_python_reference_fit(spark, sf_dir):
                 sum(v * (b + 2) for b, v in w.items()),
             )
         )
-    got = [tuple(r) for r in _q("ze01_perceptron_filter")(spark, sf_dir).collect()]
+    got = [tuple(r) for r in built("ze01_perceptron_filter").rows]
     assert got == want
 
 
@@ -1231,7 +1182,7 @@ def _py_ze_fit(spark, sf_dir):
     return feats, w_hist, source
 
 
-def test_ze_band_python_reference_gate_calibration_hard_examples(spark, sf_dir):
+def test_ze_band_python_reference_gate_calibration_hard_examples(spark, sf_dir, built):
     """Three-engine agreement for the APPLY/audit half of the ze band:
     the Python fit's averaged weights must reproduce ze02's per-source
     census, ze04's decile table, and ze05's export exactly."""
@@ -1255,7 +1206,7 @@ def test_ze_band_python_reference_gate_calibration_hard_examples(spark, sf_dir):
         w[2] += 1 if (m > 0) == (y == 1) else 0
     got02 = {
         r.source: [r.n_docs, r.n_kept, r.n_correct]
-        for r in _q("ze02_classifier_gate")(spark, sf_dir).collect()
+        for r in built("ze02_classifier_gate").rows
     }
     assert got02 == dict(want02)
 
@@ -1271,7 +1222,7 @@ def test_ze_band_python_reference_gate_calibration_hard_examples(spark, sf_dir):
         w[2] += 1 if y == 1 else 0
     got04 = {
         r.decile: [r.n_docs, r.n_kept, r.n_tgt]
-        for r in _q("ze04_gate_calibration")(spark, sf_dir).collect()
+        for r in built("ze04_gate_calibration").rows
     }
     assert got04 == dict(want04)
 
@@ -1282,12 +1233,12 @@ def test_ze_band_python_reference_gate_calibration_hard_examples(spark, sf_dir):
     )[:ZE05_TOPK]
     got05 = [
         (r.doc_id, r.y, r.margin)
-        for r in _q("ze05_hard_examples")(spark, sf_dir).collect()
+        for r in built("ze05_hard_examples").rows
     ]
     assert got05 == wrong
 
 
-def test_zf02_batch_order_permutation(spark, sf_dir, tmp_path_factory):
+def test_zf02_batch_order_permutation(spark, sf_dir, built, tmp_path_factory):
     """Reversed arrival order (latestFirst) must not change the
     lineage — the merges claim commutativity, so a true order
     permutation is the direct falsifier (the 3-file split test only
@@ -1317,5 +1268,5 @@ def test_zf02_batch_order_permutation(spark, sf_dir, tmp_path_factory):
     reversed_order = [
         tuple(r) for r in streaming_curation_lineage(spark, sf_dir, stream).collect()
     ]
-    batch = [tuple(r) for r in _q("zf01_curation_lineage")(spark, sf_dir).collect()]
+    batch = [tuple(r) for r in built("zf01_curation_lineage").rows]
     assert reversed_order == batch

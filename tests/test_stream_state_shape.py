@@ -223,34 +223,16 @@ EXPECTED_MICRO_PLANS: dict[str, dict[str, list[dict[str, int]]]] = {
 }
 
 
-def _observed_micro_plans() -> dict[str, list[dict[str, int]]]:
-    seen: dict[str, set] = {}
-    for label, fp in sops.MICRO_PLAN_LOG:
-        seen.setdefault(label, set()).add(fp)
-    return {
-        label: [dict((k, v) for k, v in fp if v) for fp in sorted(fps)]
-        for label, fps in seen.items()
-    }
-
-
-def _builder(name: str):
-    qs = registry.all_queries()
-    return qs[name] if name in qs else qs["zv_" + name]
-
-
 @pytest.mark.parametrize("name", sorted(EXPECTED_STATE_SHAPE))
-def test_stream_state_shape(spark, sf_dir, name):
-    sops.STATE_OPS_LOG.clear()
-    sops.MICRO_PLAN_LOG.clear()
-    df = _builder(name)(spark, sf_dir)
-    df.count()  # ensure full execution (builders materialize eagerly anyway)
-    assert sops.STATE_OPS_LOG == EXPECTED_STATE_SHAPE[name], (
+def test_stream_state_shape(built, name):
+    rec = built(name)
+    assert rec.state_ops == EXPECTED_STATE_SHAPE[name], (
         f"{name}: streaming state shape changed — "
-        f"got {sops.STATE_OPS_LOG}, pinned {EXPECTED_STATE_SHAPE[name]}. "
+        f"got {rec.state_ops}, pinned {EXPECTED_STATE_SHAPE[name]}. "
         "If deliberate, update EXPECTED_STATE_SHAPE with the new "
         "state-store budget in mind."
     )
-    observed = _observed_micro_plans()
+    observed = rec.observed_micro_plans()
     assert observed == EXPECTED_MICRO_PLANS[name], (
         f"{name}: micro-batch plan fingerprint changed — "
         f"got {observed}, pinned {EXPECTED_MICRO_PLANS[name]}. "
@@ -318,7 +300,7 @@ def test_first_merge_trigger_is_fingerprinted(spark, sf_dir, tmp_path):
     rendered = [fp for label, fp in sops.MICRO_PLAN_LOG if label == "za04:pairs_merge"]
     assert len(rendered) == 2  # one per shape, each rendered once
     first = EXPECTED_MICRO_PLANS["za04_stream_preference_pairs"]["za04:pairs_merge"][0]
-    shapes = _observed_micro_plans()["za04:pairs_merge"]
+    shapes = [{k: v for k, v in fp if v} for fp in set(rendered)]
     assert first in shapes and len(shapes) == 2
     (merge,) = [fp for fp in shapes if fp != first]
     assert merge["exchanges"] == first["exchanges"] + 1  # the union-merge groupBy

@@ -91,7 +91,7 @@ def test_stream_dedup_state_eviction(spark, sf_dir, multi_file_events):
     )
 
 
-def test_stateful_sessions_span_batches(spark, sf_dir, multi_file_events):
+def test_stateful_sessions_span_batches(spark, built, multi_file_events):
     """Sessions crossing a file boundary keep their ordinal and extend;
     the last emission per (user, seq) equals the batch sessionization."""
     stream = _read_stream_dir(spark, multi_file_events)
@@ -103,11 +103,11 @@ def test_stateful_sessions_span_batches(spark, sf_dir, multi_file_events):
         .agg(F.max_by(F.struct("session_start", "session_end", "n_events", "sum_value"), "n_events").alias("s"))
         .select("user_id", "session_seq", "s.*")
     )
-    batch = registry.get("av08_sessionize").builder(spark, sf_dir).select(
-        "user_id", "session_seq", "session_start", "session_end", "n_events", "sum_value"
-    )
     f = {tuple(r) for r in final.collect()}
-    b = {tuple(r) for r in batch.collect()}
+    b = {
+        (r.user_id, r.session_seq, r.session_start, r.session_end, r.n_events, r.sum_value)
+        for r in built("av08_sessionize").rows
+    }
     assert f == b
     # and at least one session must actually have been extended across batches
     multi_emitted = got.groupBy("user_id", "session_seq").count().where(F.col("count") > 1)
@@ -181,7 +181,7 @@ def test_merged_stream_removes_scratch_root(spark, multi_file_events, tmp_path, 
         tempfile.tempdir = saved
 
 
-def test_stream_stream_join_across_batches(spark, sf_dir, multi_file_events):
+def test_stream_stream_join_across_batches(spark, built, multi_file_events):
     """Stream-stream interval join over time-ordered micro-batches equals
     the batch range join: pairs spanning a batch boundary (error in one
     file, click in the next) must be buffered and matched, and watermark
@@ -193,15 +193,13 @@ def test_stream_stream_join_across_batches(spark, sf_dir, multi_file_events):
     )
     got = run_to_memory(stream_stream_interval_join(stream), "append")
     streamed = {tuple(r) for r in got.collect()}
-    batch = registry.get("av07_range_join").builder(spark, sf_dir)
     expected = {
-        (r.err_id, r.click_id, r.user_id, r.lag_ms)
-        for r in batch.select("err_id", "click_id", "user_id", "lag_ms").collect()
+        (r.err_id, r.click_id, r.user_id, r.lag_ms) for r in built("av07_range_join").rows
     }
     assert streamed == expected
 
 
-def test_stream_outer_join_batch_invariant(spark, sf_dir, multi_file_events):
+def test_stream_outer_join_batch_invariant(spark, sf_dir, built, multi_file_events):
     """st07's post-cutoff result must not depend on micro-batch layout:
     running the outer join over time-ordered multi-file batches and
     applying the same emission cutoff yields exactly the single-batch
@@ -230,17 +228,15 @@ def test_stream_outer_join_batch_invariant(spark, sf_dir, multi_file_events):
             F.col("click_id").isNotNull() | (F.col("e_ts") < F.lit(cutoff))
         ).select("err_id", "click_id", "user_id", "lag_ms").collect()
     }
-    single = {
-        tuple(r) for r in registry.get("st07_stream_outer_join").builder(spark, sf_dir).collect()
-    }
+    single = {tuple(r) for r in built("st07_stream_outer_join").rows}
     assert multi == single
     # sanity: some nulls survive the cutoff, and every matched pair is there
     assert any(c is None for _, c, _, _ in multi)
-    inner = {tuple(r) for r in registry.get("st06_stream_stream_join").builder(spark, sf_dir).collect()}
+    inner = {tuple(r) for r in built("st06_stream_stream_join").rows}
     assert inner <= multi
 
 
-def test_stream_upsert_layout_invariant(spark, sf_dir, multi_file_events):
+def test_stream_upsert_layout_invariant(spark, built, multi_file_events):
     """The foreachBatch CDC merge must yield the same standing table for
     any micro-batch layout: a 3-file run (one file per trigger) equals
     the single-batch registry run and the batch argmax oracle."""
@@ -250,13 +246,13 @@ def test_stream_upsert_layout_invariant(spark, sf_dir, multi_file_events):
         "ts_ns", F.col("ts_ns").cast("long")
     )
     multi = streaming_upsert(stream).toPandas()
-    single = registry.get("st08_stream_upsert").builder(spark, sf_dir).toPandas()
+    single = built("st08_stream_upsert").pdf
     multi_s = multi.rename(columns={}).sort_values("user_id").reset_index(drop=True)
     single_s = single.sort_values("user_id").reset_index(drop=True)
     assert multi_s.equals(single_s)
 
 
-def test_stream_neardup_layout_invariant(spark, sf_dir, tmp_path_factory):
+def test_stream_neardup_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     """st09's incremental MinHash+LSH must produce EXACTLY batch dd02's
     verified pair set for any micro-batch layout: a 3-file run (one file
     per trigger, docs split by id) equals the single-batch registry run
@@ -286,14 +282,14 @@ def test_stream_neardup_layout_invariant(spark, sf_dir, tmp_path_factory):
     multi = {tuple(r) for r in streaming_neardup(stream, docs).collect()}
     single = {
         tuple(r)
-        for r in registry.get("st09_stream_neardup").builder(spark, sf_dir).collect()
+        for r in built("st09_stream_neardup").rows
     }
-    batch = {tuple(r) for r in registry.get("dd02_minhash_lsh").builder(spark, sf_dir).collect()}
+    batch = {tuple(r) for r in built("dd02_minhash_lsh").rows}
     assert multi == single == batch
     assert len(batch) > 0  # the fixture corpus does contain near-dups
 
 
-def test_stream_funnel_state_across_batches(spark, sf_dir, multi_file_events):
+def test_stream_funnel_state_across_batches(spark, built, multi_file_events):
     """xw01's per-user funnel anchors must carry across micro-batches
     (a view in file 1 completing with a click in file 2 still counts):
     the 3-batch run equals the single-batch registry run equals the
@@ -302,16 +298,14 @@ def test_stream_funnel_state_across_batches(spark, sf_dir, multi_file_events):
 
     stream = _read_stream_dir(spark, multi_file_events)
     multi = {tuple(r) for r in streaming_funnel(stream).collect()}
-    single = {
-        tuple(r) for r in registry.get("xw01_stream_funnel").builder(spark, sf_dir).collect()
-    }
-    batch = {tuple(r) for r in registry.get("xf01_funnel_steps").builder(spark, sf_dir).collect()}
+    single = {tuple(r) for r in built("xw01_stream_funnel").rows}
+    batch = {tuple(r) for r in built("xf01_funnel_steps").rows}
     assert multi == single == batch
     counts = dict(multi)
     assert counts["view"] >= counts["view>click"] >= counts["view>click>purchase"] > 0
 
 
-def test_stream_hll_rollup_layout_invariant(spark, sf_dir, multi_file_events):
+def test_stream_hll_rollup_layout_invariant(spark, sf_dir, built, multi_file_events):
     """xk03's sketch store must be micro-batch-layout invariant by
     ALGEBRA (hll_union is associative/commutative/idempotent): a 3-file
     run (one file per trigger) must report the same weekly verdict rows
@@ -326,7 +320,7 @@ def test_stream_hll_rollup_layout_invariant(spark, sf_dir, multi_file_events):
     multi = {tuple(r) for r in streaming_hll_rollup(spark, sf_dir, stream).collect()}
     single = {
         tuple(r)
-        for r in registry.get("xk03_stream_hll_rollup").builder(spark, sf_dir).collect()
+        for r in built("xk03_stream_hll_rollup").rows
     }
     assert multi == single
     assert multi and all(ok for _, _, ok in multi)

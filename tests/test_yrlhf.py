@@ -9,16 +9,12 @@ from spotify_tags_etl_spark.operators.yrlhf import (
     YV07_MODELS,
     YV08_K,
     YV09_GROUP,
-    yv05,
-    yv06,
-    yv07,
-    yv08,
     yv09,
 )
 
 
-def test_yv05_pairs_are_strict_and_bounded(spark, sf_dir):
-    rows = yv05(spark, sf_dir).collect()
+def test_yv05_pairs_are_strict_and_bounded(built):
+    rows = built("yv05_preference_pairs").rows
     assert rows, "fixture must produce at least one preference pair"
     pids = [r.pid for r in rows]
     assert len(pids) == len(set(pids))
@@ -31,8 +27,8 @@ def test_yv05_pairs_are_strict_and_bounded(spark, sf_dir):
         assert r.rejected_doc // YV05_GROUP == r.pid
 
 
-def test_yv06_kappa_identities(spark, sf_dir):
-    row = yv06(spark, sf_dir).collect()[0]
+def test_yv06_kappa_identities(built):
+    row = built("yv06_annotator_kappa").rows[0]
     assert 0 < row.agree <= row.n
     assert 0 <= row.po_ppm <= 1_000_000
     assert 0 <= row.pe_ppm <= 1_000_000
@@ -42,8 +38,8 @@ def test_yv06_kappa_identities(spark, sf_dir):
     assert row.kappa_ppm <= 1_000_000
 
 
-def test_yv07_matrix_is_complete_and_consistent(spark, sf_dir):
-    rows = yv07(spark, sf_dir).collect()
+def test_yv07_matrix_is_complete_and_consistent(built):
+    rows = built("yv07_winrate_matrix").rows
     assert len(rows) == YV07_MODELS * (YV07_MODELS - 1) // 2
     for r in rows:
         assert r.m_lo < r.m_hi
@@ -54,8 +50,8 @@ def test_yv07_matrix_is_complete_and_consistent(spark, sf_dir):
         assert 999_998 <= r.winrate_lo_ppm + hi_ppm <= 1_000_000
 
 
-def test_yv08_buckets_partition_problems(spark, sf_dir):
-    rows = yv08(spark, sf_dir).collect()
+def test_yv08_buckets_partition_problems(built):
+    rows = built("yv08_pass_at_k").rows
     assert rows
     for r in rows:
         assert 0 <= r.bucket <= 10
@@ -68,7 +64,7 @@ def test_yv08_buckets_partition_problems(spark, sf_dir):
     assert any(r.bucket == 0 for r in rows)
 
 
-def test_yv08_estimator_matches_closed_form(spark, sf_dir):
+def test_yv08_estimator_matches_closed_form(sf_dir, built):
     # recompute 1 - C(n-c,k)/C(n,k) in Python for every problem, re-bucket,
     # and compare the histogram exactly
     from math import comb
@@ -93,12 +89,12 @@ def test_yv08_estimator_matches_closed_form(spark, sf_dir):
         ratio_ppm = comb(nf, YV08_K) * 1_000_000 // comb(n, YV08_K) if nf >= YV08_K else 0
         bucket = (1_000_000 - ratio_ppm) // 100_000
         hist[bucket] = hist.get(bucket, 0) + 1
-    got = {r.bucket: r.n_problems for r in yv08(spark, sf_dir).collect()}
+    got = {r.bucket: r.n_problems for r in built("yv08_pass_at_k").rows}
     assert got == hist
 
 
-def test_yv09_advantages_center_on_zero(spark, sf_dir):
-    rows = yv09(spark, sf_dir).collect()
+def test_yv09_advantages_center_on_zero(built):
+    rows = built("yv09_grpo_advantage").rows
     assert rows
     for r in rows:
         assert 1 <= r.n <= YV09_GROUP
@@ -117,10 +113,10 @@ def test_yv09_single_exchange(spark, sf_dir):
     assert "Exchange SinglePartition" not in plan.split("AdaptiveSparkPlan")[0]
 
 
-def test_yv11_value_is_between_mean_and_max(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yrlhf import YV11_K, yv11
+def test_yv11_value_is_between_mean_and_max(built):
+    from spotify_tags_etl_spark.operators.yrlhf import YV11_K
 
-    rows = yv11(spark, sf_dir).collect()
+    rows = built("yv11_best_of_n_value").rows
     assert rows
     for r in rows:
         assert r.n >= YV11_K
@@ -130,7 +126,7 @@ def test_yv11_value_is_between_mean_and_max(spark, sf_dir):
         assert r.uplift_micro >= -1
 
 
-def test_yv11_matches_exhaustive_subsets(spark, sf_dir):
+def test_yv11_matches_exhaustive_subsets(sf_dir, built):
     # brute-force E[max over all C(n,4) subsets] for a handful of groups
     from itertools import combinations
 
@@ -138,7 +134,6 @@ def test_yv11_matches_exhaustive_subsets(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from spotify_tags_etl_spark.operators.yrlhf import yv11
 
     ids = pq.read_table(f"{sf_dir}/events.parquet", columns=["event_id"])[
         "event_id"
@@ -147,7 +142,7 @@ def test_yv11_matches_exhaustive_subsets(spark, sf_dir):
     for eid in ids:
         h = int(hashlib.md5(f"v:{eid}".encode()).hexdigest()[:8], 16)
         groups.setdefault(eid // 16, []).append(h % 1000)
-    got = {r.gid: r.e_bo4_micro for r in yv11(spark, sf_dir).collect()}
+    got = {r.gid: r.e_bo4_micro for r in built("yv11_best_of_n_value").rows}
     checked = 0
     for gid, rewards in sorted(groups.items())[:5]:
         if len(rewards) < 4:
@@ -161,10 +156,8 @@ def test_yv11_matches_exhaustive_subsets(spark, sf_dir):
     assert checked
 
 
-def test_yv12_overconfidence_shows_in_every_populated_bin(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yrlhf import yv12
-
-    rows = yv12(spark, sf_dir).collect()
+def test_yv12_overconfidence_shows_in_every_populated_bin(built):
+    rows = built("yv12_calibration_bins").rows
     assert len(rows) == 11
     assert sum(r.n for r in rows) > 0
     for r in rows:
@@ -176,12 +169,12 @@ def test_yv12_overconfidence_shows_in_every_populated_bin(spark, sf_dir):
     assert weighted_gap > 50_000
 
 
-def test_yv13_counts_all_triads(spark, sf_dir):
+def test_yv13_counts_all_triads(built):
     from math import comb
 
-    from spotify_tags_etl_spark.operators.yrlhf import YV07_MODELS, yv13
+    from spotify_tags_etl_spark.operators.yrlhf import YV07_MODELS
 
-    row = yv13(spark, sf_dir).collect()[0]
+    row = built("yv13_preference_cycles").rows[0]
     assert row.n_triads == comb(YV07_MODELS, 3)
     assert 0 <= row.n_cyclic <= row.n_triads
     assert row.cyclic_ppm == row.n_cyclic * 1_000_000 // row.n_triads

@@ -35,8 +35,8 @@ def _brute_frontier(pts: list[tuple[int, int, int]]) -> set[int]:
     return keep
 
 
-def test_ys01_matches_brute_force_strict_dominance(spark, sf_dir):
-    got = {r.o_orderkey for r in ys01(spark, sf_dir).collect()}
+def test_ys01_matches_brute_force_strict_dominance(spark, sf_dir, built):
+    got = {r.o_orderkey for r in built("ys01_pareto_frontier").rows}
     pts = [
         (r.o_orderkey, r.cents, r.day)
         for r in load_table(spark, sf_dir, "orders")
@@ -91,8 +91,8 @@ def test_ys01_construction_partition_invariant(spark, sf_dir, num_partitions):
     assert got == brute
 
 
-def test_yd02_matches_python_exact_ks(spark, sf_dir):
-    row = yd02(spark, sf_dir).collect()[0]
+def test_yd02_matches_python_exact_ks(spark, sf_dir, built):
+    row = built("yd02_ks_two_sample").rows[0]
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type").isin(YD02_A, YD02_B) & F.col("value").isNotNull())
@@ -111,8 +111,8 @@ def test_yd02_matches_python_exact_ks(spark, sf_dir):
     assert row.ks_ppm == best * 1_000_000 // (n * m)
 
 
-def test_yz01_conserves_bytes_and_bins_are_contiguous(spark, sf_dir):
-    rows = yz01(spark, sf_dir).collect()
+def test_yz01_conserves_bytes_and_bins_are_contiguous(spark, sf_dir, built):
+    rows = built("yz01_compaction_planner").rows
     total = (
         load_table(spark, sf_dir, "documents").agg(F.sum("n_chars")).collect()[0][0]
     )
@@ -179,10 +179,10 @@ def test_yscale_plans_have_no_global_order_window(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_yc01_chunks_cover_tokens_exactly(spark, sf_dir):
+def test_yc01_chunks_cover_tokens_exactly(spark, sf_dir, built):
     from spotify_tags_etl_spark.operators.yscale import YC01_SIZE, YC01_STRIDE, yc01
 
-    chunks = yc01(spark, sf_dir).collect()
+    chunks = built("yc01_chunk_documents").rows
     docs = {
         r.doc_id: [t for t in r.text.lower().split() if t]
         for r in load_table(spark, sf_dir, "documents").collect()
@@ -203,10 +203,13 @@ def test_yc01_chunks_cover_tokens_exactly(spark, sf_dir):
             assert r.chunk_hash == hashlib.md5(" ".join(want).encode()).hexdigest()
 
 
-def test_yf01_matches_python_recount(spark, sf_dir):
+def test_yf01_matches_python_recount(spark, sf_dir, built):
     from spotify_tags_etl_spark.operators.yscale import yf01
 
-    got = {r.doc_id: (r.n_grams, r.n_distinct, r.rep_ppm) for r in yf01(spark, sf_dir).collect()}
+    got = {
+        r.doc_id: (r.n_grams, r.n_distinct, r.rep_ppm)
+        for r in built("yf01_repetition_score").rows
+    }
     for r in load_table(spark, sf_dir, "documents").collect():
         toks = r.text.split(" ")
         if len(toks) < 3:
@@ -217,10 +220,10 @@ def test_yf01_matches_python_recount(spark, sf_dir):
         assert got[r.doc_id] == (T, D, 1_000_000 * (T - D) // T)
 
 
-def test_yg02_matches_python_midrank_u(spark, sf_dir):
+def test_yg02_matches_python_midrank_u(spark, sf_dir, built):
     from spotify_tags_etl_spark.operators.yscale import YD02_A, YD02_B, yg02
 
-    row = yg02(spark, sf_dir).collect()[0]
+    row = built("yg02_rank_sum_test").rows[0]
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type").isin(YD02_A, YD02_B) & F.col("value").isNotNull())
@@ -248,10 +251,10 @@ def test_yg02_matches_python_midrank_u(spark, sf_dir):
     assert row.auc_ppm == two_u * 1_000_000 // (2 * n * m)
 
 
-def test_ym01_matches_python_scan(spark, sf_dir):
+def test_ym01_matches_python_scan(spark, sf_dir, built):
     from spotify_tags_etl_spark.operators.yscale import YM01_PATTERN, ym01
 
-    got = {r.user_id: r.n_matches for r in ym01(spark, sf_dir).collect()}
+    got = {r.user_id: r.n_matches for r in built("ym01_sequence_pattern_match").rows}
     rows = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     ).collect()
@@ -279,13 +282,13 @@ def test_batch2_plans_clean(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_ye01_matches_numpy_matmul(spark, sf_dir):
+def test_ye01_matches_numpy_matmul(spark, sf_dir, built):
     import hashlib
     import math
 
     from spotify_tags_etl_spark.operators.yscale import YE01_D_OUT, ye01
 
-    got = {(r.vec_id, r.out_dim): r.dot for r in ye01(spark, sf_dir).collect()}
+    got = {(r.vec_id, r.out_dim): r.dot for r in built("ye01_int8_projection").rows}
     emb = load_table(spark, sf_dir, "embeddings").collect()
 
     def w(i: int, j: int) -> int:
@@ -298,12 +301,12 @@ def test_ye01_matches_numpy_matmul(spark, sf_dir):
             assert got[(r.vec_id, j)] == want, (r.vec_id, j)
 
 
-def test_yn02_matches_brute_force_pairs(spark, sf_dir):
+def test_yn02_matches_brute_force_pairs(spark, sf_dir, built):
     import hashlib
 
     from spotify_tags_etl_spark.operators.yscale import YN02_R, yn02
 
-    row = yn02(spark, sf_dir).collect()[0]
+    row = built("yn02_grid_neighbor_join").rows[0]
     ids = [r.event_id for r in load_table(spark, sf_dir, "events").select("event_id").collect()]
 
     def coord(prefix: str, eid: int) -> int:
@@ -338,7 +341,7 @@ def test_batch3_plans_clean(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_yx01_is_cross_split_slice_of_dd02(spark, sf_dir):
+def test_yx01_is_cross_split_slice_of_dd02(spark, sf_dir, built):
     """Leakage rows must be exactly the dd02-verified near-dup pairs
     whose endpoints hash into different splits."""
     from spotify_tags_etl_spark.functions.hashing import hash_frac
@@ -348,9 +351,9 @@ def test_yx01_is_cross_split_slice_of_dd02(spark, sf_dir):
         minhash_signatures,
         word_shingles,
     )
-    from spotify_tags_etl_spark.operators.yscale import YX01_PERMILLE, yx01
+    from spotify_tags_etl_spark.operators.yscale import YX01_PERMILLE
 
-    got = {(r.d1, r.d2): (r.split_1, r.split_2) for r in yx01(spark, sf_dir).collect()}
+    got = {(r.d1, r.d2): (r.split_1, r.split_2) for r in built("yx01_split_leakage_audit").rows}
     docs = load_table(spark, sf_dir, "documents")
     sh = word_shingles(docs)
     verified = {
@@ -376,11 +379,10 @@ def test_yx01_is_cross_split_slice_of_dd02(spark, sf_dir):
     assert got == want
 
 
-def test_yi03_equals_batch_manifest_minus_ndv(spark, sf_dir):
+def test_yi03_equals_batch_manifest_minus_ndv(spark, sf_dir, built):
     from spotify_tags_etl_spark.operators.yscale import yl01
-    from spotify_tags_etl_spark.streaming.ops import yi03
 
-    stream_rows = {tuple(r) for r in yi03(spark, sf_dir).collect()}
+    stream_rows = {tuple(r) for r in built("yi03_stream_stats_manifest").rows}
     batch_rows = {
         tuple(r)
         for r in yl01(spark, sf_dir)
@@ -396,10 +398,8 @@ def test_yi03_equals_batch_manifest_minus_ndv(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_yl02_equalizes_class_counts(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yscale import yl02
-
-    rows = yl02(spark, sf_dir).collect()
+def test_yl02_equalizes_class_counts(spark, sf_dir, built):
+    rows = built("yl02_class_balance").rows
     sizes = {
         r.label: r.n
         for r in load_table(spark, sf_dir, "embeddings")
@@ -416,10 +416,10 @@ def test_yl02_equalizes_class_counts(spark, sf_dir):
     assert all(n == mn for n in per_label.values())
 
 
-def test_yl03_matches_python_sliding_distinct(spark, sf_dir):
-    from spotify_tags_etl_spark.operators.yscale import YL03_WINDOW, yl03
+def test_yl03_matches_python_sliding_distinct(spark, sf_dir, built):
+    from spotify_tags_etl_spark.operators.yscale import YL03_WINDOW
 
-    got = {r.day: (r.dau, r.mau, r.stickiness_ppm) for r in yl03(spark, sf_dir).collect()}
+    got = {r.day: (r.dau, r.mau, r.stickiness_ppm) for r in built("yl03_dau_mau_stickiness").rows}
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("CAST(unix_micros(ts) DIV 86400000000 AS BIGINT)").alias("day"), "user_id"
     ).collect()
@@ -435,12 +435,12 @@ def test_yl03_matches_python_sliding_distinct(spark, sf_dir):
         assert got[d] == (dau, mau, 1_000_000 * dau // mau), d
 
 
-def test_yl04_matches_python_topk_overlap(spark, sf_dir):
+def test_yl04_matches_python_topk_overlap(spark, sf_dir, built):
     import collections
 
-    from spotify_tags_etl_spark.operators.yscale import YL04_K, yl04
+    from spotify_tags_etl_spark.operators.yscale import YL04_K
 
-    row = yl04(spark, sf_dir).collect()[0]
+    row = built("yl04_topk_drift").rows[0]
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("unix_micros(ts) DIV 86400000000").alias("day")
     ).collect()
@@ -458,31 +458,28 @@ def test_yl04_matches_python_topk_overlap(spark, sf_dir):
     assert row.jaccard_permille == 1000 * len(a & b) // len(a | b)
 
 
-def test_yy01_metrics_agree_with_components(spark, sf_dir):
+def test_yy01_metrics_agree_with_components(built):
     """The composed health report must equal the component operators'
     own numbers — composition may not drift from its parts."""
-    from spotify_tags_etl_spark.operators.yscale import yd02, yl01, yy01
-
-    got = {r.metric: r.value for r in yy01(spark, sf_dir).collect()}
-    manifest = yl01(spark, sf_dir).collect()
+    got = {r.metric: r.value for r in built("yy01_pipeline_health_report").rows}
+    manifest = built("yl01_partition_stats_manifest").rows
     assert got["days_covered"] == len(manifest)
     assert got["total_events"] == sum(r.n_rows for r in manifest)
-    assert got["value_drift_ks_ppm"] == yd02(spark, sf_dir).collect()[0].ks_ppm
-    from spotify_tags_etl_spark.plans.registry import get
+    assert got["value_drift_ks_ppm"] == built("yd02_ks_two_sample").rows[0].ks_ppm
 
-    skew = get("xj02_key_skew_metrics").builder(spark, sf_dir).collect()[0]
+    skew = built("xj02_key_skew_metrics").rows[0]
     assert got["hottest_key_share_ppm"] == skew.max_share_ppm
-    xw05 = get("xw05_watermark_lateness_audit").builder(spark, sf_dir).collect()
+    xw05 = built("xw05_watermark_lateness_audit").rows
     ten = next(r for r in xw05 if r.watermark_min == 10)
     assert got["late_drop_ppm_10m"] == ten.drop_ppm
 
 
-def test_yd03_matches_brute_force_pair_sums(spark, sf_dir):
+def test_yd03_matches_brute_force_pair_sums(spark, sf_dir, built):
     """The O(n log n) prefix-sum closed form must equal the literal
     O(n*m) pairwise |x - y| sums."""
     from spotify_tags_etl_spark.operators.yscale import yd03
 
-    row = yd03(spark, sf_dir).collect()[0]
+    row = built("yd03_energy_distance").rows[0]
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type").isin(YD02_A, YD02_B) & F.col("value").isNotNull())
@@ -500,16 +497,18 @@ def test_yd03_matches_brute_force_pair_sums(spark, sf_dir):
     assert row.energy_num == str(2 * sxy * n * m - sxx * m * m - syy * n * n)
 
 
-def test_yw02_publishes_only_the_clean_candidate(spark, sf_dir):
+def test_yw02_publishes_only_the_clean_candidate(built):
     """Side-effect contract: the publish pointer must exist and point at
     the CLEAN candidate's staging path; the dirty candidate must be
     rejected with the exact injected violation counts."""
     import glob
     import os
 
-    from spotify_tags_etl_spark.operators.yscale import yw02
 
-    rows = {(r.candidate, r.chk): (r.n_bad, r.published) for r in yw02(spark, sf_dir).collect()}
+    rows = {
+        (r.candidate, r.chk): (r.n_bad, r.published)
+        for r in built("yw02_write_audit_publish").rows
+    }
     assert rows[("clean", "pk_unique")] == (0, True)
     assert rows[("dirty", "fk_not_null")] == (3, False)
     assert rows[("dirty", "pk_unique")] == (1, False)

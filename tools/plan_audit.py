@@ -3,12 +3,17 @@
 Records, per query, the executed-plan metrics that define its scale
 story — shuffle exchange count, broadcast join count, Python eval
 nodes, single-partition exchanges, cartesian products — into
-``tools/plans_snapshot.json``. ``tests/test_plan_snapshot.py`` then
-fails any future change that makes a query's plan WORSE than the
-committed snapshot (more shuffles, new Python nodes, a new
-single-reducer stage), while silently allowing improvements; re-run
-this tool to ratchet the snapshot down after an intentional
-improvement.
+``tools/plans_snapshot.json``. The plan is read straight after the
+builder returns, before any action on the frame: with AQE on, that is
+the initial (``isFinalPlan=false``) plan, the declared shape, which
+does not depend on runtime statistics.
+
+``tests/test_plan_snapshot.py`` then fails any future change that makes
+a query's plan WORSE than the committed snapshot (more shuffles, new
+Python nodes, a new single-reducer stage), while silently allowing
+improvements; it reads each fingerprint from the session build record
+(``tests/conftest.py``). Re-run this tool to ratchet the snapshot down
+after an intentional improvement.
 
 This is the regression-proofing for the round-3/4 plan work: the LSH
 band-join rewrite (10 → 4 exchanges), the scalerank de-NTILE (no
@@ -31,11 +36,10 @@ sys.path.insert(0, _REPO)
 
 SNAPSHOT_PATH = os.path.join(_REPO, "tools", "plans_snapshot.json")
 
-#: Metric name -> executed-plan substring counted. "Worse" = strictly
-#: greater than the snapshot for every metric here. Single source of
-#: truth shared with the streaming micro-batch pins — see
+#: Metric counting is shared with the streaming micro-batch pins. "Worse"
+#: = strictly greater than the snapshot on any metric — see
 #: spotify_tags_etl_spark/plans/planmetrics.py for the rationale notes.
-from spotify_tags_etl_spark.plans.planmetrics import METRICS  # noqa: E402
+from spotify_tags_etl_spark.plans.planmetrics import count_metrics  # noqa: E402
 
 
 def audited_names() -> list[str]:
@@ -80,9 +84,10 @@ def audited_names() -> list[str]:
 
 
 def fingerprint(df) -> dict[str, int]:
-    df.write.format("noop").mode("overwrite").save()  # force AQE final plan
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {m: plan.count(sub) for m, sub in METRICS.items()}
+    """Metric counts of ``df``'s plan before any action on it (AQE's
+    initial plan; a noop write would run a separate plan, not finalize
+    this one)."""
+    return count_metrics(df._jdf.queryExecution().executedPlan().toString())
 
 
 def collect(sf_dir: str) -> dict[str, dict[str, int]]:
