@@ -48,6 +48,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spotify_tags_etl_spark.sources.tpch import read_parquet
+
 #: Bump when the PARTIAL SCHEMA or extraction semantics change — a
 #: partial written by an older extraction must read as stale.
 PARTIALS_VERSION = 1
@@ -200,7 +202,7 @@ def _extract_doc_frames(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     # ONE scan of the part file feeds all five frame extractions: a
     # part file is the bounded partition unit (100 TB shape: a few
     # hundred MB), so materializing it once beats five re-reads
-    docs = spark.read.parquet(path).localCheckpoint(eager=True)
+    docs = read_parquet(spark, path).localCheckpoint(eager=True)
     stoplist = ", ".join(f"'{w}'" for w in _zg.ZG06_STOPWORDS)
     # zf01_flags(with_rules=True)'s rule spelling, verbatim
     base = (
@@ -267,7 +269,7 @@ def _extract_emb_frames(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     projected / sign-bucketed corpus row (vec_id, q, na, bk1..bkT)."""
     from spotify_tags_etl_spark.operators.zcops import zc03_project
 
-    emb = spark.read.parquet(path).select("vec_id", "embedding")
+    emb = read_parquet(spark, path).select("vec_id", "embedding")
     return {"vecs": zc03_project(emb)}
 
 
@@ -341,4 +343,4 @@ def read_partial(spark: SparkSession, dirs: dict[str, str], frame: str) -> DataF
     """Union-read one partial frame across every input file's published
     directory — the merge layer's input. One scan relation over N
     parquet paths; column pruning reaches it like any parquet scan."""
-    return spark.read.parquet(*[os.path.join(d, f"{frame}.parquet") for d in dirs.values()])
+    return read_parquet(spark, *[os.path.join(d, f"{frame}.parquet") for d in dirs.values()])

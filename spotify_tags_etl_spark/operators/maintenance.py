@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spotify_tags_etl_spark.plans.registry import register
-from spotify_tags_etl_spark.sources.tpch import load_table
+from spotify_tags_etl_spark.sources.tpch import load_table, read_parquet
 
 # far above max c_custkey at any plausible SF (150k x SF): a small
 # offset collides with REAL keys as SF grows (1e6 collides at SF>=7),
@@ -359,11 +359,13 @@ def uz04(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "Schema-evolution scan: two parquet generations of the same "
-        "table — v2 adds a column — read as ONE dataset via mergeSchema "
-        "footer reconciliation; missing columns null-fill. The lakehouse "
-        "add-a-column migration path: no rewrite of old files, readers "
-        "see the union schema. (At scale mergeSchema reads every footer "
-        "— pin the merged schema in a metastore once evolution settles.)"
+        "table — v2 adds a column — read as ONE dataset under the union "
+        "schema, which is v2's: the writer of v2 hands it over, so no "
+        "footer is reconciled at read time; v1's missing column null-"
+        "fills. The lakehouse add-a-column migration path: no rewrite of "
+        "old files, readers see the union schema. The table schema is "
+        "metadata kept by the writer, as a table format keeps it — "
+        "mergeSchema would read every footer on every scan."
     ),
     tags=("scan", "schema"),
 )
@@ -376,12 +378,10 @@ def uz05(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="uz05_evo_")
     v1_dir, v2_dir = os.path.join(root, "v1"), os.path.join(root, "v2")
     cust.where(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name").write.parquet(v1_dir)
-    cust.where(F.col("c_custkey") % 2 == 1).select(
-        "c_custkey", "c_name", "c_acctbal"
-    ).write.parquet(v2_dir)
+    v2 = cust.where(F.col("c_custkey") % 2 == 1).select("c_custkey", "c_name", "c_acctbal")
+    v2.write.parquet(v2_dir)
     merged = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(v1_dir, v2_dir)
+        read_parquet(spark, v1_dir, v2_dir, schema=v2.schema)
         .select("c_custkey", "c_name", "c_acctbal")
         .localCheckpoint(eager=True)  # detach before temp cleanup
     )
@@ -1137,14 +1137,16 @@ def partitioned_events_path(sf_dir: str) -> str:
     return _pid_tmp_path("/tmp/spark_graft_xv03", tag)
 
 
-def write_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
+def write_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize events as a date-partitioned parquet dataset
     (``event_date=YYYY-MM-DD/`` directories) — the layout step every
-    event warehouse runs so that time-ranged queries prune I/O."""
+    event warehouse runs so that time-ranged queries prune I/O — and
+    return the dataset read back under the written frame's schema
+    (the scan lists the partition column last, as inference would)."""
     path = partitioned_events_path(sf_dir)
     ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
-    return path
+    return read_parquet(spark, path, schema=ev.schema)
 
 
 @register(
@@ -1174,8 +1176,7 @@ def write_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     tags=("source", "layout", "pruning"),
 )
 def xv03(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = write_partitioned_events(spark, sf_dir)
-    part = spark.read.parquet(path)
+    part = write_partitioned_events(spark, sf_dir)
     return (
         part.where(
             F.col("event_date").between(F.lit(XV03_LO).cast("date"), F.lit(XV03_HI).cast("date"))
@@ -1283,7 +1284,7 @@ def xw07(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     batches = _xw07_batches(ev)
     root = tempfile.mkdtemp(prefix="xw07_tt_")
-    versions: list[str] = []
+    versions: list[DataFrame] = []
     state: DataFrame | None = None
     for i, b in enumerate(batches):
         state = b if state is None else (
@@ -1291,12 +1292,10 @@ def xw07(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         path = os.path.join(root, f"v{i}")
         state.write.mode("overwrite").parquet(path)
-        versions.append(path)
-        state = spark.read.parquet(path)
-    as_of_v1 = spark.read.parquet(versions[1]).select(
-        "user_id", F.col("cents").alias("v1_cents")
-    )
-    head = spark.read.parquet(versions[2]).select("user_id", F.col("cents").alias("v2_cents"))
+        state = read_parquet(spark, path, schema=state.schema)
+        versions.append(state)
+    as_of_v1 = versions[1].select("user_id", F.col("cents").alias("v1_cents"))
+    head = versions[2].select("user_id", F.col("cents").alias("v2_cents"))
     out = (
         head.join(as_of_v1, "user_id", "left")
         .select(

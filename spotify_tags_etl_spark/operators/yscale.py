@@ -35,7 +35,7 @@ from spotify_tags_etl_spark.operators.scalerank import (
 )
 from spotify_tags_etl_spark.plans.registry import register
 from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
-from spotify_tags_etl_spark.sources.tpch import load_table
+from spotify_tags_etl_spark.sources.tpch import load_table, read_parquet
 
 
 # ---------------------------------------------------------------------------
@@ -1662,7 +1662,7 @@ def yw02(spark: SparkSession, sf_dir: str) -> DataFrame:
     def wap(name: str, cand: DataFrame) -> list[tuple]:
         staged_path = os.path.join(root, "staging", name)
         cand.write.mode("overwrite").parquet(staged_path)
-        staged = spark.read.parquet(staged_path)  # audit the STAGED files
+        staged = read_parquet(spark, staged_path)  # audit the STAGED files
         verdict = staged.agg(
             F.count(F.when(F.col("o_orderkey").isNull(), 1)).alias("pk_not_null"),
             (F.count(F.lit(1)) - F.count_distinct("o_orderkey")).alias("pk_unique"),

@@ -608,6 +608,7 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
         zb03_grams,
     )
     from spotify_tags_etl_spark.streaming.ops import (
+        BatchStore,
         VersionedMerge,
         record_batch_plan,
         run_foreach_batch,
@@ -624,8 +625,7 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
         )
 
     with stream_scratch("zc04_dsir") as root:
-        docs_root = os.path.join(root, "docgrams")
-        doc_dirs: list[str] = []  # per-batch doc-histogram dirs (idempotent)
+        doc_batches = BatchStore(spark, os.path.join(root, "docgrams"))
         census_store = VersionedMerge(
             spark, os.path.join(root, "census"), "zc04:census_merge", merge_census
         )
@@ -639,10 +639,7 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
                 F.count(F.lit(1)).alias("n")
             )
             record_batch_plan(doc_part, "zc04:doc_partial", seen=plan_seen)
-            doc_dir = os.path.join(docs_root, f"b{batch_id}")
-            doc_part.write.mode("overwrite").parquet(doc_dir)
-            if doc_dir not in doc_dirs:
-                doc_dirs.append(doc_dir)
+            doc_dir = doc_batches.write(doc_part, batch_id)
             # r12: the census partial is a rollup OF the doc partial just
             # written — re-reading those few parquet rows replaces a second
             # full gram pass over the batch (explode + md5 per bigram, the
@@ -651,7 +648,7 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
             # exactly the gram-occurrence counts the direct aggregate made
             # (each (doc, bucket) group's n IS its occurrence count).
             part = (
-                spark.read.parquet(doc_dir)
+                doc_batches.read(doc_dir)
                 .groupBy("bucket")
                 .agg(
                     F.sum("n").alias("raw_n"),
@@ -673,7 +670,7 @@ def streaming_importance_weights(spark: SparkSession, stream_docs: DataFrame) ->
         # backing files; a production run leaves the doc store as the
         # parquet it already is
         census = state.localCheckpoint(eager=True)
-        doc_store = spark.read.parquet(*doc_dirs).localCheckpoint(eager=True)
+        doc_store = doc_batches.read().localCheckpoint(eager=True)
     tot = census.agg(F.sum("raw_n").alias("raw_t"), F.sum("tgt_n").alias("tgt_t"))
     wts = census.crossJoin(F.broadcast(tot)).select(
         "bucket",

@@ -900,6 +900,7 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
         word_shingles,
     )
     from spotify_tags_etl_spark.streaming.ops import (
+        BatchStore,
         VersionedMerge,
         record_batch_plan,
         run_foreach_batch,
@@ -918,10 +919,8 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
     # r13: the scratch delete needs nothing below and nothing below
     # needs it — off the critical path (zf02's close change)
     with stream_scratch("zd05_funnel", background=True) as root:
-        sig_root = os.path.join(root, "signatures")
-        sh_root = os.path.join(root, "shingles")
-        sig_dirs: list[str] = []
-        sh_dirs: list[str] = []
+        sig_batches = BatchStore(spark, os.path.join(root, "signatures"))
+        sh_batches = BatchStore(spark, os.path.join(root, "shingles"))
         census_store = VersionedMerge(
             spark, os.path.join(root, "census"), "zd05:exact_census_merge", merge_census
         )
@@ -942,8 +941,6 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
             sh = word_shingles(batch)
             sig = minhash_signatures(sh)
             record_batch_plan(sig, "zd05:sig_partial", seen=plan_seen)
-            sig_dir = os.path.join(sig_root, f"b{batch_id}")
-            sh_dir = os.path.join(sh_root, f"b{batch_id}")
             part = batch.groupBy(
                 F.md5("text").alias("text_hash"), F.col("source")
             ).agg(
@@ -954,14 +951,10 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
             # them. The census version pointer advances only after ITS
             # commit returns.
             run_parallel(
-                lambda: sig.write.mode("overwrite").parquet(sig_dir),
-                lambda: sh.write.mode("overwrite").parquet(sh_dir),
+                lambda: sig_batches.write(sig, batch_id),
+                lambda: sh_batches.write(sh, batch_id),
                 lambda: census_store(part, batch_id),
             )
-            if sig_dir not in sig_dirs:
-                sig_dirs.append(sig_dir)
-            if sh_dir not in sh_dirs:
-                sh_dirs.append(sh_dir)
 
         run_foreach_batch(stream_docs.select("doc_id", "source", "text"), apply_batch)
         state = census_store.state()
@@ -978,8 +971,8 @@ def streaming_dedup_funnel(spark: SparkSession, stream_docs: DataFrame) -> DataF
         cps = checkpoint_parallel(
             {
                 "census": state,
-                "sig_store": spark.read.parquet(*sig_dirs),
-                "sh_store": spark.read.parquet(*sh_dirs),
+                "sig_store": sig_batches.read(),
+                "sh_store": sh_batches.read(),
             }
         )
     census, sig_store, sh_store = cps["census"], cps["sig_store"], cps["sh_store"]

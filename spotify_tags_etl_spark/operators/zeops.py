@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from spotify_tags_etl_spark.plans.planmetrics import record_plan
 from spotify_tags_etl_spark.plans.registry import register
 from spotify_tags_etl_spark.functions.concurrency import fan_out_scan
-from spotify_tags_etl_spark.sources.tpch import load_table
+from spotify_tags_etl_spark.sources.tpch import load_table, read_parquet
 
 # ---------------------------------------------------------------------------
 # ze01 — batch perceptron quality classifier (trained in-engine)
@@ -708,9 +708,7 @@ def ze02_score_parts(
         target = _score_part_dir(key)
         if artifactio.read_meta_key(target) != key:
             artifactio.remove_unservable_target(target, key)
-            gf = spark.read.parquet(
-                os.path.join(doc_dirs[relname], "design.parquet")
-            )
+            gf = read_parquet(spark, os.path.join(doc_dirs[relname], "design.parquet"))
             bias = (
                 gf.select("doc_id", "y")
                 .distinct()
@@ -810,7 +808,8 @@ def ze02_margins_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
             _nd, _curve, w_hist = ze01_fit_artifact(spark, sf_dir)
             wavg = {b: sum(w[b] for w in w_hist) for b in w_hist[0]}
             part_dirs, _ = ze02_score_parts(spark, key["corpus"], wavg)
-            scored = spark.read.parquet(
+            scored = read_parquet(
+                spark,
                 *[os.path.join(d, "m.parquet") for d in part_dirs.values()]
             )
             os.makedirs(os.path.dirname(target), exist_ok=True)
@@ -842,9 +841,7 @@ def ze02_margins_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         _MARGINS_MEMO[memo_k] = target
-    return spark.read.parquet(
-        os.path.join(_MARGINS_MEMO[memo_k], "margins.parquet")
-    )
+    return read_parquet(spark, os.path.join(_MARGINS_MEMO[memo_k], "margins.parquet"))
 
 
 # ---------------------------------------------------------------------------

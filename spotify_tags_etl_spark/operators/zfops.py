@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from spotify_tags_etl_spark.functions.concurrency import (
     bounded_shuffle,
@@ -40,7 +41,7 @@ from spotify_tags_etl_spark.operators.zaops import (
 from spotify_tags_etl_spark.operators.zcops import _zc03_ctes, zc03
 from spotify_tags_etl_spark.plans.planmetrics import record_plan
 from spotify_tags_etl_spark.plans.registry import register
-from spotify_tags_etl_spark.sources.tpch import load_table
+from spotify_tags_etl_spark.sources.tpch import load_table, read_parquet
 
 # ---------------------------------------------------------------------------
 # zf01 — per-source first-drop-reason curation lineage
@@ -712,9 +713,7 @@ def zf01_flags_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
             artifactio.publish_atomic(tmp, target, key)
             artifactio.gc_superseded(target, _flags_supersedes(key))
         _FLAGS_MEMO[memo_k] = target
-    return spark.read.parquet(
-        os.path.join(_FLAGS_MEMO[memo_k], "flags.parquet")
-    )
+    return read_parquet(spark, os.path.join(_FLAGS_MEMO[memo_k], "flags.parquet"))
 
 
 def _flags_supersedes(key: dict):
@@ -978,7 +977,11 @@ def census_log_step(
     (K-sized) fold condition cannot re-fire — increments are never
     double-merged. Replay after a FAILED compaction: the pointer never
     advanced, so the identical fold recomputes and commits through
-    commit_versioned_state's tmp+rename."""
+    commit_versioned_state's tmp+rename.
+
+    Returns the census schema: every increment and every compacted
+    version is written with it, so the compaction reads its parts back
+    with it and so can the close (:func:`resolve_census_state`)."""
     import os
 
     from spotify_tags_etl_spark.streaming.ops import (
@@ -1003,9 +1006,9 @@ def census_log_step(
     if len(fresh) >= ZF02_COMPACT_EVERY:
         target = os.path.join(root, f"compact_v{batch_id}")
         src = versioned_state_source(state_cur, target)  # replay-safe
-        merged = spark.read.parquet(*fresh)
+        merged = read_parquet(spark, *fresh, schema=inc.schema)
         if src:
-            merged = spark.read.parquet(src).unionByName(merged)
+            merged = read_parquet(spark, src, schema=inc.schema).unionByName(merged)
         merged = merged.groupBy("kind", "k1", "k2").agg(
             F.sum("n1").alias("n1"),
             F.sum("n2").alias("n2"),
@@ -1013,14 +1016,18 @@ def census_log_step(
         )
         record_batch_plan(merged, f"{label}:census_compaction")
         commit_versioned_state(merged, state_cur, target, src)
+    return inc.schema
 
 
-def resolve_census_state(spark: SparkSession, state_parts: list[str]) -> DataFrame:
+def resolve_census_state(
+    spark: SparkSession, state_parts: list[str], schema: StructType | None = None
+) -> DataFrame:
     """The close-time census: ONE SUM/SUM/MIN merge over the compacted
     view (if any) plus the residual appended increments — the
-    merge-on-read resolve of the append-only census log."""
+    merge-on-read resolve of the append-only census log. ``schema`` is
+    the census schema :func:`census_log_step` returned."""
     return (
-        spark.read.parquet(*state_parts)
+        read_parquet(spark, *state_parts, schema=schema)
         .groupBy("kind", "k1", "k2")
         .agg(
             F.sum("n1").alias("n1"),
@@ -1054,50 +1061,56 @@ def run_lineage_ingest(
     re-folds nothing — increments are never double-merged.
 
     Writes under ``root`` (the caller's :func:`stream_scratch`).
-    Returns (store_dirs, state_parts): state_parts is the compacted
-    view (if any) + the residual increments past its horizon; resolve
-    with :func:`resolve_census_state`."""
+    Returns (store, state_parts, census_schema): ``store`` is the
+    per-batch doc store (a streaming/ops.py ``BatchStore``);
+    state_parts is the compacted view (if any) + the residual
+    increments past its horizon; resolve them with
+    :func:`resolve_census_state` under ``census_schema`` (None when no
+    batch ran)."""
     import os
 
-    from spotify_tags_etl_spark.streaming.ops import record_batch_plan, run_foreach_batch
+    from spotify_tags_etl_spark.streaming.ops import (
+        BatchStore,
+        record_batch_plan,
+        run_foreach_batch,
+    )
 
-    store_dirs: list[str] = []  # per-batch idempotent doc stores
+    store = BatchStore(spark, os.path.join(root, "docstore"))
+    census_schema: StructType | None = None
     state_cur: list[str] = []   # compacted-census version pointer
     incr: list[tuple[int, str]] = []  # append-only census increments
     plan_seen: set = set()  # r13: fingerprint each label once per run
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        nonlocal census_schema
         # r12 §14: the fixture micro-batch arrives as ONE scan split, so
         # the per-doc map work (shingles, MinHash, gram explodes) in
         # BOTH per-trigger jobs would run single-task; fan the batch out
         # to the core count first (scale-adaptive — a no-op whenever the
         # batch already has >= cores partitions, i.e. at any real scale).
         batch = fan_out_scan(batch, "doc_id")
-        store, part = lineage_batch_parts(batch)
+        docs, part = lineage_batch_parts(batch)
         if extra_doc_rows is not None:
-            store = store.unionByName(extra_doc_rows(batch))
-        record_batch_plan(store, f"{label}:doc_store", seen=plan_seen)
-        d = os.path.join(root, "docstore", f"b{batch_id}")
+            docs = docs.unionByName(extra_doc_rows(batch))
+        record_batch_plan(docs, f"{label}:doc_store", seen=plan_seen)
         # r12 §2.6: the two per-trigger writes are independent sinks
         # (both replay-idempotent on their own) — overlap them so the
         # census job back-fills the doc-store job's tail. Frames,
         # plans, and replay semantics are unchanged; a crash between
         # the writes was already recoverable in either order.
-        run_parallel(
-            lambda: store.write.mode("overwrite").parquet(d),
+        _, census_schema = run_parallel(
+            lambda: store.write(docs, batch_id),
             lambda: census_log_step(
                 spark, root, incr, state_cur, part, batch_id, label,
                 plan_seen=plan_seen,
             ),
         )
-        if d not in store_dirs:
-            store_dirs.append(d)
 
     run_foreach_batch(stream_docs.select("doc_id", "lang", "text", "source"), apply_batch)
     state_parts = (list(state_cur[:1]) if state_cur else []) + [
         p for i, p in incr if i > _compacted_upto(state_cur)
     ]
-    return store_dirs, state_parts
+    return store, state_parts, census_schema
 
 
 def lineage_close_frames(
@@ -1234,7 +1247,7 @@ def _run_lineage_stream(
     # files are no longer needed once both checkpoints return, and
     # nothing after the block reads the root)
     with stream_scratch(f"{label}_lineage", background=True) as root:
-        store_dirs, state_parts = run_lineage_ingest(
+        docstore, state_parts, census_schema = run_lineage_ingest(
             spark, stream_docs, root, label=label
         )
         if not state_parts:
@@ -1250,8 +1263,8 @@ def _run_lineage_stream(
         # independent jobs — overlap them (guide §2.6)
         pre = checkpoint_parallel(
             {
-                "state": resolve_census_state(spark, state_parts),
-                "store": spark.read.parquet(*store_dirs),
+                "state": resolve_census_state(spark, state_parts, census_schema),
+                "store": docstore.read(),
             }
         )
     state, store = pre["state"], pre["store"]

@@ -701,7 +701,7 @@ def streaming_unified_keepset(
     )
     # r13: the scratch delete runs off the critical path (zf02's close)
     with stream_scratch("zh04_lineage", background=True) as root:
-        store_dirs, state_parts = run_lineage_ingest(
+        docstore, state_parts, census_schema = run_lineage_ingest(
             spark, stream_docs, root, label="zh04",
             extra_doc_rows=_zh04_verdict_rows(wavg),
         )
@@ -714,8 +714,8 @@ def streaming_unified_keepset(
         # (guide §2.6)
         pre = checkpoint_parallel(
             {
-                "state": resolve_census_state(spark, state_parts),
-                "store": spark.read.parquet(*store_dirs),
+                "state": resolve_census_state(spark, state_parts, census_schema),
+                "store": docstore.read(),
             }
         )
     state, store = pre["state"], pre["store"]

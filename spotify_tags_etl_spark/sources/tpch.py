@@ -6,10 +6,14 @@ events documents embeddings — one parquet file per table under an
 
 Scale notes (100 TB design point):
 
-* ``spark.read.parquet`` is the only scan primitive — predicate pushdown,
-  column pruning, and partition pruning all flow from declaring the read
-  here and filtering lazily downstream. Never ``.cache()`` inside the
-  loader; callers decide materialization.
+* :func:`read_parquet` is the engine's one parquet scan primitive —
+  predicate pushdown, column pruning, and partition pruning all flow
+  from declaring the read here and filtering lazily downstream. It
+  never runs a schema-inference job for a schema the driver already
+  knows: engine-written frames are read back with the schema their
+  writer hands over, and inputs/artifacts infer each file version's
+  schema once. Never ``.cache()`` inside the loader; callers decide
+  materialization.
 * At cluster scale these would be directory-partitioned datasets
   (``orders/o_orderdate=.../``); the loader takes any path, so swapping a
   partitioned root in requires no call-site change.
@@ -17,9 +21,13 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import copy
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -99,6 +107,82 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: Session confs that decide which schema parquet inference returns:
+#: the footer-to-Spark type conversion, footer merging, and the types
+#: and spelling of partition columns. Part of every memo key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _file_version(path: str) -> tuple | None:
+    """``(abspath, ((name, mtime_ns, size), ...))`` for one parquet path —
+    the per-file identity the artifact cache trusts
+    (functions/partials.py:input_files). None when that identity does
+    not cover everything a scan of ``path`` would list: a missing path
+    or glob, a partitioned tree, data files without the ``.parquet``
+    suffix, or no files at all."""
+    from spotify_tags_etl_spark.functions.partials import input_files
+
+    if not os.path.exists(path):
+        return None
+    ident = input_files(path)
+    if not ident:
+        return None
+    if os.path.isdir(path):
+        listed = [n for n in os.listdir(path) if not n.startswith(("_", "."))]
+        if len(listed) != len(ident):
+            return None
+    files = tuple((n, i["mtime_ns"], i["size"]) for n, i in sorted(ident.items()))
+    return os.path.abspath(path), files
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: StructType | None = None
+) -> DataFrame:
+    """The engine's one parquet scan. Given no ``schema``, Spark would
+    run a one-task schema-merge job on the driver for every read; here
+    a read with a ``schema`` runs none, and a read without one infers
+    each file version's schema once per process. The memo is keyed by
+    every path's file identity (:func:`_file_version`) plus the session
+    confs in ``_SCHEMA_CONFS``, holds only schemas (no Spark handle),
+    and drops its least recently used entry past ``_SCHEMA_MEMO_SIZE``.
+    Reads whose identity is unknowable infer every time, so errors
+    (no parquet files, a missing path) still raise from Spark.
+
+    Pass ``schema`` for frames the engine wrote itself: the schema of
+    the frame that was written equals the inferred one, nullability
+    included, because the file source reads every column as nullable."""
+    if schema is None:
+        versions = tuple(_file_version(p) for p in paths)
+        key = None
+        if versions and None not in versions:
+            key = (versions, tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+            with _schema_lock:
+                schema = _schema_memo.get(key)
+                if schema is not None:
+                    _schema_memo.move_to_end(key)
+        if schema is None:
+            df = spark.read.parquet(*paths)  # the one inferring read
+            if key is not None:
+                with _schema_lock:  # a copy: StructType.add mutates in place
+                    _schema_memo[key] = copy.deepcopy(df.schema)
+                    while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+                        _schema_memo.popitem(last=False)
+            return df
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TPCH_TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TPCH_TABLES}")
@@ -111,7 +195,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (driver harness, notebooks), not only sessions built by our
         # session.py factory.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events_ts(df)
     else:

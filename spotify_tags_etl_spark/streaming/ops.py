@@ -26,7 +26,10 @@ ze03, zg07 in the operator modules) run on ONE skeleton,
 :func:`merged_stream`: each supplies only its per-trigger
 ``step(batch, prev)`` merge and its close. Twins that also write side
 stores (st09, zc04, zd05, zf02/zh04) keep their own batch functions but
-share :func:`stream_scratch` and :func:`run_foreach_batch`.
+share :func:`stream_scratch`, :func:`run_foreach_batch` and the
+per-batch side store :class:`BatchStore`. Every version and side store
+is read back with the schema of the frame that was written, so no
+trigger and no close runs a parquet schema-inference job.
 
 Each runs as a real streaming query (``readStream`` → transform →
 ``writeStream`` to a memory sink, ``Trigger.AvailableNow``) and returns
@@ -71,6 +74,7 @@ from pyspark.sql.types import (
 )
 
 from spotify_tags_etl_spark.plans.registry import register
+from spotify_tags_etl_spark.sources.tpch import read_parquet
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -80,18 +84,23 @@ def read_table_stream(
     spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """Streaming file-source scan of any test table: file-source
-    micro-batches. Schema comes from one batch footer read (streaming
-    sources require an explicit schema)."""
+    micro-batches. Streaming sources require an explicit schema; it is
+    the table file's, inferred once per file version by
+    :func:`~spotify_tags_etl_spark.sources.tpch.read_parquet`."""
     import hashlib
 
     from ..sources.tpch import ensure_session_defaults
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     # The file stream source requires a *directory* to monitor; the test
-    # tables are single files (read-only), so stage a symlink dir. At
-    # cluster scale the source would watch a real landing directory.
+    # tables are single files (read-only), so stage a symlink dir under
+    # the process's temp root. At cluster scale the source would watch a
+    # real landing directory.
     stream_dir = os.path.join(
-        "/tmp/spark_graft_stream", hashlib.md5(sf_dir.encode()).hexdigest()[:12], name
+        tempfile.gettempdir(),
+        "spark_graft_stream",
+        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
+        name,
     )
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, f"{name}.parquet")
@@ -119,8 +128,7 @@ def read_table_stream(
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
         )
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(read_parquet(spark, path).schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(stream_dir)
@@ -258,20 +266,26 @@ def versioned_state_source(cur: list[str], target: str) -> str | None:
     return cur[0]
 
 
-def commit_versioned_state(df: DataFrame, cur: list[str], target: str, src: str | None) -> None:
+def commit_versioned_state(
+    df: DataFrame, cur: list[str], target: str, src: str | None
+) -> StructType:
     """Materialize a merged census and advance the version pointer,
     replay-safely: write to ``<target>.tmp`` FIRST (so the lazy merge
     read in ``df`` never points at a directory being deleted — Spark's
     overwrite removes the target before the read executes), then
     rename whole onto ``target``. A half-written first attempt is
     replaced atomically; ``cur`` keeps [current, previous] so a replay
-    can re-resolve its source via :func:`versioned_state_source`."""
+    can re-resolve its source via :func:`versioned_state_source`.
+
+    Returns the schema of the version written — the caller keeps it
+    beside the pointer and reads the version back with it."""
     tmp = target + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
     if os.path.exists(target):
         shutil.rmtree(target)
     os.rename(tmp, target)
     cur[:] = [target] + ([src] if src else [])
+    return df.schema
 
 
 def run_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
@@ -887,7 +901,10 @@ class VersionedMerge:
     Plan fingerprints under ``label``: the first trigger (``prev`` is
     None) and the first MERGE trigger are each rendered once — the two
     shapes a run's micro-batch plan takes. Rendering costs a full
-    driver planning pass, so later triggers of a seen shape skip it."""
+    driver planning pass, so later triggers of a seen shape skip it.
+
+    Each version is read back with the schema it was written with,
+    kept beside the pointer, so no trigger or close infers one."""
 
     def __init__(
         self,
@@ -898,20 +915,51 @@ class VersionedMerge:
     ) -> None:
         self.spark, self.root, self.label, self.step = spark, root, label, step
         self.current: list[str] = []  # version POINTER, not state
+        self.schemas: dict[str, StructType] = {}  # version -> written schema
         self._rendered: set[bool] = set()  # shapes fingerprinted: merge or not
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         target = os.path.join(self.root, f"v{batch_id}")
         src = versioned_state_source(self.current, target)
-        state = self.step(batch, self.spark.read.parquet(src) if src else None)
+        state = self.step(batch, self._read(src) if src else None)
         if (src is not None) not in self._rendered:
             self._rendered.add(src is not None)
             record_batch_plan(state, self.label)
-        commit_versioned_state(state, self.current, target, src)
+        self.schemas[target] = commit_versioned_state(state, self.current, target, src)
+
+    def _read(self, version: str) -> DataFrame:
+        return read_parquet(self.spark, version, schema=self.schemas[version])
 
     def state(self) -> DataFrame | None:
         """The latest committed version, or None before any batch."""
-        return self.spark.read.parquet(self.current[0]) if self.current else None
+        return self._read(self.current[0]) if self.current else None
+
+
+class BatchStore:
+    """A per-batch parquet side store under ``root`` (the st09/zc04/
+    zd05/zf02/zh04 stores): batch ``i`` overwrites its own ``b<i>``
+    directory, so a replayed batch replaces its first attempt, and
+    :meth:`read` unions every batch written so far. The schema of the
+    frames written is kept with the directory list, so reading back
+    runs no schema-inference job. All batches write one schema."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark, self.root = spark, root
+        self.dirs: list[str] = []
+        self.schema: StructType | None = None
+
+    def write(self, df: DataFrame, batch_id: int) -> str:
+        """Write one batch's frame; returns its directory."""
+        d = os.path.join(self.root, f"b{batch_id}")
+        df.write.mode("overwrite").parquet(d)
+        self.schema = df.schema
+        if d not in self.dirs:
+            self.dirs.append(d)
+        return d
+
+    def read(self, *dirs: str) -> DataFrame:
+        """The given batch directories, or every one written so far."""
+        return read_parquet(self.spark, *(dirs or self.dirs), schema=self.schema)
 
 
 @contextmanager
@@ -1056,6 +1104,7 @@ def streaming_neardup(
     with stream_scratch("st09_neardup") as root:
         pairs_dir = os.path.join(root, "pairs")
         current: list[str] = []  # signature-store version pointer
+        schemas: dict[str, StructType] = {}  # path -> schema written there
         plan_seen: set = set()  # r13: fingerprint each label once per run
 
         def apply_batch(batch: DataFrame, batch_id: int) -> None:
@@ -1073,7 +1122,11 @@ def streaming_neardup(
             )
             target = os.path.join(root, f"sig_v{batch_id}")
             src = versioned_state_source(current, target)
-            sig_all = sig_b.unionByName(spark.read.parquet(src)) if src else sig_b
+            sig_all = (
+                sig_b.unionByName(read_parquet(spark, src, schema=schemas[src]))
+                if src
+                else sig_b
+            )
             new_side = banded_frame(sig_b).alias("l")
             all_side = banded_frame(sig_all).alias("r")
             cand = (
@@ -1095,15 +1148,16 @@ def streaming_neardup(
             # version write are independent sinks (append is retry-safe by
             # the closing distinct; the version pointer advances only after
             # its own commit) — overlap them
-            run_parallel(
+            _, schemas[target] = run_parallel(
                 lambda: cand.write.mode("append").parquet(pairs_dir),
                 lambda: commit_versioned_state(sig_all, current, target, src),
             )
+            schemas[pairs_dir] = cand.schema
 
         run_foreach_batch(stream_docs.select("doc_id", "text"), apply_batch)
         if not os.path.isdir(pairs_dir):
             return spark.createDataFrame([], "d1 long, d2 long, jaccard_permille long")
-        pairs = spark.read.parquet(pairs_dir).distinct()
+        pairs = read_parquet(spark, pairs_dir, schema=schemas[pairs_dir]).distinct()
         # verify once, against corpus shingles pruned to candidate docs
         cand_ids = pairs.select(F.col("d1").alias("doc_id")).unionByName(
             pairs.select(F.col("d2").alias("doc_id"))

@@ -22,7 +22,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from spotify_tags_etl_spark.sources.tpch import load_table
+from spotify_tags_etl_spark.sources.tpch import load_table, read_parquet
 from spotify_tags_etl_spark.streaming.ops import read_events_stream
 
 # Three instants with sub-second digits; naive == UTC wall clock.
@@ -71,6 +71,16 @@ def test_load_table_normalizes_any_encoding(spark, encoded_dir):
     # ts renders the same UTC wall clock in every encoding (session tz pinned).
     got = [rows[i + 1]["ts"].replace(tzinfo=None) for i in range(3)]
     assert got == _TS
+
+
+def test_read_parquet_matches_spark_read(spark, encoded_dir):
+    """The memoized read (schema handed to the reader) returns the same
+    schema and rows as a plain inferring ``spark.read.parquet``."""
+    load_table(spark, encoded_dir, "events")  # sets nanosAsLong, memoizes
+    path = os.path.join(encoded_dir, "events.parquet")
+    got, want = read_parquet(spark, path), spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_stream_reader_normalizes_and_watermarks(spark, encoded_dir):

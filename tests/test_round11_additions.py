@@ -618,7 +618,7 @@ def test_zh04_layout_invariant(spark, sf_dir, built, tmp_path_factory):
     assert len(batch) > 0
 
 
-def test_zh04_degenerate_docs_stream(spark, tmp_path):
+def test_zh04_degenerate_docs_stream(spark, sf_dir, tmp_path):
     """A planted batch of pathological docs (1-token, 4-token — below
     DECON_NGRAM; no stopwords; unclassifiable single-word) must stream
     without error and match batch zh01 on the same fixture (the
@@ -640,7 +640,7 @@ def test_zh04_degenerate_docs_stream(spark, tmp_path):
     # embeddings: none embedded — copy the schema with zero rows
     import pyarrow.parquet as pq
 
-    emb = pq.read_table("/root/testdata/sf0.001/embeddings.parquet")
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
     pq.write_table(emb.slice(0, 0), os.path.join(root, "embeddings.parquet"))
 
     batch = [tuple(r) for r in get("zh01_unified_keepset").builder(spark, root).collect()]

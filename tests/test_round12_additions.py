@@ -479,7 +479,7 @@ def test_census_log_compaction(spark, sf_dir, tmp_path_factory, monkeypatch):
     )
     monkeypatch.setattr(zfops, "ZF02_COMPACT_EVERY", 2)
     r = str(tmp_path_factory.mktemp("census_log_scratch"))
-    _stores, state_parts = zfops.run_lineage_ingest(
+    _store, state_parts, census_schema = zfops.run_lineage_ingest(
         spark, stream, r, label="zf02ct"
     )
     try:
@@ -502,7 +502,7 @@ def test_census_log_compaction(spark, sf_dir, tmp_path_factory, monkeypatch):
             assert got == want, f"batch {i}: increment not batch-local"
 
         # merge-on-read resolve == the batch census, bit-for-bit
-        state = zfops.resolve_census_state(spark, state_parts)
+        state = zfops.resolve_census_state(spark, state_parts, census_schema)
         got_exact = sorted(
             (r_.k1, r_.k2, r_.n1, r_.m)
             for r_ in state.where("kind = 'exact'").collect()
