@@ -1,16 +1,31 @@
-"""Atomic publish, verify, and GC for derived-artifact directories.
+"""The derived-artifact protocol: one keyed directory per staleness key.
 
-The engine's shared-artifact pattern (ze01 fit weights, zf01 lineage
-flags) publishes derived state as a key-digest directory under
-:func:`warehouse_root` (per-process by default — see its docstring;
-``SPARK_GRAFT_WAREHOUSE`` selects a durable root): build everything in
-a tmp dir, write a
-``meta.json`` carrying the full staleness key LAST, then rename the
-dir whole — so any directory that exists at a digest path is complete
-by construction, and readers validate the embedded key before
-trusting it.
+Five artifact kinds publish derived state as a key-digest directory
+under :func:`warehouse_root` (per-process by default — see its
+docstring; ``SPARK_GRAFT_WAREHOUSE`` selects a durable root):
 
-This module hardens two edges of that pattern (r10 verdict items):
+* ``ze01_fit`` — the perceptron fit weights (zeops);
+* ``ze02_margin_parts`` — per-input-file margin scores (zeops);
+* ``ze02_margins`` — the merged scored corpus (zeops);
+* ``zf01_flags`` — the five-stage lineage flags (zfops);
+* ``doc_partials`` / ``emb_partials`` — per-input-file stage partials
+  (functions/partials.py).
+
+This module owns every step of the protocol, so callers supply only
+their key, their frame writes and their supersedes rule:
+
+* :func:`artifact_dir` names the directory: ``<root>/<kind>/<digest>``,
+  the digest being the first 16 hex digits of the md5 of the sorted
+  JSON key.
+* :func:`ensure` serves a fresh directory (in-process memo, re-verified
+  against the filesystem, then the on-disk key) or builds it.
+* :func:`publish` builds in ``<target>.tmp.<pid>``, writes ``meta.json``
+  carrying the full key LAST, then renames the directory whole — so
+  any directory at a digest path is complete by construction, and
+  readers validate the embedded key before trusting it. A failed build
+  removes its tmp directory and re-raises.
+
+Two edges of the rename are hardened (r10 verdict items):
 
 * **Verify the winner** — when the publish rename fails, the loser
   used to ASSUME "a concurrent publisher won; its copy is complete".
@@ -36,12 +51,19 @@ back artifacts with a versioned table format and vacuum instead).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 from typing import Callable
 
 _PROC_WAREHOUSE: str | None = None
+
+#: Directories verified fresh in this process, as (target, key JSON)
+#: pairs: a hit skips the meta read but still checks the directory
+#: exists (a same-process republish for a reverted input identity may
+#: have GC'd it).
+_MEMO: set[tuple[str, str]] = set()
 
 
 def warehouse_root() -> str:
@@ -78,15 +100,82 @@ def warehouse_root() -> str:
     return _PROC_WAREHOUSE
 
 
+def artifact_dir(kind: str, key: dict) -> str:
+    """The directory of ``kind``'s artifact for staleness ``key``."""
+    digest = hashlib.md5(json.dumps(key, sort_keys=True).encode()).hexdigest()[:16]
+    return os.path.join(warehouse_root(), kind, digest)
+
+
+def read_meta(target: str) -> dict | None:
+    """``target/meta.json`` as a dict, or None when it is absent,
+    unreadable, or not a JSON object."""
+    try:
+        with open(os.path.join(target, "meta.json")) as fh:
+            meta = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return meta if isinstance(meta, dict) else None
+
+
 def read_meta_key(target: str) -> object | None:
     """The staleness key embedded in ``target/meta.json``, or None when
     the meta is absent, unreadable, or not JSON — callers treat None as
     'this directory can never serve'."""
+    return (read_meta(target) or {}).get("key")
+
+
+def ensure(
+    kind: str,
+    key: dict,
+    write: Callable[[str], None],
+    supersedes: Callable[[object], bool],
+) -> tuple[str, bool]:
+    """The directory of ``kind``'s artifact for ``key``, built if needed.
+
+    Returns ``(dir, built)``. A directory already verified in this
+    process is served while it exists; otherwise one whose on-disk key
+    equals ``key`` is served; otherwise :func:`publish` builds it."""
+    target = artifact_dir(kind, key)
+    memo_k = (target, json.dumps(key, sort_keys=True))
+    if memo_k in _MEMO and os.path.isdir(target):
+        return target, False
+    built = read_meta_key(target) != key
+    if built:
+        publish(kind, key, write, supersedes)
+    _MEMO.add(memo_k)
+    return target, built
+
+
+def publish(
+    kind: str,
+    key: dict,
+    write: Callable[[str], None],
+    supersedes: Callable[[object], bool],
+    meta: dict | None = None,
+) -> str:
+    """Build and publish ``kind``'s artifact for ``key``; returns its dir.
+
+    ``write(tmp)`` fills the tmp directory; ``meta.json`` (``key`` plus
+    any ``meta`` fields) is written last. The whole directory is then
+    renamed onto the target with the winner verified, and sibling
+    digests that ``supersedes`` names are swept. A ``write`` that raises
+    leaves no tmp directory behind."""
+    target = artifact_dir(kind, key)
+    # a mismatched/corrupt dir AT the target would make every rename
+    # fail (the silently-stops-caching bug)
+    remove_unservable_target(target, key)
+    tmp = f"{target}.tmp.{os.getpid()}"
     try:
-        with open(os.path.join(target, "meta.json")) as fh:
-            return json.load(fh).get("key")
-    except (OSError, ValueError):
-        return None
+        os.makedirs(tmp, exist_ok=True)
+        write(tmp)
+        with open(os.path.join(tmp, "meta.json"), "w") as fh:
+            json.dump({"key": key, **(meta or {})}, fh, indent=1)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    publish_atomic(tmp, target, key)
+    gc_superseded(target, supersedes)
+    return target
 
 
 def remove_unservable_target(target: str, key: dict) -> None:

@@ -41,9 +41,8 @@ strictly older than the fresh key are removed).
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,6 +108,30 @@ def identity_strictly_older(sib: dict | None, fresh: dict) -> bool:
     return older
 
 
+def file_supersedes(key: dict, *same: str) -> Callable[[object], bool]:
+    """GC rule of a per-input-file artifact keyed ``{"file", "identity",
+    ...}``: a sibling is superseded when it is for the same file (and
+    equal to ``key`` on every field in ``same``) with a strictly older
+    identity, or when its input file no longer exists — test sandboxes
+    and retired corpus drops leave orphans whose paths never recur, so
+    nothing else would sweep them (single-machine scope, self-healing
+    via recompute)."""
+
+    def sup(k: object) -> bool:
+        if not isinstance(k, dict):
+            return False
+        f = k.get("file")
+        if (
+            f == key["file"]
+            and all(k.get(s) == key[s] for s in same)
+            and identity_strictly_older({"f": k.get("identity")}, {"f": key["identity"]})
+        ):
+            return True
+        return isinstance(f, str) and not os.path.exists(f)
+
+    return sup
+
+
 # ---------------------------------------------------------------------------
 # extraction constants — every knob a cached partial row depends on
 # ---------------------------------------------------------------------------
@@ -164,21 +187,6 @@ def emb_constants() -> dict:
 # ---------------------------------------------------------------------------
 # per-file partial publish / lookup
 # ---------------------------------------------------------------------------
-
-
-def _partials_root(kind: str) -> str:
-    from spotify_tags_etl_spark.functions.artifactio import warehouse_root
-
-    return os.path.join(warehouse_root(), f"{kind}_partials")
-
-
-def _partial_key(path: str, ident: dict, constants: dict) -> dict:
-    return {"file": path, "identity": dict(ident), "constants": constants}
-
-
-def _partial_dir(kind: str, key: dict) -> str:
-    digest = hashlib.md5(json.dumps(key, sort_keys=True).encode()).hexdigest()[:16]
-    return os.path.join(_partials_root(kind), digest)
 
 
 def _extract_doc_frames(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -296,46 +304,21 @@ def ensure_partials(
     from spotify_tags_etl_spark.functions import artifactio
 
     constants = _CONSTANTS[kind]()
-    files = input_files(table_path)
     dirs: dict[str, str] = {}
     recomputed: list[str] = []
-    for relname, ident in files.items():
+    for relname, ident in input_files(table_path).items():
         path = file_path(table_path, relname)
-        key = _partial_key(path, ident, constants)
-        target = _partial_dir(kind, key)
-        if artifactio.read_meta_key(target) != key:
-            artifactio.remove_unservable_target(target, key)
-            frames = _EXTRACTORS[kind](spark, path)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            tmp = f"{target}.tmp.{os.getpid()}"
-            for fname, frame in frames.items():
+        key = {"file": path, "identity": dict(ident), "constants": constants}
+
+        def write(tmp: str) -> None:
+            for fname, frame in _EXTRACTORS[kind](spark, path).items():
                 frame.write.mode("overwrite").parquet(os.path.join(tmp, f"{fname}.parquet"))
-            with open(os.path.join(tmp, "meta.json"), "w") as fh:
-                json.dump({"key": key}, fh, indent=1)
-            artifactio.publish_atomic(tmp, target, key)
-            # superseded = same file with provably older identity, OR a
-            # partial whose input file no longer exists at all (test
-            # sandboxes and retired corpus drops leave orphans behind —
-            # their paths never recur, so nothing else would sweep them;
-            # single-machine scope, self-healing via recompute)
-            artifactio.gc_superseded(
-                target,
-                lambda k, _p=path, _i=ident: isinstance(k, dict)
-                and (
-                    (
-                        k.get("file") == _p
-                        and identity_strictly_older(
-                            {"f": k.get("identity")}, {"f": dict(_i)}
-                        )
-                    )
-                    or (
-                        isinstance(k.get("file"), str)
-                        and not os.path.exists(k["file"])
-                    )
-                ),
-            )
+
+        dirs[relname], built = artifactio.ensure(
+            f"{kind}_partials", key, write, file_supersedes(key)
+        )
+        if built:
             recomputed.append(relname)
-        dirs[relname] = target
     return dirs, recomputed
 
 

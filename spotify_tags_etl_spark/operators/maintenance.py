@@ -34,17 +34,26 @@ from spotify_tags_etl_spark.sources.tpch import load_table, read_parquet
 _NEW_KEY_OFFSET = 10_000_000_000
 
 
+#: Scratch paths whose removal at interpreter exit is already registered.
+_PID_TMP_PATHS: set[str] = set()
+
+
 def _pid_tmp_path(base: str, tag: str) -> str:
-    """PID-keyed scratch dir under /tmp (concurrent runs must not race
-    one run's mode-overwrite write against another's read), removed at
-    interpreter exit so repeated sweeps/pytest runs don't accumulate
-    orphaned PID trees."""
+    """PID-keyed scratch dir ``<tempdir>/<base>/<tag>-<pid>`` (concurrent
+    runs must not race one run's mode-overwrite write against another's
+    read), removed at interpreter exit so repeated sweeps/pytest runs
+    don't accumulate orphaned PID trees. Rooted at
+    ``tempfile.gettempdir()``, so a run that sets ``TMPDIR`` keeps its
+    scratch inside its own root."""
     import atexit
     import os
     import shutil
+    import tempfile
 
-    path = os.path.join(base, f"{tag}-{os.getpid()}")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = os.path.join(tempfile.gettempdir(), base, f"{tag}-{os.getpid()}")
+    if path not in _PID_TMP_PATHS:
+        _PID_TMP_PATHS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 
 
@@ -659,7 +668,7 @@ def xv02(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     tag = hashlib.sha256(f"xv02:{_CSV_ROWS}:{_CSV_BAD_PERIOD}".encode()).hexdigest()[:12]
-    path = _pid_tmp_path("/tmp/spark_graft_csv", tag)
+    path = _pid_tmp_path("spark_graft_csv", tag)
     line = F.when(
         F.col("id") % _CSV_BAD_PERIOD == 0,
         F.concat_ws(",", F.lit("corrupt"), F.lit("not-a-number")),
@@ -1126,7 +1135,7 @@ XV03_LO, XV03_HI = "2024-01-08", "2024-01-14"
 
 
 def partitioned_events_path(sf_dir: str) -> str:
-    """Deterministic per-(sf-dir, process) target under /tmp, overwritten
+    """Deterministic per-(sf-dir, process) scratch target, overwritten
     each run. The PID key means two CONCURRENT runs against the same
     sf_dir (parallel pytest, overlapping sweeps) never race one run's
     mode-overwrite write against the other's read."""
@@ -1134,7 +1143,7 @@ def partitioned_events_path(sf_dir: str) -> str:
     import os
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    return _pid_tmp_path("/tmp/spark_graft_xv03", tag)
+    return _pid_tmp_path("spark_graft_xv03", tag)
 
 
 def write_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1417,7 +1426,7 @@ def xv05(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = _pid_tmp_path("/tmp/spark_graft_xv05", tag)
+    path = _pid_tmp_path("spark_graft_xv05", tag)
     load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return (
@@ -1710,7 +1719,7 @@ def xv06(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = _pid_tmp_path("/tmp/spark_graft_xv06", tag)
+    path = _pid_tmp_path("spark_graft_xv06", tag)
     sup = load_table(spark, sf_dir, "supplier")
     sup.write.mode("overwrite").format("xml").option("rootTag", "suppliers").option(
         "rowTag", "supplier"

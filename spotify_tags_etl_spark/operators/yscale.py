@@ -1649,7 +1649,7 @@ def yw02(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     candidates = {"clean": orders, "dirty": orders.unionByName(bad)}
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = _pid_tmp_path("/tmp/spark_graft_yw02", tag)
+    root = _pid_tmp_path("spark_graft_yw02", tag)
     # r13 (guide §2.6): the two candidates' stage-write + read-back
     # audits are fully independent (separate staging dirs, separate
     # publish markers) but ran back to back — each is a small write job

@@ -452,33 +452,18 @@ def _fit_key(sf_dir: str) -> dict:
     }
 
 
-def _artifact_dir(key: dict) -> str:
-    import hashlib
-    import json
-    import os
-
-    from spotify_tags_etl_spark.functions.artifactio import warehouse_root
-
-    digest = hashlib.md5(
-        json.dumps(key, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    return os.path.join(warehouse_root(), "ze01_fit", digest)
-
-
 def _publish_fit(
     key: dict, nd: int, curve: list, w_hist: list[dict[int, int]]
 ) -> None:
-    """Write the fit artifact atomically: weights.parquet (the
-    (round, bucket, w) weight TABLE, DECIMAL(38,0) — |w| crosses int64
-    at the 100 TB design point) + meta.json (key, nd, learning curve).
-    Built in a tmp dir and renamed whole, so concurrent sweep processes
-    publishing the same key race benignly — with the winner VERIFIED
-    on a lost race (artifactio's discipline; a corrupt/tampered target
-    is removed and the rename retried rather than silently trusted).
-    After publishing, sibling digests superseded by this key (same
-    corpus path, older identity — the fixture-regen leak) are GC'd."""
+    """Publish the fit artifact: weights.parquet (the (round, bucket, w)
+    weight TABLE, DECIMAL(38,0) — |w| crosses int64 at the 100 TB
+    design point) with (nd, learning curve) in its meta. Concurrent
+    sweep processes publishing the same key race benignly (artifactio's
+    verified-winner publish). GC strict ordering (r11 ADVICE): only
+    same-corpus siblings whose identity is provably older (or an older
+    fit version) are removed — a publisher holding a stale mtime view
+    must never GC a newer one."""
     import decimal
-    import json
     import os
 
     import pyarrow as pa
@@ -486,35 +471,28 @@ def _publish_fit(
 
     from spotify_tags_etl_spark.functions import artifactio
 
-    target = _artifact_dir(key)
-    artifactio.remove_unservable_target(target, key)
-    os.makedirs(os.path.dirname(target), exist_ok=True)
-    tmp = f"{target}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    rounds, buckets, weights = [], [], []
-    for r, w in enumerate(w_hist, start=1):
-        for b in sorted(w):
-            rounds.append(r)
-            buckets.append(b)
-            weights.append(decimal.Decimal(w[b]))
-    pq.write_table(
-        pa.table(
-            {
-                "round": pa.array(rounds, pa.int64()),
-                "bucket": pa.array(buckets, pa.int64()),
-                "w": pa.array(weights, pa.decimal128(38, 0)),
-            }
-        ),
-        os.path.join(tmp, "weights.parquet"),
-    )
-    with open(os.path.join(tmp, "meta.json"), "w") as fh:
-        json.dump({"key": key, "nd": nd, "curve": curve}, fh, indent=1)
-    artifactio.publish_atomic(tmp, target, key)
-    # strict ordering (r11 ADVICE): remove only same-corpus siblings
-    # whose identity is provably older (or an older fit version) — a
-    # publisher holding a stale mtime view must never GC a newer one
-    artifactio.gc_superseded(
-        target,
+    def write(tmp: str) -> None:
+        rounds, buckets, weights = [], [], []
+        for r, w in enumerate(w_hist, start=1):
+            for b in sorted(w):
+                rounds.append(r)
+                buckets.append(b)
+                weights.append(decimal.Decimal(w[b]))
+        pq.write_table(
+            pa.table(
+                {
+                    "round": pa.array(rounds, pa.int64()),
+                    "bucket": pa.array(buckets, pa.int64()),
+                    "w": pa.array(weights, pa.decimal128(38, 0)),
+                }
+            ),
+            os.path.join(tmp, "weights.parquet"),
+        )
+
+    artifactio.publish(
+        "ze01_fit",
+        key,
+        write,
         lambda k: isinstance(k, dict)
         and k.get("corpus") == key["corpus"]
         and (
@@ -526,6 +504,7 @@ def _publish_fit(
                 and k["mtime_ns"] < key["mtime_ns"]
             )
         ),
+        meta={"nd": nd, "curve": curve},
     )
 
 
@@ -535,20 +514,17 @@ def _read_fit(key: dict) -> tuple[int, list, list[dict[int, int]]] | None:
     mtime-keyed directory digest). Driver-side pyarrow read: the model
     is O(rounds x buckets) integers, the plan-feeding payload every
     consumer embeds as a literal CASE — never a data-plane table."""
-    import json
     import os
 
     import pyarrow.parquet as pq
 
-    target = _artifact_dir(key)
-    meta_path = os.path.join(target, "meta.json")
-    if not os.path.exists(meta_path):
+    from spotify_tags_etl_spark.functions import artifactio
+
+    target = artifactio.artifact_dir("ze01_fit", key)
+    meta = artifactio.read_meta(target)
+    if meta is None or meta.get("key") != key:
         return None
     try:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if meta.get("key") != key:
-            return None
         tbl = pq.read_table(os.path.join(target, "weights.parquet"))
     except (OSError, ValueError):  # half-written / unreadable => refit
         return None
@@ -622,10 +598,6 @@ def ze01_fit_artifact(
 #: production cadence where the model updates slower than the corpus).
 ZE02_MARGINS_VERSION = 2
 
-#: In-process memo: key -> artifact dir (same discipline as
-#: zf01's _FLAGS_MEMO — keyed identically to the on-disk artifact).
-_MARGINS_MEMO: dict[str, str] = {}
-
 
 def _margins_key(sf_dir: str) -> dict:
     """Staleness key: the fit key (corpus identity + every fit
@@ -655,19 +627,6 @@ def weights_digest(wavg: dict[int, int]) -> str:
     ).hexdigest()[:16]
 
 
-def _score_part_dir(key: dict) -> str:
-    import hashlib
-    import json
-    import os
-
-    from spotify_tags_etl_spark.functions.artifactio import warehouse_root
-
-    digest = hashlib.md5(
-        json.dumps(key, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    return os.path.join(warehouse_root(), "ze02_margin_parts", digest)
-
-
 def ze02_score_parts(
     spark: SparkSession, corpus_path: str, wavg: dict[int, int]
 ) -> tuple[dict[str, str], list[str]]:
@@ -684,19 +643,17 @@ def ze02_score_parts(
     relnames scored THIS call) — the incremental contract the
     one-changed-partition test pins: under an unchanged model, only
     changed files re-score."""
-    import json
     import os
 
     from spotify_tags_etl_spark.functions import artifactio
     from spotify_tags_etl_spark.functions import partials as _pt
 
     doc_dirs, _ = _pt.ensure_partials(spark, corpus_path, "doc")
-    files = _pt.input_files(corpus_path)
     wdig = weights_digest(wavg)
     design_constants = _pt.doc_constants()["design"]
     dirs: dict[str, str] = {}
     recomputed: list[str] = []
-    for relname, ident in files.items():
+    for relname, ident in _pt.input_files(corpus_path).items():
         key = {
             "file": _pt.file_path(corpus_path, relname),
             "identity": dict(ident),
@@ -705,9 +662,8 @@ def ze02_score_parts(
             "margins_version": ZE02_MARGINS_VERSION,
             "partials_version": _pt.PARTIALS_VERSION,
         }
-        target = _score_part_dir(key)
-        if artifactio.read_meta_key(target) != key:
-            artifactio.remove_unservable_target(target, key)
+
+        def write(tmp: str) -> None:
             gf = read_parquet(spark, os.path.join(doc_dirs[relname], "design.parquet"))
             bias = (
                 gf.select("doc_id", "y")
@@ -720,47 +676,15 @@ def ze02_score_parts(
                 )
             )
             scored = _margins(gf.unionByName(bias), wavg)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            tmp = f"{target}.tmp.{os.getpid()}"
             scored.write.mode("overwrite").parquet(os.path.join(tmp, "m.parquet"))
-            with open(os.path.join(tmp, "meta.json"), "w") as fh:
-                json.dump({"key": key}, fh, indent=1)
-            artifactio.publish_atomic(tmp, target, key)
-            # same-file/same-weights older identity, or an orphan whose
-            # input file is gone (partials.ensure_partials' vacuum rule)
-            artifactio.gc_superseded(
-                target,
-                lambda k, _p=key["file"], _i=ident, _w=wdig: isinstance(k, dict)
-                and (
-                    (
-                        k.get("file") == _p
-                        and k.get("weights") == _w
-                        and _pt.identity_strictly_older(
-                            {"f": k.get("identity")}, {"f": dict(_i)}
-                        )
-                    )
-                    or (
-                        isinstance(k.get("file"), str)
-                        and not os.path.exists(k["file"])
-                    )
-                ),
-            )
+
+        # same file under the same weights, or an orphaned input
+        dirs[relname], built = artifactio.ensure(
+            "ze02_margin_parts", key, write, _pt.file_supersedes(key, "weights")
+        )
+        if built:
             recomputed.append(relname)
-        dirs[relname] = target
     return dirs, recomputed
-
-
-def _margins_artifact_dir(key: dict) -> str:
-    import hashlib
-    import json
-    import os
-
-    from spotify_tags_etl_spark.functions.artifactio import warehouse_root
-
-    digest = hashlib.md5(
-        json.dumps(key, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    return os.path.join(warehouse_root(), "ze02_margins", digest)
 
 
 def ze02_margins_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,58 +714,42 @@ def ze02_margins_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     an extreme deployment could mount the parts directly instead).
     GC removes superseded same-corpus digests with strict identity
     ordering (r11 ADVICE: never delete a newer sibling)."""
-    import json
     import os
 
     from spotify_tags_etl_spark.functions import artifactio
     from spotify_tags_etl_spark.functions import partials as _pt
 
     key = _margins_key(sf_dir)
-    memo_k = json.dumps(key, sort_keys=True)
-    # memo hit must re-verify the dir still exists: a same-process
-    # republish for a reverted input identity may have GC'd it (ADVICE)
-    if memo_k not in _MARGINS_MEMO or not os.path.isdir(_MARGINS_MEMO[memo_k]):
-        target = _margins_artifact_dir(key)
-        fresh = artifactio.read_meta_key(target) == key
-        if not fresh:
-            artifactio.remove_unservable_target(target, key)
-            _nd, _curve, w_hist = ze01_fit_artifact(spark, sf_dir)
-            wavg = {b: sum(w[b] for w in w_hist) for b in w_hist[0]}
-            part_dirs, _ = ze02_score_parts(spark, key["corpus"], wavg)
-            scored = read_parquet(
-                spark,
-                *[os.path.join(d, "m.parquet") for d in part_dirs.values()]
+
+    def write(tmp: str) -> None:
+        _nd, _curve, w_hist = ze01_fit_artifact(spark, sf_dir)
+        wavg = {b: sum(w[b] for w in w_hist) for b in w_hist[0]}
+        part_dirs, _ = ze02_score_parts(spark, key["corpus"], wavg)
+        scored = read_parquet(
+            spark, *[os.path.join(d, "m.parquet") for d in part_dirs.values()]
+        )
+        scored.write.mode("overwrite").parquet(os.path.join(tmp, "margins.parquet"))
+
+    my_files = {"f/" + n: i for n, i in key["files"].items()}
+    target, _ = artifactio.ensure(
+        "ze02_margins",
+        key,
+        write,
+        lambda k: isinstance(k, dict)
+        and k.get("corpus") == key["corpus"]
+        and (
+            not isinstance(k.get("margins_version"), int)
+            or k["margins_version"] < ZE02_MARGINS_VERSION
+            or (
+                k["margins_version"] == ZE02_MARGINS_VERSION
+                and _pt.identity_strictly_older(
+                    {"f/" + n: i for n, i in (k.get("files") or {}).items()},
+                    my_files,
+                )
             )
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            tmp = f"{target}.tmp.{os.getpid()}"
-            scored.write.mode("overwrite").parquet(
-                os.path.join(tmp, "margins.parquet")
-            )
-            with open(os.path.join(tmp, "meta.json"), "w") as fh:
-                json.dump({"key": key}, fh, indent=1)
-            artifactio.publish_atomic(tmp, target, key)
-            my_files = {"f/" + n: i for n, i in key["files"].items()}
-            artifactio.gc_superseded(
-                target,
-                lambda k: isinstance(k, dict)
-                and k.get("corpus") == key["corpus"]
-                and (
-                    not isinstance(k.get("margins_version"), int)
-                    or k["margins_version"] < ZE02_MARGINS_VERSION
-                    or (
-                        k["margins_version"] == ZE02_MARGINS_VERSION
-                        and _pt.identity_strictly_older(
-                            {
-                                "f/" + n: i
-                                for n, i in (k.get("files") or {}).items()
-                            },
-                            my_files,
-                        )
-                    )
-                ),
-            )
-        _MARGINS_MEMO[memo_k] = target
-    return read_parquet(spark, os.path.join(_MARGINS_MEMO[memo_k], "margins.parquet"))
+        ),
+    )
+    return read_parquet(spark, os.path.join(target, "margins.parquet"))
 
 
 # ---------------------------------------------------------------------------

@@ -409,11 +409,6 @@ def zf01_flags(
 #: over the compact cached partials, never the unchanged text.
 ZF01_FLAGS_VERSION = 3
 
-#: In-process memo: key -> artifact dir (bench/sweep runs hit this
-#: after the first read; keyed identically to the on-disk artifact so
-#: a fixture regen mid-process cannot serve stale flags).
-_FLAGS_MEMO: dict[str, str] = {}
-
 
 def _flags_key(sf_dir: str) -> dict:
     """Staleness key: PER-FILE identity (mtime_ns + size of every part
@@ -457,19 +452,6 @@ def _flags_key(sf_dir: str) -> dict:
                   "stopwords": list(_zg.ZG06_STOPWORDS)},
         "flags_version": ZF01_FLAGS_VERSION,
     }
-
-
-def _flags_artifact_dir(key: dict) -> str:
-    import hashlib
-    import json
-    import os
-
-    from spotify_tags_etl_spark.functions.artifactio import warehouse_root
-
-    digest = hashlib.md5(
-        json.dumps(key, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    return os.path.join(warehouse_root(), "zf01_flags", digest)
 
 
 def zf01_flags_from_partials(
@@ -679,41 +661,25 @@ def zf01_flags_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling). zf01 itself keeps exercising the live text-path funnel —
     the publisher's own correctness gate — and the live/partials
     equality is pinned."""
-    import json
     import os
 
     from spotify_tags_etl_spark.functions import artifactio
     from spotify_tags_etl_spark.functions import partials as _pt
 
     key = _flags_key(sf_dir)
-    memo_k = json.dumps(key, sort_keys=True)
-    # memo hit must re-verify the dir still exists: a same-process
-    # republish for a reverted input identity may have GC'd it (ADVICE)
-    if memo_k not in _FLAGS_MEMO or not os.path.isdir(_FLAGS_MEMO[memo_k]):
-        target = _flags_artifact_dir(key)
-        fresh = artifactio.read_meta_key(target) == key
-        if not fresh:
-            # a mismatched/corrupt dir AT the target path would make
-            # every rename fail (the silently-stops-caching bug)
-            artifactio.remove_unservable_target(target, key)
-            doc_dirs, _ = _pt.ensure_partials(
-                spark, key["inputs"]["documents"]["path"], "doc"
-            )
-            emb_dirs, _ = _pt.ensure_partials(
-                spark, key["inputs"]["embeddings"]["path"], "emb"
-            )
-            flags = zf01_flags_from_partials(spark, doc_dirs, emb_dirs)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            tmp = f"{target}.tmp.{os.getpid()}"
-            flags.write.mode("overwrite").parquet(
-                os.path.join(tmp, "flags.parquet")
-            )
-            with open(os.path.join(tmp, "meta.json"), "w") as fh:
-                json.dump({"key": key}, fh, indent=1)
-            artifactio.publish_atomic(tmp, target, key)
-            artifactio.gc_superseded(target, _flags_supersedes(key))
-        _FLAGS_MEMO[memo_k] = target
-    return read_parquet(spark, os.path.join(_FLAGS_MEMO[memo_k], "flags.parquet"))
+
+    def write(tmp: str) -> None:
+        doc_dirs, _ = _pt.ensure_partials(
+            spark, key["inputs"]["documents"]["path"], "doc"
+        )
+        emb_dirs, _ = _pt.ensure_partials(
+            spark, key["inputs"]["embeddings"]["path"], "emb"
+        )
+        flags = zf01_flags_from_partials(spark, doc_dirs, emb_dirs)
+        flags.write.mode("overwrite").parquet(os.path.join(tmp, "flags.parquet"))
+
+    target, _ = artifactio.ensure("zf01_flags", key, write, _flags_supersedes(key))
+    return read_parquet(spark, os.path.join(target, "flags.parquet"))
 
 
 def _flags_supersedes(key: dict):

@@ -246,18 +246,16 @@ def release_record(spark: SparkSession, sf_dir: str) -> dict:
     equal)."""
     import os
 
+    from spotify_tags_etl_spark.functions.artifactio import artifact_dir
     from spotify_tags_etl_spark.operators import zeops, zfops
 
     row = zi01(spark, sf_dir).collect()[0].asDict()
-    fkey = zfops._flags_key(sf_dir)
-    mkey = zeops._margins_key(sf_dir)
-    ikey = zeops._fit_key(sf_dir)
     return {
         "manifest": row,
         "artifacts": {
-            "flags": os.path.basename(zfops._flags_artifact_dir(fkey)),
-            "fit": os.path.basename(zeops._artifact_dir(ikey)),
-            "margins": os.path.basename(zeops._margins_artifact_dir(mkey)),
+            "flags": os.path.basename(artifact_dir("zf01_flags", zfops._flags_key(sf_dir))),
+            "fit": os.path.basename(artifact_dir("ze01_fit", zeops._fit_key(sf_dir))),
+            "margins": os.path.basename(artifact_dir("ze02_margins", zeops._margins_key(sf_dir))),
         },
     }
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+from spotify_tags_etl_spark.functions import artifactio
 from tests.conftest import assert_loop_pins, build_record
 
 
@@ -466,7 +467,7 @@ def test_zf01_flags_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
     # v3: the miss path assembles from partition-granular partials
     monkeypatch.setattr(zfops, "zf01_flags_from_partials", counting)
 
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
@@ -474,11 +475,11 @@ def test_zf01_flags_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
     assert len(calls) == 1
     assert os.path.exists(
         os.path.join(
-            zfops._flags_artifact_dir(zfops._flags_key(root)), "meta.json"
+            artifactio.artifact_dir("zf01_flags", zfops._flags_key(root)), "meta.json"
         )
     )
 
-    zfops._FLAGS_MEMO.clear()  # force the on-disk (not memo) read path
+    artifactio._MEMO.clear()  # force the on-disk (not memo) read path
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
@@ -487,7 +488,7 @@ def test_zf01_flags_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
     p = os.path.join(root, "embeddings.parquet")
     st = os.stat(p)
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )

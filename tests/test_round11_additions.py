@@ -9,129 +9,18 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pytest
 
+from spotify_tags_etl_spark.functions import artifactio
 from spotify_tags_etl_spark.plans.registry import get
 from tests.conftest import assert_loop_pins, build_record
-
-
-# ---------------------------------------------------------------------------
-# artifactio — publish verification + GC primitives (r10 verdict #5/#6)
-# ---------------------------------------------------------------------------
-
-
-def _mk_artifact(path: str, key) -> None:
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "meta.json"), "w") as fh:
-        json.dump({"key": key}, fh)
-    with open(os.path.join(path, "payload.bin"), "w") as fh:
-        fh.write(str(key))
-
-
-def test_publish_atomic_happy_path(tmp_path):
-    from spotify_tags_etl_spark.functions import artifactio
-
-    tmp = str(tmp_path / "digest.tmp.123")
-    target = str(tmp_path / "digest")
-    _mk_artifact(tmp, {"v": 1})
-    artifactio.publish_atomic(tmp, target, {"v": 1})
-    assert artifactio.read_meta_key(target) == {"v": 1}
-    assert not os.path.exists(tmp)
-
-
-def test_publish_atomic_lost_race_verifies_winner(tmp_path):
-    """A failing rename is trusted as 'lost the race' ONLY when the
-    surviving target's embedded key matches — the r10 verdict's
-    silently-served-wrong-artifact gap."""
-    from spotify_tags_etl_spark.functions import artifactio
-
-    tmp = str(tmp_path / "digest.tmp.123")
-    target = str(tmp_path / "digest")
-    _mk_artifact(target, {"v": 1})  # genuine winner, same key
-    _mk_artifact(tmp, {"v": 1})
-    artifactio.publish_atomic(tmp, target, {"v": 1})
-    assert artifactio.read_meta_key(target) == {"v": 1}
-    assert not os.path.exists(tmp)  # loser's copy dropped
-
-
-def test_publish_atomic_replaces_tampered_target(tmp_path):
-    """A target whose meta MISMATCHES the key is interference, not a
-    winner: it is removed and the publish retried, so the fresh copy
-    lands instead of the tampered one being silently served."""
-    from spotify_tags_etl_spark.functions import artifactio
-
-    tmp = str(tmp_path / "digest.tmp.123")
-    target = str(tmp_path / "digest")
-    _mk_artifact(target, {"v": "TAMPERED"})
-    _mk_artifact(tmp, {"v": 2})
-    artifactio.publish_atomic(tmp, target, {"v": 2})
-    assert artifactio.read_meta_key(target) == {"v": 2}
-
-
-def test_publish_atomic_raises_when_winner_unverifiable(tmp_path, monkeypatch):
-    """If the rename keeps failing AND the survivor never matches the
-    key, publish raises loudly instead of serving an unverified dir."""
-    from spotify_tags_etl_spark.functions import artifactio
-
-    tmp = str(tmp_path / "digest.tmp.123")
-    target = str(tmp_path / "digest")
-    _mk_artifact(tmp, {"v": 3})
-
-    real_rename = os.rename
-
-    def failing(src, dst):
-        if dst == target:
-            raise OSError("simulated ENOTEMPTY")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing)
-    with pytest.raises(RuntimeError, match="does not match"):
-        artifactio.publish_atomic(tmp, target, {"v": 3})
-
-
-def test_gc_superseded_sweeps_stale_digests(tmp_path):
-    """GC removes same-input siblings and unreadable-meta garbage,
-    keeps other-input siblings and in-flight .tmp. dirs."""
-    from spotify_tags_etl_spark.functions import artifactio
-
-    target = str(tmp_path / "fresh")
-    stale = str(tmp_path / "stale")
-    other = str(tmp_path / "other")
-    garbage = str(tmp_path / "garbage")
-    inflight = str(tmp_path / "fresh.tmp.999")
-    _mk_artifact(target, {"path": "/a", "mtime": 2})
-    _mk_artifact(stale, {"path": "/a", "mtime": 1})
-    _mk_artifact(other, {"path": "/b", "mtime": 1})
-    os.makedirs(garbage)  # no meta.json at all
-    _mk_artifact(inflight, {"path": "/a", "mtime": 3})
-
-    removed = artifactio.gc_superseded(
-        target, lambda k: isinstance(k, dict) and k.get("path") == "/a"
-    )
-    assert sorted(removed) == sorted([stale, garbage])
-    assert os.path.exists(target)
-    assert os.path.exists(other)
-    assert os.path.exists(inflight)
+from tests.test_artifacts import flags_sandbox  # noqa: F401  (fixture)
 
 
 # ---------------------------------------------------------------------------
 # flags artifact v2 — corrupt-target recovery, GC wiring, key coverage
 # ---------------------------------------------------------------------------
-
-
-@pytest.fixture()
-def flags_sandbox(spark, sf_dir, tmp_path):
-    """A private sf_dir copy so artifact tests can mutate inputs/targets
-    without touching the shared warehouse digests."""
-    root = str(tmp_path)
-    for t in ("documents", "embeddings"):
-        shutil.copy(
-            os.path.join(sf_dir, f"{t}.parquet"),
-            os.path.join(root, f"{t}.parquet"),
-        )
-    return root
 
 
 def test_flags_artifact_corrupt_target_recaches(spark, flags_sandbox, monkeypatch):
@@ -151,17 +40,17 @@ def test_flags_artifact_corrupt_target_recaches(spark, flags_sandbox, monkeypatc
 
     # v3: the miss path assembles from partition-granular partials
     monkeypatch.setattr(zfops, "zf01_flags_from_partials", counting)
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     first = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
     assert len(calls) == 1
-    target = zfops._flags_artifact_dir(zfops._flags_key(root))
+    target = artifactio.artifact_dir("zf01_flags", zfops._flags_key(root))
 
     # corrupt the published meta
     with open(os.path.join(target, "meta.json"), "w") as fh:
         fh.write("{not json")
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
@@ -169,7 +58,7 @@ def test_flags_artifact_corrupt_target_recaches(spark, flags_sandbox, monkeypatc
     with open(os.path.join(target, "meta.json")) as fh:
         assert json.load(fh)["key"] == zfops._flags_key(root)
 
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
@@ -183,17 +72,17 @@ def test_flags_artifact_gc_on_republish(spark, flags_sandbox):
     from spotify_tags_etl_spark.operators import zfops
 
     root = flags_sandbox
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     zfops.zf01_flags_artifact(spark, root).count()
-    old_target = zfops._flags_artifact_dir(zfops._flags_key(root))
+    old_target = artifactio.artifact_dir("zf01_flags", zfops._flags_key(root))
     assert os.path.exists(old_target)
 
     p = os.path.join(root, "documents.parquet")
     st = os.stat(p)
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     zfops.zf01_flags_artifact(spark, root).count()
-    new_target = zfops._flags_artifact_dir(zfops._flags_key(root))
+    new_target = artifactio.artifact_dir("zf01_flags", zfops._flags_key(root))
     assert new_target != old_target
     assert os.path.exists(new_target)
     assert not os.path.exists(old_target)  # superseded digest swept
@@ -236,7 +125,7 @@ def test_fit_artifact_gc_on_republish(spark, flags_sandbox):
     root = flags_sandbox
     zeops._FIT_MEMO.clear()
     zeops.ze01_fit_artifact(spark, root)
-    old_target = zeops._artifact_dir(zeops._fit_key(root))
+    old_target = artifactio.artifact_dir("ze01_fit", zeops._fit_key(root))
     assert os.path.exists(old_target)
 
     p = os.path.join(root, "documents.parquet")
@@ -244,7 +133,7 @@ def test_fit_artifact_gc_on_republish(spark, flags_sandbox):
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
     zeops._FIT_MEMO.clear()
     zeops.ze01_fit_artifact(spark, root)
-    new_target = zeops._artifact_dir(zeops._fit_key(root))
+    new_target = artifactio.artifact_dir("ze01_fit", zeops._fit_key(root))
     assert new_target != old_target
     assert os.path.exists(new_target)
     assert not os.path.exists(old_target)
@@ -684,14 +573,14 @@ def test_margins_artifact_matches_live_scoring(spark, flags_sandbox, monkeypatch
 
     # v2: the miss path scores per input file under the frozen weights
     monkeypatch.setattr(zeops, "ze02_score_parts", counting)
-    zeops._MARGINS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         (r.doc_id, r.y, int(r.m))
         for r in zeops.ze02_margins_artifact(spark, root).collect()
     )
     assert got == live and len(calls) == 1  # miss: scored + published
 
-    zeops._MARGINS_MEMO.clear()  # force the on-disk read path
+    artifactio._MEMO.clear()  # force the on-disk read path
     got = sorted(
         (r.doc_id, r.y, int(r.m))
         for r in zeops.ze02_margins_artifact(spark, root).collect()
@@ -706,7 +595,7 @@ def test_margins_artifact_matches_live_scoring(spark, flags_sandbox, monkeypatch
     st = os.stat(p)
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
     zeops._FIT_MEMO.clear()
-    zeops._MARGINS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         (r.doc_id, r.y, int(r.m))
         for r in zeops.ze02_margins_artifact(spark, root).collect()

@@ -11,59 +11,8 @@ import json
 import os
 import shutil
 
-import pyarrow.parquet as pq
-import pytest
-
-
-# ---------------------------------------------------------------------------
-# synthetic partitioned corpus — documents as a DIRECTORY of part files
-# ---------------------------------------------------------------------------
-
-
-def _split_parquet(src: str, dest_dir: str, n_parts: int) -> list[str]:
-    """Split one fixture parquet into ``n_parts`` part files inside a
-    directory-shaped table (the partitioned-corpus layout the
-    incremental artifact layer exists for)."""
-    tbl = pq.read_table(src)
-    os.makedirs(dest_dir, exist_ok=True)
-    step = (tbl.num_rows + n_parts - 1) // n_parts
-    paths = []
-    for i in range(n_parts):
-        part = tbl.slice(i * step, step)
-        p = os.path.join(dest_dir, f"part-{i:03d}.parquet")
-        pq.write_table(part, p)
-        paths.append(p)
-    return paths
-
-
-@pytest.fixture()
-def parted_corpus(sf_dir, tmp_path):
-    """A private sf_dir whose documents table is a 3-part directory and
-    embeddings a 2-part directory — plus the part paths."""
-    root = str(tmp_path / "sf")
-    os.makedirs(root)
-    doc_parts = _split_parquet(
-        os.path.join(sf_dir, "documents.parquet"),
-        os.path.join(root, "documents.parquet"),
-        3,
-    )
-    emb_parts = _split_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"),
-        os.path.join(root, "embeddings.parquet"),
-        2,
-    )
-    return root, doc_parts, emb_parts
-
-
-def _mutate_one_doc(part_path: str) -> None:
-    """Rewrite one part file with one document's text changed — a real
-    content change (new identity AND new derived rows), not just a
-    metadata touch."""
-    tbl = pq.read_table(part_path).to_pydict()
-    tbl["text"][0] = tbl["text"][0] + " zzzmutation zzzmutation zzzmutation"
-    import pyarrow as pa
-
-    pq.write_table(pa.table(tbl), part_path)
+from spotify_tags_etl_spark.functions import artifactio
+from tests.test_artifacts import _mutate_one_doc, _split_parquet, parted_corpus  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -98,10 +47,10 @@ def test_gc_never_removes_newer_sibling(spark, parted_corpus):
     from spotify_tags_etl_spark.operators import zfops
 
     root, doc_parts, _ = parted_corpus
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     zfops.zf01_flags_artifact(spark, root).count()
     key = zfops._flags_key(root)
-    target = zfops._flags_artifact_dir(key)
+    target = artifactio.artifact_dir("zf01_flags", key)
 
     newer_key = json.loads(json.dumps(key))
     fname = os.path.basename(doc_parts[0])
@@ -113,7 +62,7 @@ def test_gc_never_removes_newer_sibling(spark, parted_corpus):
 
     # force a republish of the SAME (stale-view) key
     shutil.rmtree(target)
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     zfops.zf01_flags_artifact(spark, root).count()
     assert os.path.exists(sibling), "newer sibling must survive stale-view GC"
     shutil.rmtree(sibling)
@@ -125,29 +74,9 @@ def test_gc_never_removes_newer_sibling(spark, parted_corpus):
     with open(os.path.join(sibling, "meta.json"), "w") as fh:
         json.dump({"key": older_key}, fh)
     shutil.rmtree(target)
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     zfops.zf01_flags_artifact(spark, root).count()
     assert not os.path.exists(sibling), "older sibling must be GC'd"
-
-
-def test_memo_hit_verifies_directory_exists(spark, parted_corpus):
-    """r11 ADVICE #2: a memo hit whose directory was GC'd (input
-    identity reverted mid-process) must fall through to recompute, not
-    fail with FileNotFound."""
-    from spotify_tags_etl_spark.operators import zeops, zfops
-
-    root, _, _ = parted_corpus
-    zfops._FLAGS_MEMO.clear()
-    first = zfops.zf01_flags_artifact(spark, root).count()
-    target = zfops._flags_artifact_dir(zfops._flags_key(root))
-    shutil.rmtree(target)  # memo now points at a deleted dir
-    assert zfops.zf01_flags_artifact(spark, root).count() == first
-
-    zeops._MARGINS_MEMO.clear()
-    first_m = zeops.ze02_margins_artifact(spark, root).count()
-    mtarget = zeops._margins_artifact_dir(zeops._margins_key(root))
-    shutil.rmtree(mtarget)
-    assert zeops.ze02_margins_artifact(spark, root).count() == first_m
 
 
 # ---------------------------------------------------------------------------
@@ -163,7 +92,7 @@ def test_flags_artifact_multifile_equals_live(spark, parted_corpus):
     from spotify_tags_etl_spark.operators import zfops
 
     root, _, _ = parted_corpus
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
@@ -188,7 +117,7 @@ def test_one_changed_partition_reextracts_only_it(
     from spotify_tags_etl_spark.operators import zfops
 
     root, doc_parts, _ = parted_corpus
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     zfops.zf01_flags_artifact(spark, root).count()  # publish everything
 
     extracted: list[str] = []
@@ -203,7 +132,7 @@ def test_one_changed_partition_reextracts_only_it(
 
     changed = doc_parts[1]
     _mutate_one_doc(changed)
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         tuple(r) for r in zfops.zf01_flags_artifact(spark, root).collect()
     )
@@ -386,12 +315,12 @@ def test_release_record_carries_artifact_identities(spark, sf_dir):
     assert rec["manifest"]["conservation_ok"] == 1
     assert set(rec["artifacts"]) == {"flags", "fit", "margins"}
     assert rec["artifacts"]["flags"] == os.path.basename(
-        zfops._flags_artifact_dir(zfops._flags_key(sf_dir))
+        artifactio.artifact_dir("zf01_flags", zfops._flags_key(sf_dir))
     )
-    assert os.path.isdir(zfops._flags_artifact_dir(zfops._flags_key(sf_dir)))
-    assert os.path.isdir(zeops._artifact_dir(zeops._fit_key(sf_dir)))
+    assert os.path.isdir(artifactio.artifact_dir("zf01_flags", zfops._flags_key(sf_dir)))
+    assert os.path.isdir(artifactio.artifact_dir("ze01_fit", zeops._fit_key(sf_dir)))
     assert os.path.isdir(
-        zeops._margins_artifact_dir(zeops._margins_key(sf_dir))
+        artifactio.artifact_dir("ze02_margins", zeops._margins_key(sf_dir))
     )
     # reproducible: a second record is byte-equal
     assert release_record(spark, sf_dir) == rec
@@ -744,7 +673,7 @@ def test_zf01p_merge_path_pins(spark, sf_dir, tmp_path):
             os.path.join(sf_dir, f"{t}.parquet"),
             os.path.join(root, f"{t}.parquet"),
         )
-    zfops._FLAGS_MEMO.clear()
+    artifactio._MEMO.clear()
     pm.LOOP_PLAN_LOG.clear()
     pm.SCAN_LOG.clear()
     zfops.zf01_flags_artifact(spark, root).count()  # forced republish
@@ -772,7 +701,7 @@ def test_margins_artifact_end_to_end_carry_forward(spark, parted_corpus):
 
     root, doc_parts, _ = parted_corpus
     zeops._FIT_MEMO.clear()
-    zeops._MARGINS_MEMO.clear()
+    artifactio._MEMO.clear()
     first = sorted(
         (r.doc_id, r.y, int(r.m))
         for r in zeops.ze02_margins_artifact(spark, root).collect()
@@ -783,13 +712,13 @@ def test_margins_artifact_end_to_end_carry_forward(spark, parted_corpus):
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
     part_dirs_before = set()
     root_parts = os.path.join(
-        os.path.dirname(os.path.dirname(zeops._margins_artifact_dir(
-            zeops._margins_key(root)))), "ze02_margin_parts")
+        os.path.dirname(os.path.dirname(artifactio.artifact_dir(
+            "ze02_margins", zeops._margins_key(root)))), "ze02_margin_parts")
     if os.path.isdir(root_parts):
         part_dirs_before = set(os.listdir(root_parts))
 
     zeops._FIT_MEMO.clear()
-    zeops._MARGINS_MEMO.clear()
+    artifactio._MEMO.clear()
     got = sorted(
         (r.doc_id, r.y, int(r.m))
         for r in zeops.ze02_margins_artifact(spark, root).collect()
@@ -814,10 +743,6 @@ def test_warehouse_root_is_process_scoped(monkeypatch):
     within the process (consumers share the publisher's digests), and
     overridable via SPARK_GRAFT_WAREHOUSE for deployments that want a
     durable machine-local cache."""
-    from spotify_tags_etl_spark.functions import artifactio
-    from spotify_tags_etl_spark.functions.partials import _partials_root
-    from spotify_tags_etl_spark.operators import zeops, zfops
-
     monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE", raising=False)
     root = artifactio.warehouse_root()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -826,11 +751,11 @@ def test_warehouse_root_is_process_scoped(monkeypatch):
     assert artifactio.warehouse_root() == root  # stable within process
     # every artifact family resolves beneath the shared root
     key = {"probe": 1}
-    assert zfops._flags_artifact_dir(key).startswith(root + os.sep)
-    assert zeops._artifact_dir(key).startswith(root + os.sep)
-    assert zeops._margins_artifact_dir(key).startswith(root + os.sep)
-    assert zeops._score_part_dir(key).startswith(root + os.sep)
-    assert _partials_root("docs").startswith(root + os.sep)
+    assert artifactio.artifact_dir("zf01_flags", key).startswith(root + os.sep)
+    assert artifactio.artifact_dir("ze01_fit", key).startswith(root + os.sep)
+    assert artifactio.artifact_dir("ze02_margins", key).startswith(root + os.sep)
+    assert artifactio.artifact_dir("ze02_margin_parts", key).startswith(root + os.sep)
+    assert artifactio.artifact_dir("doc_partials", key).startswith(root + os.sep)
     # env override wins (tests pinning cross-process behavior use this)
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", "/tmp/wh_override_probe")
     assert artifactio.warehouse_root() == "/tmp/wh_override_probe"

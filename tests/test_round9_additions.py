@@ -9,6 +9,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from spotify_tags_etl_spark.functions import artifactio
 from spotify_tags_etl_spark.operators.scalerank import grouped_rank
 from spotify_tags_etl_spark.plans.planmetrics import _scan_schemas
 from spotify_tags_etl_spark.plans.registry import get
@@ -606,7 +607,7 @@ def test_ze01_fit_artifact_staleness(spark, sf_dir, tmp_path, monkeypatch):
     assert zeops.ze01_fit_artifact(spark, root) == expect  # miss: fit+publish
     assert len(calls) == 1
     assert os.path.exists(
-        os.path.join(zeops._artifact_dir(zeops._fit_key(root)), "weights.parquet")
+        os.path.join(artifactio.artifact_dir("ze01_fit", zeops._fit_key(root)), "weights.parquet")
     )
 
     zeops._FIT_MEMO.clear()  # force the on-disk (not memo) read path

@@ -503,7 +503,7 @@ def test_yw02_publishes_only_the_clean_candidate(built):
     rejected with the exact injected violation counts."""
     import glob
     import os
-
+    import tempfile
 
     rows = {
         (r.candidate, r.chk): (r.n_bad, r.published)
@@ -512,11 +512,30 @@ def test_yw02_publishes_only_the_clean_candidate(built):
     assert rows[("clean", "pk_unique")] == (0, True)
     assert rows[("dirty", "fk_not_null")] == (3, False)
     assert rows[("dirty", "pk_unique")] == (1, False)
-    markers = glob.glob("/tmp/spark_graft_yw02/*/published/CURRENT")
+    markers = glob.glob(
+        os.path.join(tempfile.gettempdir(), "spark_graft_yw02", "*", "published", "CURRENT")
+    )
     assert markers, "publish pointer missing"
     pointed = open(sorted(markers, key=os.path.getmtime)[-1]).read()
     assert pointed.endswith("/staging/clean")
     assert os.path.isdir(pointed)
+
+
+def test_pid_scratch_is_rooted_in_tempdir(spark, sf_dir, tmp_path, monkeypatch):
+    """xv02's CSV fixture and yw02's staging land under
+    ``tempfile.gettempdir()``, so a run that sets ``TMPDIR`` keeps its
+    scratch inside its own root."""
+    import glob
+    import os
+    import tempfile
+
+    from spotify_tags_etl_spark.plans.registry import get
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("xv02_csv_quarantine", "yw02_write_audit_publish"):
+        get(name).builder(spark, sf_dir).collect()
+    assert glob.glob(str(tmp_path / "spark_graft_csv" / "*" / "*"))
+    assert glob.glob(str(tmp_path / "spark_graft_yw02" / "*" / "published" / "CURRENT"))
 
 
 def test_two_sample_stats_emit_zero_rows_on_empty_or_one_sided_input(spark, tmp_path):
